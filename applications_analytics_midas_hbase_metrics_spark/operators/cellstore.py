@@ -12,9 +12,17 @@ Reference model (citations into /root/reference):
     (Utils.scala:346-365, 377-402)
 
 Spark-first design decisions (deviations documented):
-  * Storage is Parquet partitioned by the salt bucket — partition pruning
-    plays the role HBase region pruning played; Parquet row-group min/max
-    stats + predicate pushdown play the PrefixFilter role.
+  * Storage is Parquet partitioned by the salt bucket, every file sorted
+    by (row_key, col_name) and cut into pages of at most ``PAGE_ROWS``
+    rows (``_write_layout``, the one writer all store writes go through).
+    The pushed ``startswith`` filter plays the PrefixFilter role through
+    the Parquet page column index: a row_key-sorted file keeps one lot in
+    a few adjacent pages, and the reader decodes only those.  Row-group
+    min/max stats do not prune: a salt file of a few MB is one row group
+    spanning every lot.  Salt partitioning spreads hot sequential keys
+    over writers, as HBase's salted region split did; prefix scans and
+    gets read every salt partition, and only ``merge_cells`` prunes by
+    salt.
   * The value blob is a first-class ``array<string>`` column, not the
     reference's ``"count\\x00v1\\nv2…"`` string: Spark already carries the
     count as ``size(values)`` and an array survives predicate pushdown,
@@ -26,10 +34,8 @@ Spark-first design decisions (deviations documented):
     ``array_sort``-ed after collection — the reference sorts driver-side
     before concatenation for the same reason (Utils.scala:53).  This makes
     results deterministic and oracle-comparable.
-  * bulkGet(batch=1000) becomes an equi-join on (row_key, col_name):
-    broadcast-hash when the key side is small, sort-merge otherwise —
-    Catalyst + AQE pick; at 100 TB a shuffle-hash/sort-merge join with
-    both sides bucketed by row_key avoids re-shuffling the big cell side.
+  * bulkGet(batch=1000) becomes an equi-join on (row_key, col_name)
+    with the key batch broadcast, so the cell side is never shuffled.
 
 Scale notes (100 TB): 24 salt partitions is the *reference's* constant;
 ``write_cells`` also accepts ``extra_partition_cols`` so a real deployment
@@ -58,6 +64,14 @@ from ..functions.keys import (
 COLUMN_FAMILY = "0"
 
 NEWLINE = "\n"
+
+#: Row cap of one Parquet page in the store.  The page column index prunes
+#: at page granularity, so a lot-prefix scan decodes the one or two pages
+#: per salt file where the lot's rows sit.  On a 1M-cell store (24 files
+#: of 42k cells) a lot holding 17k cells read 40,000 Parquet rows at 1,000
+#: rows a page, 65,825 at 2,000 and 27,500 at 500, against 999,150 from
+#: unsorted files.  Halving the page again saves little next to that.
+PAGE_ROWS = 1000
 
 
 # ---------------------------------------------------------------------------
@@ -187,6 +201,25 @@ def decode_blob(blob: Column | str) -> Column:
 # Storage boundary (replaces pushtoDB/BufferedMutator, Utils.scala:49-106)
 # ---------------------------------------------------------------------------
 
+def _write_layout(
+    cells: DataFrame, path: str, mode: str, parts: Sequence[str]
+) -> None:
+    """Write an already-distributed cells frame in the store's layout:
+    ``partitionBy(*parts)``, each file sorted by (row_key, col_name), pages
+    of at most ``PAGE_ROWS`` rows.  Sorted pages give the page column index
+    tight row_key bounds, so a pushed ``startswith`` skips every page
+    outside the prefix.  The sort must LEAD with the partition columns:
+    the file writer requires that order and re-sorts (destroying the
+    row_key order) when the incoming order does not satisfy it."""
+    (
+        cells.sortWithinPartitions(*parts, "row_key", "col_name")
+        .write.mode(mode)
+        .option("parquet.page.row.count.limit", PAGE_ROWS)
+        .partitionBy(*parts)
+        .parquet(path)
+    )
+
+
 def write_cells(
     cells: DataFrame,
     path: str,
@@ -194,11 +227,12 @@ def write_cells(
     extra_partition_cols: Sequence[str] = (),
     chunks_per_salt: int = 1,
 ) -> None:
-    """Persist the cell store as Parquet partitioned by salt.
+    """Persist the cell store as Parquet partitioned by salt, in the
+    sorted, page-indexed layout of :func:`_write_layout`.
 
-    The salt partitioning is the scale story: like HBase's salted region
-    split (Utils.scala:62-64), it spreads hot sequential keys; readers
-    that know the salt of a key prune 23/24 of the data before I/O.
+    The salt partitioning spreads hot sequential keys over writers, like
+    HBase's salted region split (Utils.scala:62-64).  What prunes a
+    prefix scan is the page column index of the row_key-sorted files.
 
     The data is shuffled to MATCH the directory layout before writing:
     without it every upstream task holds rows for all 24 salt values and
@@ -219,7 +253,7 @@ def write_cells(
         )
     else:
         cells = cells.repartition(*parts)
-    cells.write.mode(mode).partitionBy(*parts).parquet(path)
+    _write_layout(cells, path, mode, parts)
 
 
 def write_cells_bucketed(
@@ -264,24 +298,17 @@ def read_cells(
     return df
 
 
-def lookup_cells(
-    cells: DataFrame,
-    keys: DataFrame,
-    broadcast_keys: bool | None = None,
-) -> DataFrame:
+def lookup_cells(cells: DataFrame, keys: DataFrame) -> DataFrame:
     """Batched point-get as an equi-join (replaces bulkGet,
     Utils.scala:288-369 / 411-470).
 
-    ``keys`` must carry ``row_key`` and optionally ``col_name``.  With a
-    small key side we broadcast it (no shuffle of the 100 TB cell store —
-    the moral equivalent of batching 1000 Gets per RPC); otherwise Catalyst
-    picks sort-merge and AQE may convert back to broadcast at runtime.
+    ``keys`` must carry ``row_key`` and optionally ``col_name``.  The key
+    side is always broadcast, so the cell store is never shuffled — the
+    moral equivalent of batching 1000 Gets per RPC.  Keys therefore must
+    fit a broadcast; split a larger key set into batches, as bulkGet did.
     """
     on = ["row_key"] + (["col_name"] if "col_name" in keys.columns else [])
-    if broadcast_keys is None:
-        broadcast_keys = True
-    right = F.broadcast(keys) if broadcast_keys else keys
-    return cells.join(right, on=on, how="inner")
+    return cells.join(F.broadcast(keys), on=on, how="inner")
 
 
 # ---------------------------------------------------------------------------
@@ -433,8 +460,7 @@ def merge_cells(
     merged = survivors.select(
         "row_key", "col_name", "values", *parts
     ).unionByName(upserts)
-    # keep the store's compaction layout: one sorted file per
-    # (partition, chunk), row_key-ordered for row-group pruning
+    # one file per (partition, chunk), written in the store's layout
     if chunks_per_salt > 1:
         merged = merged.repartition(
             *(F.col(c) for c in parts),
@@ -442,11 +468,10 @@ def merge_cells(
         )
     else:
         merged = merged.repartition(*parts)
-    merged = merged.sortWithinPartitions(*parts, "row_key", "col_name")
 
     tmp = path + ".merge_tmp"
     shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").partitionBy(*parts).parquet(tmp)
+    _write_layout(merged, tmp, "overwrite", parts)
     # explicit schema: a batch that deletes a whole partition leaves tmp
     # with zero data files, and inference would fail on the empty dir
     rows_written = spark.read.schema(merged.schema).parquet(tmp).count()

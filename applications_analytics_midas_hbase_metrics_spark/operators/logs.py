@@ -65,7 +65,8 @@ def timestamped_log_name(df: DataFrame, prefix: str = "testlog", ts_col: str = "
 def job_status_scan(cells: DataFrame, job_seq_key: str) -> DataFrame:
     """The MDS_METRIC prefix scan (MetricDetails.scala:99-117): row keys
     ``IF{job_seq_key}…``, projected status qualifiers.  On the Parquet cell
-    store the prefix predicate is pushed to row-group stats."""
+    store the prefix predicate is pushed to the page column index of the
+    row_key-sorted files."""
     qualifiers = [
         "LATO_START_WW",
         "LOT",

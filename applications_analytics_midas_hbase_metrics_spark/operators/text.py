@@ -772,16 +772,16 @@ def ngram_lm_score(
     # regime the pinned frame's two consumers each re-shuffle by gram
     # keys — the `big` aggregate exchanges (a, b) partials and the SMJ
     # score probe exchanges the FULL frame.  Hash-partitioning by
-    # (a, b) BEFORE the pin (LogicalRDD preserves the partitioning
-    # through checkpoint and persist alike) satisfies the aggregate's
-    # clustering, keeps `big` co-partitioned with its probe, and both
-    # joins run exchange-free off the one shared shuffle.  Below the
-    # threshold the joins ride BroadcastHashJoin and the extra
-    # exchange would be pure cost, so the trigger is the SAME
-    # plan-size policy that flips the pin to DISK_ONLY: a disk-pinned
-    # gram frame is also gram-partitioned.  Keyed on (a, b), not (a):
-    # a Zipfian head unigram would funnel every "the …" bigram into
-    # one partition; the pair key spreads the head.
+    # (a, b) BEFORE the pin (a checkpoint drops `outputPartitioning`,
+    # which is why this pin stays a lineage-kept persist) satisfies the
+    # aggregate's clustering, keeps `big` co-partitioned with its
+    # probe, and both joins run exchange-free off the one shared
+    # shuffle.  Below the threshold the joins ride BroadcastHashJoin
+    # and the extra exchange would be pure cost, so the trigger is the
+    # SAME plan-size policy that flips the pin to DISK_ONLY: a
+    # disk-pinned gram frame is also gram-partitioned.  Keyed on (a, b),
+    # not (a): a Zipfian head unigram would funnel every "the …" bigram
+    # into one partition; the pair key spreads the head.
     if copartition is None:
         from .pinning import SMALL_FRAME_BYTES, plan_size_estimate
 

@@ -6,9 +6,9 @@ compacts store files).
   * chunk-level dedup (CCNet-style): drop duplicated token chunks across
     a corpus, keeping the lowest-id owner — the paragraph-dedup shape
     used by training-data pipelines.
-  * compact_cells: rewrite the salted store sorted by row_key within
-    partitions — Parquet row-group min/max become tight, so prefix scans
-    prune like HBase block-index seeks.
+  * compact_cells: rewrite the salted store as one file per salt in the
+    store's sorted, page-indexed layout — the page column index then
+    prunes prefix scans like HBase block-index seeks.
 """
 
 from __future__ import annotations
@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions.keys import SALT_BUCKETS
+from .cellstore import _write_layout
 from .dedup import tokens
 
 
@@ -94,19 +95,13 @@ def compact_cells(
     out_path: str,
     buckets: int = SALT_BUCKETS,
 ) -> None:
-    """Compaction: rewrite the cell store with one sorted file per salt
-    partition.  Sorting by row_key inside each partition gives Parquet
-    row groups tight min/max bounds, so a prefix scan prunes row groups
-    the way HBase prunes blocks; one file per bucket removes the
-    small-file tax of incremental loads."""
+    """Compaction: rewrite the cell store with one file per salt
+    partition, in the layout every store writer shares
+    (``cellstore._write_layout``): sorted by (row_key, col_name) in
+    pages whose column index lets a prefix scan skip the pages outside
+    the prefix, the way HBase skips blocks.  One file per bucket removes
+    the small-file tax of incremental loads."""
     cells = spark.read.parquet(in_path)
-    # sort must LEAD with the partition column: FileFormatWriter requires
-    # ordering by partitionBy columns and silently re-sorts (destroying
-    # the row_key order) if the incoming order doesn't satisfy it
-    (
-        cells.repartition(buckets, F.col("salt"))
-        .sortWithinPartitions("salt", "row_key", "col_name")
-        .write.mode("overwrite")
-        .partitionBy("salt")
-        .parquet(out_path)
+    _write_layout(
+        cells.repartition(buckets, F.col("salt")), out_path, "overwrite", ["salt"]
     )

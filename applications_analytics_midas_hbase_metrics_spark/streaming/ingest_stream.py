@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.cellstore import to_cells_write_aligned
+from ..operators.cellstore import _write_layout, to_cells_write_aligned
 
 
 def stream_to_cells(
@@ -36,20 +36,16 @@ def stream_to_cells(
 
     foreachBatch (not a plain parquet sink) because the cell build is an
     aggregation: each micro-batch is grouped and appended partitioned by
-    salt.  The write-aligned build (to_cells_write_aligned) distributes
-    by salt BEFORE aggregating, so the whole batch runs one exchange and
-    lands one file per salt per micro-batch with no layout reshuffle.
-    Exactly-once comes from the checkpoint + Parquet's atomic task
-    commits."""
+    salt, in the store's sorted, page-indexed layout.  The write-aligned
+    build (to_cells_write_aligned) distributes by salt BEFORE
+    aggregating, so the whole batch runs one exchange and lands one file
+    per salt per micro-batch with no layout reshuffle.  Exactly-once
+    comes from the checkpoint + Parquet's atomic task commits."""
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         cells = to_cells_write_aligned(batch, key_cols, F.col(col_name), value_cols)
-        (
-            cells.withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("append")
-            .partitionBy("salt")
-            .parquet(out_path)
-        )
+        cells = cells.withColumn("ingest_batch", F.lit(batch_id))
+        _write_layout(cells, out_path, "append", ["salt"])
 
     writer = stream.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint

@@ -33,6 +33,23 @@ def load(spark, sf_dir, name):
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def assert_store_sorted(path: str) -> int:
+    """Assert every data file of a cell store is sorted by
+    ``(row_key, col_name)`` — the layout all store writers share.
+    Returns the number of files checked."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    files = glob.glob(f"{path}/**/*.parquet", recursive=True)
+    assert files, path
+    for f in files:
+        t = pq.read_table(f, columns=["row_key", "col_name"])
+        keys = list(zip(t["row_key"].to_pylist(), t["col_name"].to_pylist()))
+        assert keys == sorted(keys), f
+    return len(files)
+
+
 def final_plan(df) -> str:
     """Materialize the DataFrame so AQE finishes re-planning, then return
     the final physical plan string."""

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from applications_analytics_midas_hbase_metrics_spark.operators import cellstore as CS
+from tests.conftest import SF_CORRECT, assert_store_sorted
 
 KEY_COLS = ["l_returnflag", "l_linestatus", "l_orderkey"]
 VAL_COLS = ["l_linenumber", "l_quantity", "l_extendedprice"]
@@ -82,6 +83,49 @@ def test_write_read_prefix_pushdown(cells, spark, tmp_path):
     # the filter must be pushed to the parquet scan
     plan = back._jdf.queryExecution().executedPlan().toString()
     assert "StartsWith" in plan and "PushedFilters" in plan
+
+
+def _scan_output_rows(df) -> int:
+    """Run ``df`` and return the rows its Parquet scans handed upward."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    leaves = plan.collectLeaves()
+    return sum(
+        leaf.metrics().apply("numOutputRows").value()
+        for leaf in (leaves.apply(i) for i in range(leaves.size()))
+        if leaf.nodeName().startswith("Scan parquet")
+    )
+
+
+def test_prefix_scan_reads_only_prefix_pages(spark, tmp_path):
+    """Files written by ``write_cells`` (overwrite, then append) are sorted
+    by (row_key, col_name), and a selective prefix scan returns exactly
+    the rows of an unpushed startswith filter while its Parquet scan hands
+    up under a quarter of the store: the page column index skips every
+    page outside the prefix.  Two salts, so each sf0.01 file spans about
+    fifteen pages; at 24 salts a file holds two and skipping has little
+    to show."""
+    li = spark.read.parquet(f"{SF_CORRECT}/lineitem.parquet")
+    cells = CS.to_cells(li, KEY_COLS, F.col("l_partkey"), VAL_COLS, buckets=2)
+    path = str(tmp_path / "store")
+    even = F.pmod(F.xxhash64("row_key"), F.lit(2)) == 0
+    CS.write_cells(cells.filter(even), path, mode="overwrite")
+    CS.write_cells(cells.filter(~even), path, mode="append")
+    assert assert_store_sorted(path) == 4
+
+    prefix = "A\x00F\x0012"
+    store = spark.read.parquet(path)
+    total = store.count()
+    got = CS.read_cells(spark, path, prefix=prefix)
+    unpushed = store.filter(F.col("row_key").substr(1, len(prefix)) == prefix)
+    assert "StartsWith" not in unpushed._jdf.queryExecution().executedPlan().toString()
+    n = unpushed.count()
+    assert 0 < n < total // 20
+    assert got.count() == n
+    assert got.exceptAll(unpushed).count() == 0
+    assert _scan_output_rows(got) < total / 4
 
 
 def test_lookup_cells_is_broadcast_join(cells, spark):
@@ -207,6 +251,9 @@ def test_merge_cells_semantics_and_partition_bound(cells, spark, tmp_path):
     assert again.exceptAll(expected).count() == 0
     assert expected.exceptAll(again).count() == 0
     assert stats2["touched_salts"]
+    # (d) merged partitions are written in the shared sorted layout
+    for salt_val in stats2["touched_salts"]:
+        assert_store_sorted(f"{path}/salt={salt_val}")
 
 
 def test_merge_cells_fences_cached_reads(cells, spark, tmp_path):

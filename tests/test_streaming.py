@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from applications_analytics_midas_hbase_metrics_spark.streaming import windows as W
+from tests.conftest import assert_store_sorted
 
 
 @pytest.fixture(scope="module")
@@ -85,6 +86,8 @@ def test_stream_to_cells_matches_batch_build(spark, sf_dir, tmp_path):
     ).select("row_key", "col_name", "values")
     assert regrouped.count() == batch.count()
     assert regrouped.exceptAll(batch).count() == 0
+    # every micro-batch file is written in the shared sorted layout
+    assert assert_store_sorted(out) > 0
 
 
 def test_mupr_corrupt_record_capture(spark, tmp_path):

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from applications_analytics_midas_hbase_metrics_spark.operators import cellstore as CS
 from applications_analytics_midas_hbase_metrics_spark.operators import versions as VER
+from tests.conftest import assert_store_sorted
 
 
 def test_latest_versions(spark):
@@ -61,11 +62,6 @@ def test_compact_cells_layout_and_pruning(spark, sf_dir, tmp_path):
     a = spark.read.parquet(raw).select("row_key", "col_name", "values")
     b = spark.read.parquet(compacted).select("row_key", "col_name", "values")
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    # rows sorted within each compacted file -> Parquet row-group min/max
-    # are tight and prefix scans prune (check a few files directly)
-    import pyarrow.parquet as pq
-
-    for d in sorted(glob.glob(compacted + "/salt=*"))[:3]:
-        f = glob.glob(d + "/part-*")[0]
-        keys = pq.read_table(f, columns=["row_key"])["row_key"].to_pylist()
-        assert keys == sorted(keys), d
+    # every compacted file is sorted by (row_key, col_name), so its page
+    # column index has tight row_key bounds and prefix scans skip pages
+    assert assert_store_sorted(compacted) == len(glob.glob(compacted + "/salt=*"))
