@@ -38,7 +38,6 @@ from pyspark.sql.types import ByteType, IntegerType
 
 #: Delimiter constants (Utils.scala:31-33).
 DELIM = "\x00"
-DELIM_COMMA = ","
 NULL_BYTE_REPLACE_STR = "<NB>"
 
 #: Salt bucket count (Utils.scala:93).
@@ -68,14 +67,14 @@ def java_hash_py(s: str) -> int:
     return h
 
 
-def salt_py(s: str, buckets: int = SALT_BUCKETS) -> int:
-    """``Math.abs(hash % buckets)`` (Utils.scala:93-95).  Java ``%`` keeps
-    the dividend's sign, so the remainder is in (-buckets, buckets) and
-    ``abs`` lands every key in 0..buckets-1 — including the
-    ``Integer.MIN_VALUE`` hash, since ``abs`` runs on the small remainder,
-    never on the hash itself.  Equivalent closed form: ``abs(h) % b``
-    with exact (non-wrapping) abs."""
-    return abs(java_hash_py(s)) % buckets
+def salt_py(s: str) -> int:
+    """``Math.abs(hash % 24)`` (Utils.scala:93-95).  Java ``%`` keeps
+    the dividend's sign, so the remainder is in (-24, 24) and ``abs``
+    lands every key in 0..23 — including the ``Integer.MIN_VALUE`` hash,
+    since ``abs`` runs on the small remainder, never on the hash itself.
+    Equivalent closed form: ``abs(h) % 24`` with exact (non-wrapping)
+    abs."""
+    return abs(java_hash_py(s)) % SALT_BUCKETS
 
 
 # ---------------------------------------------------------------------------
@@ -129,14 +128,14 @@ def _signed_byte(one_byte_bin: Column) -> Column:
     return F.when(u > 127, u - 256).otherwise(u)
 
 
-def salt_bucket(col: Column | str, buckets: int = SALT_BUCKETS) -> Column:
+def salt_bucket(col: Column | str) -> Column:
     """Salt-bucket column (tinyint), exact reference parity
-    (Utils.scala:62-64, 83-96): ``abs(hash % buckets)``, always in
-    0..buckets-1.  Computed as ``abs(h) % b`` on BIGINT (exact abs —
-    no MIN_VALUE wraparound at 64 bits), which equals Java's
-    ``Math.abs(int % b)`` for every int32 hash including MIN_VALUE."""
+    (Utils.scala:62-64, 83-96): ``abs(hash % 24)``, always in 0..23.
+    Computed as ``abs(h) % 24`` on BIGINT (exact abs — no MIN_VALUE
+    wraparound at 64 bits), which equals Java's ``Math.abs(int % 24)``
+    for every int32 hash including MIN_VALUE."""
     h = java_hash(col).cast("long")
-    return (F.abs(h) % F.lit(buckets)).cast("tinyint")
+    return (F.abs(h) % F.lit(SALT_BUCKETS)).cast("tinyint")
 
 
 # ---------------------------------------------------------------------------
@@ -238,25 +237,20 @@ def salt_bucket_vec(keys: pd.Series) -> pd.Series:
 # Key construction / decomposition.
 # ---------------------------------------------------------------------------
 
-def row_key(*cols: Column | str, delim: str = DELIM) -> Column:
+def row_key(*cols: Column | str) -> Column:
     """Null-byte-joined composite key (Utils.scala:212-214; the dynamic
     ``getExprWs`` builder, Utils.scala:616-624)."""
     cast = [(F.col(c) if isinstance(c, str) else c).cast("string") for c in cols]
-    return F.concat_ws(delim, *cast)
+    return F.concat_ws(DELIM, *cast)
 
 
-def split_preserve(col: Column | str, delim: str = DELIM) -> Column:
-    """Split preserving trailing empty fields — the semantics the reference
-    hand-rolled in ``getSplitsFromString`` (Utils.scala:853-876).  Spark's
-    3-arg split with ``limit=-1`` is exactly that."""
+def split_preserve(col: Column | str) -> Column:
+    """Split on the null byte preserving trailing empty fields — the
+    semantics the reference hand-rolled in ``getSplitsFromString``
+    (Utils.scala:853-876).  Spark's 3-arg split with ``limit=-1`` is
+    exactly that."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.split(c, re.escape(delim), -1)
-
-
-def expr_ws(*col_names: str, delim: str = DELIM) -> Column:
-    """Parity with ``getExprWs`` (Utils.scala:616-624): build a
-    ``concat_ws`` over named columns from a dynamic column list."""
-    return row_key(*col_names, delim=delim)
+    return F.split(c, re.escape(DELIM), -1)
 
 
 # ---------------------------------------------------------------------------
@@ -287,8 +281,8 @@ def duckdb_java_hash_sql(key_expr: str) -> str:
     return f"(CASE WHEN {key_expr} = '' THEN 0 ELSE {signed} END)"
 
 
-def duckdb_salt_sql(key_expr: str, buckets: int = SALT_BUCKETS) -> str:
+def duckdb_salt_sql(key_expr: str) -> str:
     """DuckDB SQL expression computing :func:`salt_py` of ``key_expr``:
-    ``abs(h) % buckets`` on BIGINT — exact abs, so it equals the
-    reference's ``Math.abs(int32 % buckets)`` for every hash value."""
-    return f"CAST(abs({duckdb_java_hash_sql(key_expr)}) % {buckets} AS TINYINT)"
+    ``abs(h) % 24`` on BIGINT — exact abs, so it equals the reference's
+    ``Math.abs(int32 % 24)`` for every hash value."""
+    return f"CAST(abs({duckdb_java_hash_sql(key_expr)}) % {SALT_BUCKETS} AS TINYINT)"

@@ -37,10 +37,10 @@ Spark-first design decisions (deviations documented):
   * bulkGet(batch=1000) becomes an equi-join on (row_key, col_name)
     with the key batch broadcast, so the cell side is never shuffled.
 
-Scale notes (100 TB): 24 salt partitions is the *reference's* constant;
-``write_cells`` also accepts ``extra_partition_cols`` so a real deployment
-partitions by (date, salt) and sizes files via
-``spark.sql.files.maxRecordsPerFile``.  No driver-side collects anywhere.
+Scale notes: the store has one shape — ``SALT_BUCKETS`` (24, the
+reference's constant) salt partitions, one file per salt per write, row
+keys joined by ``DELIM``.  The only driver-side collect is
+``merge_cells``'s touched-salt set, at most 24 values.
 """
 
 from __future__ import annotations
@@ -54,14 +54,9 @@ from ..functions.keys import (
     DELIM,
     SALT_BUCKETS,
     row_key,
-    salt_bucket,
     salt_bucket_vec,
     split_preserve,
 )
-
-#: HBase column-family constant — always "0" in the reference
-#: (Utils.scala:65, MetricDetails.scala:107-114). Kept for blob parity only.
-COLUMN_FAMILY = "0"
 
 NEWLINE = "\n"
 
@@ -78,12 +73,29 @@ PAGE_ROWS = 1000
 # Encode: relational → cells (the flagship aggregation, Utils.scala:203-234)
 # ---------------------------------------------------------------------------
 
+def _shape(
+    df: DataFrame,
+    key_cols: Sequence[str],
+    col_name: str | Column,
+    value_cols: Sequence[str],
+) -> DataFrame:
+    """The cell projection both builders share: row key, qualifier and
+    the ``\\x00``-joined value tuple (Utils.scala:203-214).  The salt is
+    ``salt_bucket_vec(row_key)``; each builder adds it where its plan
+    needs it."""
+    name_col = F.col(col_name) if isinstance(col_name, str) else col_name
+    return df.select(
+        row_key(*key_cols).alias("row_key"),
+        name_col.cast("string").alias("col_name"),
+        row_key(*value_cols).alias("cell_value"),
+    )
+
+
 def to_cells(
     df: DataFrame,
     key_cols: Sequence[str],
     col_name: str | Column,
     value_cols: Sequence[str],
-    buckets: int = SALT_BUCKETS,
 ) -> DataFrame:
     """Reshape a relational DataFrame into the cell model.
 
@@ -98,12 +110,6 @@ def to_cells(
     is automatic.  Values are sorted post-collection for determinism
     (reference sorts pre-group at Utils.scala:53).
     """
-    name_col = F.col(col_name) if isinstance(col_name, str) else col_name
-    shaped = df.select(
-        row_key(*key_cols).alias("row_key"),
-        name_col.cast("string").alias("col_name"),
-        row_key(*value_cols).alias("cell_value"),
-    )
     # Salt is a function of row_key alone, so compute it AFTER the
     # aggregation: once per group (not per input row, like the
     # reference's per-row UDF + max() piggyback at Utils.scala:215-227),
@@ -113,17 +119,12 @@ def to_cells(
     # expression form, cross-checked in tests/test_keys.py): the
     # per-character expression fold is CodegenFallback and costs ~2s per
     # 600k keys on 32 cores, while the numpy closed form hashes the
-    # whole batch at memory bandwidth.  Non-default bucket counts take
-    # the expression path (the vec UDF bakes in SALT_BUCKETS).
-    salt = (
-        salt_bucket_vec(F.col("row_key"))
-        if buckets == SALT_BUCKETS
-        else salt_bucket(F.col("row_key"), buckets)
-    )
+    # whole batch at memory bandwidth.
     return (
-        shaped.groupBy("row_key", "col_name")
+        _shape(df, key_cols, col_name, value_cols)
+        .groupBy("row_key", "col_name")
         .agg(F.array_sort(F.collect_list("cell_value")).alias("values"))
-        .withColumn("salt", salt)
+        .withColumn("salt", salt_bucket_vec(F.col("row_key")))
     )
 
 
@@ -132,50 +133,29 @@ def to_cells_write_aligned(
     key_cols: Sequence[str],
     col_name: str | Column,
     value_cols: Sequence[str],
-    buckets: int = SALT_BUCKETS,
-    chunks_per_salt: int = 1,
 ) -> DataFrame:
     """:func:`to_cells` pre-distributed to MATCH the store layout — the
     write-side fast path (used by streaming ingest).
 
     Salt is computed per input row, the single exchange distributes raw
-    rows by (salt[, chunk]), and the aggregation then runs
-    exchange-free: hash partitioning on a SUBSET of the group keys
-    already satisfies the aggregate's clustering requirement (all rows
-    of a row_key share its salt).  The returned frame writes with
-    ``partitionBy(salt)`` and NO further shuffle — one exchange
-    end-to-end where to_cells + repartition(salt) costs two (partial-agg
-    exchange + layout exchange).
+    rows by salt, and the aggregation then runs exchange-free: hash
+    partitioning on a SUBSET of the group keys already satisfies the
+    aggregate's clustering requirement (all rows of a row_key share its
+    salt).  The returned frame writes with ``partitionBy(salt)`` and NO
+    further shuffle — one exchange end-to-end where to_cells +
+    repartition(salt) costs two (partial-agg exchange + layout
+    exchange).
 
     Tradeoff vs :func:`to_cells`: the exchange moves raw rows, not
     partial aggregates, so prefer this when |rows| ≈ |cells| (metrics
     ingest, where groups hold a handful of values); and aggregation
-    parallelism is buckets × chunks_per_salt — raise ``chunks_per_salt``
-    on a large cluster so each salt splits across parallel writers
-    (same knob, same layout as :func:`write_cells`)."""
-    name_col = F.col(col_name) if isinstance(col_name, str) else col_name
-    shaped = df.select(
-        row_key(*key_cols).alias("row_key"),
-        name_col.cast("string").alias("col_name"),
-        row_key(*value_cols).alias("cell_value"),
+    parallelism is the 24 salts."""
+    shaped = _shape(df, key_cols, col_name, value_cols).withColumn(
+        "salt", salt_bucket_vec(F.col("row_key"))
     )
-    salt = (
-        salt_bucket_vec(F.col("row_key"))
-        if buckets == SALT_BUCKETS
-        else salt_bucket(F.col("row_key"), buckets)
-    )
-    shaped = shaped.withColumn("salt", salt)
-    if chunks_per_salt > 1:
-        shaped = shaped.withColumn(
-            "_chunk", F.pmod(F.xxhash64("row_key"), F.lit(chunks_per_salt))
-        )
-        parts = shaped.repartition(buckets * chunks_per_salt, "salt", "_chunk")
-        group = ["salt", "_chunk", "row_key", "col_name"]
-    else:
-        parts = shaped.repartition(buckets, "salt")
-        group = ["salt", "row_key", "col_name"]
     return (
-        parts.groupBy(*group)
+        shaped.repartition(SALT_BUCKETS, "salt")
+        .groupBy("salt", "row_key", "col_name")
         .agg(F.array_sort(F.collect_list("cell_value")).alias("values"))
         .select("row_key", "col_name", "values", "salt")
     )
@@ -201,32 +181,24 @@ def decode_blob(blob: Column | str) -> Column:
 # Storage boundary (replaces pushtoDB/BufferedMutator, Utils.scala:49-106)
 # ---------------------------------------------------------------------------
 
-def _write_layout(
-    cells: DataFrame, path: str, mode: str, parts: Sequence[str]
-) -> None:
+def _write_layout(cells: DataFrame, path: str, mode: str) -> None:
     """Write an already-distributed cells frame in the store's layout:
-    ``partitionBy(*parts)``, each file sorted by (row_key, col_name), pages
+    ``partitionBy("salt")``, each file sorted by (row_key, col_name), pages
     of at most ``PAGE_ROWS`` rows.  Sorted pages give the page column index
     tight row_key bounds, so a pushed ``startswith`` skips every page
-    outside the prefix.  The sort must LEAD with the partition columns:
-    the file writer requires that order and re-sorts (destroying the
-    row_key order) when the incoming order does not satisfy it."""
+    outside the prefix.  The sort must LEAD with the salt: the file writer
+    requires that order and re-sorts (destroying the row_key order) when
+    the incoming order does not satisfy it."""
     (
-        cells.sortWithinPartitions(*parts, "row_key", "col_name")
+        cells.sortWithinPartitions("salt", "row_key", "col_name")
         .write.mode(mode)
         .option("parquet.page.row.count.limit", PAGE_ROWS)
-        .partitionBy(*parts)
+        .partitionBy("salt")
         .parquet(path)
     )
 
 
-def write_cells(
-    cells: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    extra_partition_cols: Sequence[str] = (),
-    chunks_per_salt: int = 1,
-) -> None:
+def write_cells(cells: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Persist the cell store as Parquet partitioned by salt, in the
     sorted, page-indexed layout of :func:`_write_layout`.
 
@@ -239,21 +211,9 @@ def write_cells(
     writes a file into every directory — tasks × 24 small files per
     batch, the classic partitioned-write file explosion (24× the
     metadata, listing, and open/close cost on every subsequent scan).
-    After the repartition each task owns exactly one (salt, chunk)
-    slice, so the store gets 24 × ``chunks_per_salt`` right-sized files.
-    ``chunks_per_salt`` is the cluster-scale knob: one chunk per salt is
-    right up to a few GB per salt; a 100 TB ingest raises it so each
-    salt splits across chunks_per_salt parallel writers (file size ~
-    salt_bytes / chunks, write parallelism 24 × chunks) instead of
-    funneling a salt through one task."""
-    parts = [*extra_partition_cols, "salt"]
-    if chunks_per_salt > 1:
-        cells = cells.repartition(
-            *parts, F.pmod(F.xxhash64("row_key"), F.lit(chunks_per_salt))
-        )
-    else:
-        cells = cells.repartition(*parts)
-    _write_layout(cells, path, mode, parts)
+    After the repartition each task owns exactly one salt, so each write
+    adds at most 24 files, one per salt."""
+    _write_layout(cells.repartition("salt"), path, mode)
 
 
 def write_cells_bucketed(
@@ -280,21 +240,16 @@ def write_cells_bucketed(
 
 
 def read_cells(
-    spark: SparkSession,
-    path: str,
-    prefix: str | None = None,
-    columns: Sequence[str] | None = None,
+    spark: SparkSession, path: str, prefix: str | None = None
 ) -> DataFrame:
-    """Scan with prefix filter + qualifier projection — the Spark version of
-    ``Scan().setFilter(PrefixFilter(..)).addColumn(..)`` (MetricDetails.scala:
-    99-117).  ``startswith`` reaches the Parquet reader as a pushed filter
-    (StringStartsWith); ``col_name isin`` prunes qualifiers; unused columns
-    never leave the footer (column pruning)."""
+    """Scan with a prefix filter — the Spark version of
+    ``Scan().setFilter(PrefixFilter(..))`` (MetricDetails.scala:99-117).
+    ``startswith`` reaches the Parquet reader as a pushed filter
+    (StringStartsWith); unused columns never leave the footer (column
+    pruning)."""
     df = spark.read.parquet(path)
     if prefix is not None:
         df = df.filter(F.col("row_key").startswith(prefix))
-    if columns is not None:
-        df = df.filter(F.col("col_name").isin(list(columns)))
     return df
 
 
@@ -346,14 +301,7 @@ def decode_cells(
 # ---------------------------------------------------------------------------
 
 
-def merge_cells(
-    spark: SparkSession,
-    path: str,
-    changes: DataFrame,
-    buckets: int = SALT_BUCKETS,
-    chunks_per_salt: int = 1,
-    extra_partition_cols: Sequence[str] = (),
-) -> dict:
+def merge_cells(spark: SparkSession, path: str, changes: DataFrame) -> dict:
     """MERGE a CDC batch into the on-disk cell store in place.
 
     ``changes`` carries ``(row_key, col_name, values)`` plus an optional
@@ -363,17 +311,16 @@ def merge_cells(
     K3/K4); MERGE is the missing third verb a long-lived store needs
     (late data, corrections, GDPR deletes).
 
-    Scale design — the rewrite is bounded by the TOUCHED PARTITIONS,
-    never the store:
+    Scale design — the rewrite is bounded by the TOUCHED SALTS, never
+    the store:
 
-    * the batch's salt set is computed first (``<= buckets`` values —
+    * the batch's salt set is computed first (at most 24 values —
       driver-safe by construction), and the store is read WITH a salt
       partition filter, so untouched partitions are never scanned, let
       alone rewritten;
     * old cell versions fall out via a (row_key, col_name) LEFT ANTI
       join against the batch — one shuffle keyed like every other
-      cell-store operation (a deployment that bucketed the store by
-      row_key runs it exchange-free on the store side);
+      cell-store operation;
     * the merged partitions are written to a sibling tmp directory from
       the live read lineage (no localCheckpoint materialization of the
       store), then swapped in with one rename per touched partition —
@@ -384,138 +331,94 @@ def merge_cells(
       shape;
     * ``spark.catalog.refreshByPath`` fences BOTH sides of the swap so
       pinned/cached plans can neither feed the merge a stale snapshot
-      nor serve readers the pre-merge files.
+      nor serve readers the pre-merge files;
+    * the change batch's localCheckpoint is released on every exit,
+      normal or raised, so a per-micro-batch caller holds no blocks.
 
-    ``extra_partition_cols`` supports the (date, salt)-style layouts
-    ``write_cells`` produces: the change batch must carry those columns,
-    the touched set becomes LEAF partitions (date=D/salt=S), and a
-    one-day backfill scans and swaps only that day's dirs — the same
-    code path, which is what makes MERGE cheap at 100 TB.  A batch
-    touching more than 4096 leaves is rejected (that workload belongs
-    on the compaction path).
-
-    Returns ``{"touched_partitions", "touched_salts", "rows_written",
-    "untouched_partitions"}`` (the last is None under a nested layout,
-    where the total leaf count is unknown without listing).
+    Returns ``{"touched_salts", "rows_written", "untouched_partitions"}``.
     """
     import json
     import os
     import shutil
-    from functools import reduce
-    from operator import and_, or_
 
-    extras = list(extra_partition_cols)
-    for c in extras:
-        if c not in changes.columns:
-            raise ValueError(
-                f"extra partition column {c!r} missing from the change batch"
-            )
     if "op" not in changes.columns:
         changes = changes.withColumn("op", F.lit("U"))
-    salt = (
-        salt_bucket_vec(F.col("row_key"))
-        if buckets == SALT_BUCKETS
-        else salt_bucket(F.col("row_key"), buckets)
-    )
-    parts = [*extras, "salt"]
     ch = changes.select(
-        "row_key", "col_name", "values", "op", *extras, salt.alias("salt")
+        "row_key",
+        "col_name",
+        "values",
+        "op",
+        salt_bucket_vec(F.col("row_key")).alias("salt"),
     ).localCheckpoint(eager=True)  # reused by key-set, upserts AND touched scan
-    combos = sorted(
-        tuple(r)
-        for r in ch.select(*parts).distinct().collect()  # driver-ok: bounded below
-    )
-    # a CDC batch touches few leaf partitions by nature (few dates x
-    # <= `buckets` salts); a batch that violates that belongs on the
-    # compaction path, not a per-partition swap
-    if len(combos) > 4096:
-        raise ValueError(
-            f"change batch touches {len(combos)} leaf partitions; "
-            "bound it (e.g. merge per date) or rewrite via compact_cells"
+    # DataFrame.unpersist does nothing on a checkpointed frame: release
+    # the LogicalRDD's backing RDD directly
+    ckpt_rdd = ch._jdf.queryExecution().analyzed().rdd()
+    try:
+        touched_salts = sorted(
+            r.salt
+            for r in ch.select("salt").distinct().collect()  # driver-ok: <= 24
         )
-    touched = ["/".join(f"{c}={v}" for c, v in zip(parts, combo)) for combo in combos]
-    if not touched:
+        touched = [f"salt={s}" for s in touched_salts]
+        if not touched:
+            return {
+                "touched_salts": [],
+                "rows_written": 0,
+                "untouched_partitions": SALT_BUCKETS,
+            }
+
+        # fence IN: merge what is actually on disk, not a pinned snapshot
+        spark.catalog.refreshByPath(path)
+        current = spark.read.parquet(path).filter(F.col("salt").isin(touched_salts))
+        keys = ch.select("row_key", "col_name")
+        survivors = current.join(keys, ["row_key", "col_name"], "left_anti")
+        upserts = ch.filter(F.col("op") != "D").select(
+            "row_key", "col_name", "values", "salt"
+        )
+        merged = survivors.select(
+            "row_key", "col_name", "values", "salt"
+        ).unionByName(upserts)
+
+        tmp = path + ".merge_tmp"
+        shutil.rmtree(tmp, ignore_errors=True)
+        # one file per salt, written in the store's layout
+        _write_layout(merged.repartition("salt"), tmp, "overwrite")
+        # explicit schema: a batch that deletes a whole partition leaves tmp
+        # with zero data files, and inference would fail on the empty dir
+        rows_written = spark.read.schema(merged.schema).parquet(tmp).count()
+
+        # the manifest makes a crash anywhere in the swap window
+        # deterministically recoverable (recover_cell_store rolls FORWARD:
+        # tmp is complete by the time the manifest exists); it is removed
+        # BEFORE the old/tmp cleanup, so "manifest present" always implies
+        # "old_root untouched by cleanup" — no ambiguous states
+        manifest = path + ".merge_manifest"
+        with open(manifest, "w") as fh:
+            json.dump({"touched": touched}, fh)
+
+        old_root = path + ".merge_old"
+        shutil.rmtree(old_root, ignore_errors=True)
+        os.makedirs(old_root)
+        for rel in touched:
+            src = os.path.join(tmp, rel)
+            dst = os.path.join(path, rel)
+            if os.path.exists(dst):
+                os.rename(dst, os.path.join(old_root, rel))
+            # a touched partition whose every cell was deleted has no tmp
+            # dir: the rename above already removed it from the store
+            if os.path.exists(src):
+                os.rename(src, dst)
+        os.remove(manifest)
+        shutil.rmtree(old_root)
+        shutil.rmtree(tmp, ignore_errors=True)
+        # fence OUT: readers must see the swapped partitions
+        spark.catalog.refreshByPath(path)
         return {
-            "touched_partitions": [],
-            "touched_salts": [],
-            "rows_written": 0,
-            "untouched_partitions": buckets,
+            "touched_salts": touched_salts,
+            "rows_written": rows_written,
+            "untouched_partitions": SALT_BUCKETS - len(touched_salts),
         }
-
-    # fence IN: merge what is actually on disk, not a pinned snapshot
-    spark.catalog.refreshByPath(path)
-    combo_filter = reduce(
-        or_,
-        (
-            reduce(and_, (F.col(c) == v for c, v in zip(parts, combo)))
-            for combo in combos
-        ),
-    )
-    current = spark.read.parquet(path).filter(combo_filter)
-    keys = ch.select("row_key", "col_name")
-    survivors = current.join(keys, ["row_key", "col_name"], "left_anti")
-    upserts = ch.filter(F.col("op") != "D").select(
-        "row_key", "col_name", "values", *parts
-    )
-    merged = survivors.select(
-        "row_key", "col_name", "values", *parts
-    ).unionByName(upserts)
-    # one file per (partition, chunk), written in the store's layout
-    if chunks_per_salt > 1:
-        merged = merged.repartition(
-            *(F.col(c) for c in parts),
-            F.pmod(F.xxhash64("row_key"), F.lit(chunks_per_salt)),
-        )
-    else:
-        merged = merged.repartition(*parts)
-
-    tmp = path + ".merge_tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    _write_layout(merged, tmp, "overwrite", parts)
-    # explicit schema: a batch that deletes a whole partition leaves tmp
-    # with zero data files, and inference would fail on the empty dir
-    rows_written = spark.read.schema(merged.schema).parquet(tmp).count()
-
-    # the manifest makes a crash anywhere in the swap window
-    # deterministically recoverable (recover_cell_store rolls FORWARD:
-    # tmp is complete by the time the manifest exists); it is removed
-    # BEFORE the old/tmp cleanup, so "manifest present" always implies
-    # "old_root untouched by cleanup" — no ambiguous states
-    manifest = path + ".merge_manifest"
-    with open(manifest, "w") as fh:
-        json.dump({"touched": touched}, fh)
-
-    old_root = path + ".merge_old"
-    shutil.rmtree(old_root, ignore_errors=True)
-    os.makedirs(old_root)
-    for rel in touched:
-        src = os.path.join(tmp, rel)
-        dst = os.path.join(path, rel)
-        if os.path.exists(dst):
-            aside = os.path.join(old_root, rel)
-            os.makedirs(os.path.dirname(aside), exist_ok=True)
-            os.rename(dst, aside)
-        # a touched partition whose every cell was deleted has no tmp
-        # dir: the rename above already removed it from the store
-        if os.path.exists(src):
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.rename(src, dst)
-    os.remove(manifest)
-    shutil.rmtree(old_root)
-    shutil.rmtree(tmp, ignore_errors=True)
-    # fence OUT: readers must see the swapped partitions
-    spark.catalog.refreshByPath(path)
-    return {
-        "touched_partitions": touched,
-        # salt-only convenience view (the common layout)
-        "touched_salts": sorted(
-            {int(rel.rsplit("salt=", 1)[1]) for rel in touched}
-        ),
-        "rows_written": rows_written,
-        "untouched_partitions": buckets - len(touched)
-        if not extras
-        else None,
-    }
+    finally:
+        ckpt_rdd.unpersist(True)
 
 
 def recover_cell_store(path: str, spark: SparkSession | None = None) -> dict:

@@ -5,14 +5,15 @@ The reference materializes two frames with twin column families —
 ``fileRowKey/fileColumnName/fileValue`` (Utils.scala:234) vs
 ``tableRowKey/tableColumnName/tableValue`` (Utils.scala:338-341) — and the
 ``runTestRunner`` stub (Utils.scala:643-655) orchestrates a compareType-
-driven diff.  Here that is one full-outer join with null-safe equality,
-plus semi/anti views, all shuffle-on-key (or broadcast when one side is
-small) — no driver collects, scales to any size.
+driven diff.  Here that is one full-outer join on (row_key, col_name)
+with null-safe equality, shuffle-on-key (or broadcast when one side is
+small) — no driver collects, scales to any size.  The verdict column
+carries every view the reference derived: missing in table (the load
+dropped a cell), missing in file (a cell with no source), match and
+mismatch (loaded cells).
 """
 
 from __future__ import annotations
-
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -27,7 +28,6 @@ MISSING_IN_FILE = "missing_in_file"
 def compare_cells(
     file_df: DataFrame,
     table_df: DataFrame,
-    on: Sequence[str] = ("row_key", "col_name"),
     value_col: str = "values",
 ) -> DataFrame:
     """Full-outer diff of the file-derived vs store-derived cells.
@@ -38,13 +38,14 @@ def compare_cells(
     nullness — so a cell whose value is NULL on both sides is a
     ``match`` (null-safe ``<=>`` compare), and a genuinely NULL value is
     never conflated with an absent row."""
+    on = ["row_key", "col_name"]
     f = file_df.select(
         *on, F.col(value_col).alias("file_value"), F.lit(True).alias("_in_file")
     )
     t = table_df.select(
         *on, F.col(value_col).alias("table_value"), F.lit(True).alias("_in_table")
     )
-    joined = f.join(t, on=list(on), how="full_outer")
+    joined = f.join(t, on=on, how="full_outer")
     verdict = (
         F.when(F.col("_in_file").isNull(), F.lit(MISSING_IN_FILE))
         .when(F.col("_in_table").isNull(), F.lit(MISSING_IN_TABLE))
@@ -58,29 +59,3 @@ def validation_summary(diff: DataFrame) -> DataFrame:
     """result_metric-style counts (Utils.scala:47): one row per verdict."""
     return diff.groupBy("verdict").agg(F.count("*").alias("n")).orderBy("verdict")
 
-
-def missing_in_table(
-    file_df: DataFrame,
-    table_df: DataFrame,
-    on: Sequence[str] = ("row_key", "col_name"),
-) -> DataFrame:
-    """Cells the load dropped — LEFT ANTI join (file minus table)."""
-    return file_df.join(table_df, on=list(on), how="left_anti")
-
-
-def missing_in_file(
-    file_df: DataFrame,
-    table_df: DataFrame,
-    on: Sequence[str] = ("row_key", "col_name"),
-) -> DataFrame:
-    """Cells in the store with no source — RIGHT side anti."""
-    return table_df.join(file_df, on=list(on), how="left_anti")
-
-
-def loaded_cells(
-    file_df: DataFrame,
-    table_df: DataFrame,
-    on: Sequence[str] = ("row_key", "col_name"),
-) -> DataFrame:
-    """Cells present in both — LEFT SEMI join."""
-    return file_df.join(table_df, on=list(on), how="left_semi")

@@ -89,12 +89,7 @@ def dedupe_chunks(
     )
 
 
-def compact_cells(
-    spark: SparkSession,
-    in_path: str,
-    out_path: str,
-    buckets: int = SALT_BUCKETS,
-) -> None:
+def compact_cells(spark: SparkSession, in_path: str, out_path: str) -> None:
     """Compaction: rewrite the cell store with one file per salt
     partition, in the layout every store writer shares
     (``cellstore._write_layout``): sorted by (row_key, col_name) in
@@ -103,5 +98,5 @@ def compact_cells(
     the small-file tax of incremental loads."""
     cells = spark.read.parquet(in_path)
     _write_layout(
-        cells.repartition(buckets, F.col("salt")), out_path, "overwrite", ["salt"]
+        cells.repartition(SALT_BUCKETS, F.col("salt")), out_path, "overwrite"
     )

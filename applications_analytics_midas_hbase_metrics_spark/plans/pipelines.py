@@ -20,7 +20,8 @@ from ..operators import logs as LOGS
 from ..operators import validate as V
 from ..sources import ingest as I
 
-#: MUPR cell mapping (Utils.scala:203-219): key = Lot/WW/seq/unit-seq,
+#: MUPR cell mapping (Utils.scala:203-219): key = Lot/WW/seq/unit-seq
+#: (MUCR cells share it, Utils.scala:548-551),
 #: qualifier = Test_Name, value = the 8 measurement fields in the
 #: reference's exact positional order (Utils.scala:203-211) so the
 #: \x00-joined blob round-trips against reference-written data.
@@ -37,6 +38,27 @@ MUPR_VALUE_COLS = (
 )
 
 
+def _enriched(spark: SparkSession, data: DataFrame, trig_path: str) -> DataFrame:
+    """Stamp each parsed row with its source file's name and join the
+    trigger metadata onto it — the collect-and-stamp of Utils.scala:188-197
+    as one broadcast join."""
+    data = data.withColumn(
+        "File_Name", F.element_at(F.split(F.input_file_name(), "/"), -1)
+    )
+    return I.enrich_with_metadata(data, I.read_trigger(spark, trig_path))
+
+
+def _mupr_cells(spark: SparkSession, data_path: str, trig_path: str) -> DataFrame:
+    """The MUPR cell build (Utils.scala:154-236) that ingest and
+    validation share."""
+    return CS.to_cells(
+        _enriched(spark, I.read_mupr(spark, data_path), trig_path),
+        key_cols=list(MUPR_KEY_COLS),
+        col_name=F.col("Test_Name"),
+        value_cols=list(MUPR_VALUE_COLS),
+    )
+
+
 def ingest_mupr_to_store(
     spark: SparkSession,
     data_path: str,
@@ -48,17 +70,7 @@ def ingest_mupr_to_store(
     DataFrame (already written).  The reference's MUPR flow
     (Utils.scala:154-236 + 49-80) with the collect-and-stamp replaced by
     a broadcast join."""
-    data = I.read_mupr(spark, data_path).withColumn(
-        "File_Name", F.element_at(F.split(F.input_file_name(), "/"), -1)
-    )
-    trig = I.read_trigger(spark, trig_path)
-    enriched = I.enrich_with_metadata(data, trig)
-    cells = CS.to_cells(
-        enriched,
-        key_cols=list(MUPR_KEY_COLS),
-        col_name=F.col("Test_Name"),
-        value_cols=list(MUPR_VALUE_COLS),
-    )
+    cells = _mupr_cells(spark, data_path, trig_path)
     CS.write_cells(cells, store_path, mode=mode)
     return cells
 
@@ -74,14 +86,9 @@ def ingest_mucr_to_store(
     enrichment, qualifier = flg+hex(len)+counter_id (the reference's
     intended qualifier — its Test_Name projection at Utils.scala:555
     would throw)."""
-    parsed = I.read_mucr(spark, data_path).withColumn(
-        "File_Name", F.element_at(F.split(F.input_file_name(), "/"), -1)
-    )
-    trig = I.read_trigger(spark, trig_path)
-    enriched = I.enrich_with_metadata(parsed, trig)
     cells = CS.to_cells(
-        enriched,
-        key_cols=["Lot", "Lato_Start_WW", "Lots_seq_key", "Unit_Testing_Seq_Key"],
+        _enriched(spark, I.read_mucr(spark, data_path), trig_path),
+        key_cols=list(MUPR_KEY_COLS),
         col_name=I.mucr_column_qualifier(),
         # reference blob layout (Utils.scala:551): Unit_Counter_Seq_Num,
         # Substructure_ID, Repeating_Counter_Occurrences — in that order
@@ -103,16 +110,7 @@ def validate_load(
 ) -> DataFrame:
     """runTestRunner (Utils.scala:643-655): rebuild the file-side cells,
     read the store back, full-outer diff, return verdict counts."""
-    data = I.read_mupr(spark, data_path).withColumn(
-        "File_Name", F.element_at(F.split(F.input_file_name(), "/"), -1)
-    )
-    trig = I.read_trigger(spark, trig_path)
-    file_cells = CS.to_cells(
-        I.enrich_with_metadata(data, trig),
-        key_cols=list(MUPR_KEY_COLS),
-        col_name=F.col("Test_Name"),
-        value_cols=list(MUPR_VALUE_COLS),
-    )
+    file_cells = _mupr_cells(spark, data_path, trig_path)
     store_cells = CS.read_cells(spark, store_path)
     diff = V.compare_cells(file_cells, store_cells)
     return V.validation_summary(diff)

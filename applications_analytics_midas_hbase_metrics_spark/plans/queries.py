@@ -726,10 +726,7 @@ def q_validation_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Both anti-join directions fall out of ONE full-outer diff (presence
     # markers, operators/validate.compare_cells): two exchanges instead
     # of the four the twin anti-joins cost — at 100 TB the store side is
-    # shuffled once, not twice.  The semi/anti operators remain
-    # first-class API (missing_in_table/missing_in_file/loaded_cells,
-    # exercised in tests/test_validate_logs.py); this query just reads
-    # both directions off the shared join.
+    # shuffled once, not twice.
     diff = V.compare_cells(cells, table_side, value_col="vals")
     return diff.filter(
         F.col("verdict").isin(V.MISSING_IN_TABLE, V.MISSING_IN_FILE)

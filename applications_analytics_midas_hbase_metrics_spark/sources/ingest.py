@@ -107,8 +107,9 @@ def read_mucr(spark: SparkSession, path: str) -> DataFrame:
     return parse_mucr_lines(spark.read.text(path))
 
 
-def parse_mucr_lines(lines: DataFrame, line_col: str = "value") -> DataFrame:
-    """MUCR variable-arity parse, fully JVM-side.
+def parse_mucr_lines(lines: DataFrame) -> DataFrame:
+    """MUCR variable-arity parse of a text frame's ``value`` column, fully
+    JVM-side.
 
     Reference algorithm (Utils.scala:504-536): split the line on \\x00,
     take 6 fixed fields, then re-group the tail in strides of 3 as
@@ -120,7 +121,7 @@ def parse_mucr_lines(lines: DataFrame, line_col: str = "value") -> DataFrame:
     length disagrees with ``number_of_counters`` are dropped
     (the reference would throw, SURVEY.md hard part #5).
     """
-    parts = F.split(F.col(line_col), DELIM, -1)
+    parts = F.split(F.col("value"), DELIM, -1)
     df = lines.select(
         *[parts.getItem(i).alias(n) for i, n in enumerate(MUCR_FIXED)],
         F.slice(parts, len(MUCR_FIXED) + 1, F.size(parts) - len(MUCR_FIXED)).alias(
@@ -165,22 +166,18 @@ def mucr_column_qualifier() -> F.Column:
     )
 
 
-def enrich_with_metadata(
-    data: DataFrame,
-    trigger: DataFrame,
-    on: str = "File_Name",
-    fields: Sequence[str] = ("Lot", "Lato_Start_WW", "Lots_seq_key"),
-    how: str = "left",
-) -> DataFrame:
-    """Metadata enrichment as ONE broadcast join (J1) instead of the
-    reference's per-file collect-and-lit (Utils.scala:188-197, 575-605,
-    686-810).
+def enrich_with_metadata(data: DataFrame, trigger: DataFrame) -> DataFrame:
+    """Metadata enrichment as ONE broadcast left join on ``File_Name``
+    (J1) instead of the reference's per-file collect-and-lit
+    (Utils.scala:188-197, 575-605, 686-810): stamps the trigger's
+    ``Lot``, ``Lato_Start_WW`` and ``Lots_seq_key``, where present.
 
     At 100 TB the data side never shuffles: the trigger table (~2000 rows
     per batch, Utils.scala:689-690) broadcasts to every executor.
     """
-    meta = trigger.select(on, *[f for f in fields if f in trigger.columns])
-    return data.join(F.broadcast(meta), on=on, how=how)
+    fields = ("Lot", "Lato_Start_WW", "Lots_seq_key")
+    meta = trigger.select("File_Name", *[f for f in fields if f in trigger.columns])
+    return data.join(F.broadcast(meta), on="File_Name", how="left")
 
 
 def nullbyte_to_csv(df: DataFrame, add_header_row: bool = False) -> DataFrame:

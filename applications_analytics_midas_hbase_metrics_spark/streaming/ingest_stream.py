@@ -45,7 +45,7 @@ def stream_to_cells(
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         cells = to_cells_write_aligned(batch, key_cols, F.col(col_name), value_cols)
         cells = cells.withColumn("ingest_batch", F.lit(batch_id))
-        _write_layout(cells, out_path, "append", ["salt"])
+        _write_layout(cells, out_path, "append")
 
     writer = stream.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint

@@ -33,14 +33,13 @@ def test_to_cells_shape(cells, lineitem):
     assert cells.count() == expected
 
 
-@pytest.mark.parametrize("chunks", [1, 3])
-def test_write_aligned_build_matches_to_cells(cells, lineitem, chunks):
+def test_write_aligned_build_matches_to_cells(cells, lineitem):
     """The single-exchange write-aligned build must produce the exact
     cell set of the canonical two-exchange form (same rows, same sorted
-    values, same salt), for both the plain and the chunked layout; and
-    its physical plan must contain exactly ONE exchange."""
+    values, same salt); and its physical plan must contain exactly ONE
+    exchange."""
     aligned = CS.to_cells_write_aligned(
-        lineitem, KEY_COLS, F.col("l_partkey"), VAL_COLS, chunks_per_salt=chunks
+        lineitem, KEY_COLS, F.col("l_partkey"), VAL_COLS
     )
     assert aligned.columns == ["row_key", "col_name", "values", "salt"]
     assert aligned.exceptAll(cells).count() == 0
@@ -104,11 +103,13 @@ def test_prefix_scan_reads_only_prefix_pages(spark, tmp_path):
     by (row_key, col_name), and a selective prefix scan returns exactly
     the rows of an unpushed startswith filter while its Parquet scan hands
     up under a quarter of the store: the page column index skips every
-    page outside the prefix.  Two salts, so each sf0.01 file spans about
-    fifteen pages; at 24 salts a file holds two and skipping has little
-    to show."""
+    page outside the prefix.  The salt is folded to two values, so each
+    sf0.01 file spans about fifteen pages; at 24 salts a file holds two
+    and skipping has little to show."""
     li = spark.read.parquet(f"{SF_CORRECT}/lineitem.parquet")
-    cells = CS.to_cells(li, KEY_COLS, F.col("l_partkey"), VAL_COLS, buckets=2)
+    cells = CS.to_cells(li, KEY_COLS, F.col("l_partkey"), VAL_COLS).withColumn(
+        "salt", (F.col("salt") % 2).cast("tinyint")
+    )
     path = str(tmp_path / "store")
     even = F.pmod(F.xxhash64("row_key"), F.lit(2)) == 0
     CS.write_cells(cells.filter(even), path, mode="overwrite")
@@ -205,6 +206,7 @@ def test_merge_cells_semantics_and_partition_bound(cells, spark, tmp_path):
     )
     stats = CS.merge_cells(spark, path, batch)
     assert stats["rows_written"] > 0
+    assert isinstance(stats["untouched_partitions"], int)
     assert stats["untouched_partitions"] == CS.SALT_BUCKETS - len(
         stats["touched_salts"]
     )
@@ -400,79 +402,44 @@ def test_recover_cell_store_noop_without_manifest(cells, spark, tmp_path):
     assert spark.read.parquet(path).count() == n0
 
 
-def test_merge_cells_nested_partition_layout(cells, spark, tmp_path):
-    """The (date, salt)-style layout: merge must scan and swap ONLY the
-    touched (ds, salt) LEAF dirs — the other date's files stay
-    byte-identical — and semantics must hold across the nested swap."""
-    import os as _os
 
+def _persistent_rdd_ids(spark) -> set[int]:
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().keysIterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(it.next())
+    return ids
+
+
+def _upsert_batch(cells, spark):
+    rows = cells.limit(3).collect()  # driver-ok: 3 rows
+    return spark.createDataFrame(
+        [(r.row_key, r.col_name, ["leak-check"]) for r in rows],
+        "row_key string, col_name string, values array<string>",
+    )
+
+
+def test_merge_cells_releases_change_checkpoint(cells, spark, tmp_path):
+    """The change batch's localCheckpoint is released when the merge
+    returns, not whenever the JVM next collects garbage: a CDC stream
+    merges once per micro-batch, so a leaked checkpoint per call grows
+    without bound.  Compared as RDD ids, so an unrelated RDD collected
+    meanwhile cannot mask or fake a leak."""
     path = str(tmp_path / "store")
-    # two synthetic "days", deterministic per row_key
-    dated = cells.withColumn(
-        "ds", F.pmod(F.xxhash64("row_key"), F.lit(2)).cast("int")
-    )
-    CS.write_cells(dated, path, mode="overwrite", extra_partition_cols=["ds"])
-    files_before = {
-        f: _os.stat(f).st_mtime_ns
-        for f in __import__("glob").glob(f"{path}/ds=*/salt=*/*.parquet")
-    }
+    CS.write_cells(cells, path, mode="overwrite")
+    batch = _upsert_batch(cells, spark)
+    before = _persistent_rdd_ids(spark)
+    CS.merge_cells(spark, path, batch)
+    assert _persistent_rdd_ids(spark) - before == set()
 
-    # backfill day 0 only: update 5 cells, delete 2
-    day0 = dated.filter(F.col("ds") == 0)
-    upd = day0.limit(5).select(
-        "row_key",
-        "col_name",
-        F.array(F.lit("backfilled")).alias("values"),
-        F.lit("U").alias("op"),
-        "ds",
-    )
-    dele = (
-        day0.orderBy(F.col("row_key").desc(), F.col("col_name").desc())
-        .limit(2)
-        .select(
-            "row_key",
-            "col_name",
-            F.lit(None).cast("array<string>").alias("values"),
-            F.lit("D").alias("op"),
-            "ds",
-        )
-    )
-    batch = upd.unionByName(dele).localCheckpoint(eager=True)
-    stats = CS.merge_cells(
-        spark, path, batch, extra_partition_cols=["ds"]
-    )
-    assert all(rel.startswith("ds=0/") for rel in stats["touched_partitions"])
-    assert stats["untouched_partitions"] is None
 
-    # every ds=1 file untouched
-    files_after = {
-        f: _os.stat(f).st_mtime_ns
-        for f in __import__("glob").glob(f"{path}/ds=*/salt=*/*.parquet")
-    }
-    for f, mtime in files_before.items():
-        if "/ds=1/" in f:
-            assert files_after.get(f) == mtime, f
+def test_merge_cells_releases_change_checkpoint_on_error(cells, spark, tmp_path):
+    """A merge that raises after checkpointing the change batch (here:
+    the store path does not exist) still releases the checkpoint."""
+    from pyspark.errors import AnalysisException
 
-    # semantics across the nested swap
-    got = spark.read.parquet(path).select(
-        "row_key", "col_name", "values", "ds", "salt"
-    )
-    expected = (
-        dated.select("row_key", "col_name", "values", "ds", "salt")
-        .join(
-            batch.select("row_key", "col_name"),
-            ["row_key", "col_name"],
-            "left_anti",
-        )
-        .unionByName(
-            batch.filter(F.col("op") == "U").select(
-                "row_key",
-                "col_name",
-                "values",
-                "ds",
-                CS.salt_bucket_vec(F.col("row_key")).alias("salt"),
-            )
-        )
-    )
-    assert got.exceptAll(expected).count() == 0
-    assert expected.exceptAll(got).count() == 0
+    batch = _upsert_batch(cells, spark)
+    before = _persistent_rdd_ids(spark)
+    with pytest.raises(AnalysisException):
+        CS.merge_cells(spark, str(tmp_path / "no_store"), batch)
+    assert _persistent_rdd_ids(spark) - before == set()

@@ -144,23 +144,6 @@ def test_row_key_null_fields_skipped_like_reference(spark):
     assert out.rk == "A\x00B"
 
 
-def test_expr_ws_golden_parity_with_row_key(spark):
-    # F6 (getExprWs, Utils.scala:616-624) builds a concat_ws over a
-    # DYNAMIC column list; expr_ws delegates to row_key, and this golden
-    # test pins that delegation: identical output on multi-column,
-    # null-skipping, and custom-delimiter inputs, byte for byte.
-    df = spark.createDataFrame(
-        [("L1", None, 7, "x\x00y")], "a string, b string, c int, d string"
-    )
-    out = df.select(
-        K.expr_ws("a", "b", "c", "d").alias("e"),
-        K.row_key("a", "b", "c", "d").alias("r"),
-        K.expr_ws("a", "d", delim="|").alias("e2"),
-    ).first()
-    assert out.e == out.r == "L1\x007\x00x\x00y"
-    assert out.e2 == "L1|x\x00y"
-
-
 def test_split_preserves_trailing_empties(spark):
     # The reference hand-rolled getSplitsFromString for exactly this
     # (Utils.scala:853-876).

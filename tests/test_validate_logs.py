@@ -59,13 +59,6 @@ def test_compare_cells_null_value_both_sides_is_match(spark):
     assert got[("k2", "c1")] == V.MISMATCH
 
 
-def test_anti_semi_joins(file_table):
-    file_df, table_df = file_table
-    assert V.missing_in_table(file_df, table_df).count() == 1
-    assert V.missing_in_file(file_df, table_df).count() == 1
-    assert V.loaded_cells(file_df, table_df).count() == 3
-
-
 LOG_LINES = [
     "26/08/13 01:00:00 INFO Client: starting",
     "26/08/13 01:00:05 INFO Client: the spark submit job is successful for 12345678 with code 90",

@@ -17,12 +17,12 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-
-import os
+# the checkout this script lives in, so a second checkout checks its own code
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
 TABLES = (

@@ -3,11 +3,11 @@
 Usage: PLANS_ROUND=r16 python tools/dump_plans.py <suffix> [query ...]
 
 Writes plans/<round>/<query>_<suffix>.txt for each query (suffix: "before"
-or "after").  Queries are built at $SF_DIR (default /root/testdata/
-sf0.1) — building the frame runs any driver-side preparation the query
-does (bounded collects, index builds) but does NOT execute the final
-plan.  Streaming queries (no classic batch plan) are skipped with a
-note.
+or "after"); an absolute $PLANS_ROUND is used as the output directory.
+Queries are built at $SF_DIR (default: the sf0.1 test tables) — building
+the frame runs any driver-side preparation the query does (bounded
+collects, index builds) but does NOT execute the final plan.  Streaming
+queries (no classic batch plan) are skipped with a note.
 """
 
 from __future__ import annotations
@@ -17,14 +17,12 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, so a second checkout dumps its own plans
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.1")
-OUT_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "plans",
-    os.environ.get("PLANS_ROUND", "r16"),
-)
+OUT_DIR = os.path.join(REPO, "plans", os.environ.get("PLANS_ROUND", "r16"))
 
 
 def main() -> int:
