@@ -16,14 +16,20 @@ Parity targets (citations into /root/reference):
   Spark SQL's three-arg ``split(col, pat, -1)`` already has the right
   semantics.
 
-Implementation note (Spark-first): the salt hash is expressed with
-built-in higher-order functions over the UTF-8 bytes of the key —
-``encode → per-byte conv(hex) → aggregate`` — so it stays inside
-whole-stage codegen on the JVM; no Python worker is involved.  A
-pandas-UDF variant is kept for cross-checking and as the template for
-hashes that genuinely need Python.  All arithmetic is done in BIGINT
-with an explicit ``% 2^32`` per step, so it is correct with or without
-ANSI mode (no silent overflow relied upon).
+Implementation note (Spark-first): the salt runs on the JVM with no
+Python worker.  For an ASCII key the reference hash equals Java's
+``String.hashCode`` of ``"\\x01" + key`` (a 0-seeded fold whose first
+char is 1 is the 1-seeded fold), so :func:`salt_bucket` makes one
+``reflect('java.util.Objects', 'hashCode', ...)`` call per key.  A
+non-ASCII key takes the byte fold (:func:`java_hash`): ``hashCode``
+folds UTF-16 chars, the reference folds signed UTF-8 bytes.  The fold is
+built from ``aggregate``, which is ``CodegenFallback`` (interpreted per
+element); the ``reflect`` call is also ``CodegenFallback`` and is
+``Nondeterministic``, so the optimizer neither pushes a filter through
+the salt projection nor merges it into a projection that reads the
+salt.  Each cell builder therefore adds the salt last.  Fold
+arithmetic is done in BIGINT with an explicit ``% 2^32`` per step, so it
+is correct with or without ANSI mode (no silent overflow relied upon).
 """
 
 from __future__ import annotations
@@ -34,7 +40,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ByteType, IntegerType
+from pyspark.sql.types import IntegerType
 
 #: Delimiter constants (Utils.scala:31-33).
 DELIM = "\x00"
@@ -48,7 +54,7 @@ _TWO_31 = 2_147_483_648
 
 
 # ---------------------------------------------------------------------------
-# Pure-Python reference implementation (used by tests and the pandas UDF).
+# Pure-Python reference implementation (used by tests).
 # ---------------------------------------------------------------------------
 
 def java_hash_py(s: str) -> int:
@@ -78,13 +84,14 @@ def salt_py(s: str) -> int:
 
 
 # ---------------------------------------------------------------------------
-# JVM-side implementation (the hot path — stays in codegen, no Python).
+# JVM-side implementation (no Python worker).
 # ---------------------------------------------------------------------------
 
 def java_hash(col: Column | str) -> Column:
     """Reference key hash (Utils.scala:85-92; see :func:`java_hash_py`) of
-    a string column, computed entirely with built-in SQL expressions
-    (stays in whole-stage codegen).
+    a string column, computed entirely with built-in SQL expressions.
+    ``aggregate`` is ``CodegenFallback``: the fold is interpreted per
+    element, outside whole-stage codegen.
 
     Fast path (the common case — every key the reference builds is
     ASCII): fold ``ascii(char)`` over ``split(col, '')`` — codepoint ==
@@ -133,25 +140,24 @@ def salt_bucket(col: Column | str) -> Column:
     (Utils.scala:62-64, 83-96): ``abs(hash % 24)``, always in 0..23.
     Computed as ``abs(h) % 24`` on BIGINT (exact abs — no MIN_VALUE
     wraparound at 64 bits), which equals Java's ``Math.abs(int % 24)``
-    for every int32 hash including MIN_VALUE."""
-    h = java_hash(col).cast("long")
+    for every int32 hash including MIN_VALUE.
+
+    The hash of a non-empty ASCII key is ``Objects.hashCode("\\x01" +
+    key)``, one JVM call; the empty key (reference short-circuit to 0)
+    and non-ASCII keys take :func:`java_hash`.  Null in → null out."""
+    c = F.col(col) if isinstance(col, str) else col
+    string_hash = F.reflect(
+        F.lit("java.util.Objects"), F.lit("hashCode"), F.concat(F.lit("\x01"), c)
+    )
+    nonempty_ascii = (F.octet_length(c) == F.length(c)) & (F.length(c) > 0)
+    h = F.when(nonempty_ascii, string_hash.cast("long")).otherwise(
+        java_hash(c).cast("long")
+    )
     return (F.abs(h) % F.lit(SALT_BUCKETS)).cast("tinyint")
 
 
 # ---------------------------------------------------------------------------
-# Pandas-UDF variant (cross-check / template; NOT the default path).
-# ---------------------------------------------------------------------------
-
-@F.pandas_udf(ByteType())
-def salt_bucket_udf(keys: pd.Series) -> pd.Series:
-    """Arrow-batched parity implementation of :func:`salt_bucket` —
-    kept for differential testing of the JVM expression and as the
-    pattern for genuinely Python-only hashes."""
-    return keys.map(lambda s: salt_py(s) if s is not None else None).astype("Int8")
-
-
-# ---------------------------------------------------------------------------
-# Vectorized Arrow path (the THROUGHPUT variant).
+# Vectorized Arrow hash (the curation operators' token hash).
 # ---------------------------------------------------------------------------
 
 #: 31^k mod 2^32 table, grown on demand.
@@ -210,25 +216,11 @@ def java_hash_np(keys: pd.Series) -> np.ndarray:
 @F.pandas_udf(IntegerType())
 def java_hash_vec(keys: pd.Series) -> pd.Series:
     """Arrow-vectorized :func:`java_hash` (bit-exact, see
-    :func:`java_hash_np`): the per-character expression fold is
-    CodegenFallback — interpreted per element, ~2 s per 600k keys on 32
-    cores — while the numpy closed form does the same arithmetic at
-    memory bandwidth.  Null in → null out, matching the expression."""
+    :func:`java_hash_np`): the expression fold is ``CodegenFallback`` and
+    interpreted per element, while the numpy closed form does the same
+    arithmetic for a whole Arrow batch.  Null in → null out, matching the
+    expression."""
     out = pd.Series(java_hash_np(keys), dtype="Int32")
-    out[keys.isna().to_numpy()] = None
-    return out
-
-
-@F.pandas_udf(ByteType())
-def salt_bucket_vec(keys: pd.Series) -> pd.Series:
-    """Arrow-vectorized :func:`salt_bucket` (bit-exact; abs runs on the
-    int64 hash so there is no MIN_VALUE wraparound, same as the
-    expression's bigint abs).  The throughput path for bulk cell
-    builds; the expression form remains for oracle portability and
-    differential testing."""
-    out = pd.Series(
-        np.abs(java_hash_np(keys)) % SALT_BUCKETS, dtype="Int8"
-    )
     out[keys.isna().to_numpy()] = None
     return out
 

@@ -54,7 +54,7 @@ from ..functions.keys import (
     DELIM,
     SALT_BUCKETS,
     row_key,
-    salt_bucket_vec,
+    salt_bucket,
     split_preserve,
 )
 
@@ -81,8 +81,9 @@ def _shape(
 ) -> DataFrame:
     """The cell projection both builders share: row key, qualifier and
     the ``\\x00``-joined value tuple (Utils.scala:203-214).  The salt is
-    ``salt_bucket_vec(row_key)``; each builder adds it where its plan
-    needs it."""
+    ``salt_bucket(row_key)``; each builder adds it where its plan needs it,
+    as a projection of its own.  The optimizer treats the salt as
+    nondeterministic and pushes nothing through that projection."""
     name_col = F.col(col_name) if isinstance(col_name, str) else col_name
     return df.select(
         row_key(*key_cols).alias("row_key"),
@@ -114,17 +115,14 @@ def to_cells(
     # aggregation: once per group (not per input row, like the
     # reference's per-row UDF + max() piggyback at Utils.scala:215-227),
     # and in the post-shuffle stage where parallelism is the partition
-    # count rather than the input-file split count.
-    # Arrow-vectorized salt for the bulk build (bit-exact with the
-    # expression form, cross-checked in tests/test_keys.py): the
-    # per-character expression fold is CodegenFallback and costs ~2s per
-    # 600k keys on 32 cores, while the numpy closed form hashes the
-    # whole batch at memory bandwidth.
+    # count rather than the input-file split count.  The salt is one JVM
+    # String.hashCode call per ASCII key (functions.keys.salt_bucket), so
+    # the build starts no Python worker.
     return (
         _shape(df, key_cols, col_name, value_cols)
         .groupBy("row_key", "col_name")
         .agg(F.array_sort(F.collect_list("cell_value")).alias("values"))
-        .withColumn("salt", salt_bucket_vec(F.col("row_key")))
+        .withColumn("salt", salt_bucket(F.col("row_key")))
     )
 
 
@@ -151,7 +149,7 @@ def to_cells_write_aligned(
     ingest, where groups hold a handful of values); and aggregation
     parallelism is the 24 salts."""
     shaped = _shape(df, key_cols, col_name, value_cols).withColumn(
-        "salt", salt_bucket_vec(F.col("row_key"))
+        "salt", salt_bucket(F.col("row_key"))
     )
     return (
         shaped.repartition(SALT_BUCKETS, "salt")
@@ -348,7 +346,7 @@ def merge_cells(spark: SparkSession, path: str, changes: DataFrame) -> dict:
         "col_name",
         "values",
         "op",
-        salt_bucket_vec(F.col("row_key")).alias("salt"),
+        salt_bucket(F.col("row_key")).alias("salt"),
     ).localCheckpoint(eager=True)  # reused by key-set, upserts AND touched scan
     # DataFrame.unpersist does nothing on a checkpointed frame: release
     # the LogicalRDD's backing RDD directly

@@ -294,19 +294,19 @@ def run_trial() -> dict:
     # ArrowEvalPython stage in a fresh JVM forks one Python worker per
     # core (~2.8 s wall at 32 cores) — session-generic startup in the
     # same class as the codegen framework above, charged to whichever
-    # query happens to hit the Python boundary first (measured:
-    # cell_build first run 7.5 s -> 5.2 s with the pool pre-spawned,
-    # its steady-state being 3.5 s).  One tiny noop-sink pass over the
-    # real salt UDF spawns the full pool.
+    # gated query happens to hit the Python boundary first.  The cell
+    # family salts on the JVM and never reaches it; the token hash
+    # behind dedup_minhash does.  One tiny noop-sink pass over that UDF
+    # spawns the full pool.
     from pyspark.sql import functions as _F
 
     from applications_analytics_midas_hbase_metrics_spark.functions.keys import (
-        salt_bucket_vec,
+        java_hash_vec,
     )
 
     (
         spark.range(0, 100_000, 1, spark.sparkContext.defaultParallelism)
-        .select(salt_bucket_vec(_F.col("id").cast("string")))
+        .select(java_hash_vec(_F.col("id").cast("string")))
         .write.format("noop")
         .mode("overwrite")
         .save()

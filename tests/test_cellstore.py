@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from applications_analytics_midas_hbase_metrics_spark.functions import keys as K
 from applications_analytics_midas_hbase_metrics_spark.operators import cellstore as CS
 from tests.conftest import SF_CORRECT, assert_store_sorted
 
@@ -225,7 +226,7 @@ def test_merge_cells_semantics_and_partition_bound(cells, spark, tmp_path):
             ],
             "row_key string, col_name string, values array<string>",
         ).withColumn(
-            "salt", CS.salt_bucket_vec(F.col("row_key"))
+            "salt", K.salt_bucket(F.col("row_key"))
         )
     )
     assert got.exceptAll(expected).count() == 0
@@ -346,7 +347,7 @@ def test_merge_cells_crash_recovery_rolls_forward(
                 "row_key",
                 "col_name",
                 "values",
-                CS.salt_bucket_vec(F.col("row_key")).alias("salt"),
+                K.salt_bucket(F.col("row_key")).alias("salt"),
             )
         )
         .localCheckpoint(eager=True)
@@ -443,3 +444,33 @@ def test_merge_cells_releases_change_checkpoint_on_error(cells, spark, tmp_path)
     with pytest.raises(AnalysisException):
         CS.merge_cells(spark, str(tmp_path / "no_store"), batch)
     assert _persistent_rdd_ids(spark) - before == set()
+
+
+def _python_eval_nodes(df) -> list[str]:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [n for n in ("ArrowEvalPython", "BatchEvalPython") if n in plan]
+
+
+def test_cell_builds_run_no_python_udf(cells, lineitem, spark, tmp_path, monkeypatch):
+    """The salt is computed on the JVM: neither cell builder nor the
+    change batch merge_cells salts carries a Python-eval node, so a cell
+    build never starts a Python worker."""
+    aligned = CS.to_cells_write_aligned(
+        lineitem, KEY_COLS, F.col("l_partkey"), VAL_COLS
+    )
+    assert _python_eval_nodes(cells) == []
+    assert _python_eval_nodes(aligned) == []
+
+    path = str(tmp_path / "store")
+    CS.write_cells(cells, path, mode="overwrite")
+    checkpointed = []
+    frame_cls = type(cells)  # the concrete (classic) DataFrame class
+    real_checkpoint = frame_cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        checkpointed.append(_python_eval_nodes(self))
+        return real_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    CS.merge_cells(spark, path, _upsert_batch(cells, spark))
+    assert checkpointed == [[]]

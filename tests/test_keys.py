@@ -27,6 +27,7 @@ GOLDEN_HASH = {
     "hello": 127791473,
     "IF123456": 14972097,
     "polygenelubricants": 1303011777,
+    "LT00001\x00202602\x000Qlrfgl": -(2**31),  # Integer.MIN_VALUE, salt 8
 }
 
 CASES = [
@@ -41,6 +42,7 @@ CASES = [
     "x" * 500,
     "trailing\x00",
     "\x00leading",
+    "LT00001\x00202602\x000Qlrfgl",  # hashes to Integer.MIN_VALUE
 ]
 
 
@@ -66,8 +68,8 @@ def test_salt_py_negative_hash():
 
 
 def test_salt_py_min_value_edge(monkeypatch):
-    # No string hashes to Integer.MIN_VALUE, so route boundary int32
-    # hashes through salt_py ITSELF (monkeypatched hash) and pin the
+    # Route boundary int32 hashes through salt_py ITSELF (monkeypatched
+    # hash; only one CASES key reaches MIN_VALUE) and pin the
     # closed form abs(h) % b against Java's Math.abs(h % b) — including
     # MIN_VALUE, where an int32 abs of the hash would overflow but the
     # abs-of-small-remainder (and the 64-bit abs salt_py uses) do not.
@@ -80,23 +82,24 @@ def test_salt_py_min_value_edge(monkeypatch):
 
 
 def test_jvm_expr_matches_python(spark):
-    """Six-way parity: python reference, JVM expression, per-row pandas
-    UDF, and the vectorized Arrow variants must agree byte-exactly."""
-    df = spark.createDataFrame([(s,) for s in CASES], ["k"])
+    """Parity: python reference, JVM expressions (the byte fold and the
+    salt), and the vectorized Arrow hash must agree byte-exactly; a null
+    key salts to null."""
+    df = spark.createDataFrame([(s,) for s in CASES + [None]], "k string")
     rows = df.select(
         "k",
         K.java_hash("k").alias("h"),
         K.salt_bucket("k").alias("s"),
-        K.salt_bucket_udf("k").alias("su"),
         K.java_hash_vec("k").alias("hv"),
-        K.salt_bucket_vec("k").alias("sv"),
     ).collect()
+    assert len(rows) == len(CASES) + 1
     for r in rows:
+        if r.k is None:
+            assert (r.h, r.s, r.hv) == (None, None, None)
+            continue
         assert r.h == K.java_hash_py(r.k), repr(r.k)
         assert r.s == K.salt_py(r.k), repr(r.k)
-        assert r.su == K.salt_py(r.k), repr(r.k)
         assert r.hv == K.java_hash_py(r.k), repr(r.k)
-        assert r.sv == K.salt_py(r.k), repr(r.k)
 
 
 def test_vectorized_hash_parity_random():
