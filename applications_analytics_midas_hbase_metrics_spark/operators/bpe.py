@@ -14,8 +14,9 @@ runs in hundreds of Spark rounds instead of 32k sequential jobs, while
 the learned merge table is EXACTLY the sequential one (the equivalence
 is proved in `_select_batch`'s docstring and differentially tested in
 tests/test_bpe.py).  The driver holds only the merge list; symbol-array
-state is localCheckpointed per round, the same lineage-truncation
-discipline as the connected-components loop.
+state is pinned eagerly per round (the previous round's pin released),
+the same lineage-truncation discipline as the connected-components
+loop.
 
 The in-word rewrite runs as an Arrow-batched pandas UDF — greedy
 leftmost merging is a sequential scan within each (short) word, the
@@ -34,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import pinning
 from .dedup import adjacent_pairs, tokens
 
 def _apply_merges(merge_list: list[tuple[str, str]]):
@@ -192,12 +194,12 @@ def train_bpe_merges(
     actually run — the observable that lets tests prove the batch path
     batched (rounds << merges) instead of silently degenerating to
     width-1 rounds."""
-    state = (
+    state = pinning.pin(
         df.select(F.explode(tokens(text_col)).alias("w"))
         .groupBy("w")
         .agg(F.count("*").cast("bigint").alias("freq"))
-        .select("freq", F.split("w", "").alias("syms"))
-        .localCheckpoint(eager=True)
+        .select("freq", F.split("w", "").alias("syms")),
+        "bpe_state",
     )
     merges: list[tuple[int, str, str, int]] = []
     known_merged: set[str] = set()
@@ -231,9 +233,14 @@ def train_bpe_merges(
         for a, b, cnt in batch:
             merges.append((len(merges), a, b, cnt))
             known_merged.add(a + b)
-        state = state.mapInPandas(
-            _apply_merges([(a, b) for a, b, _ in batch]), state.schema
-        ).localCheckpoint(eager=True)
+        prev, state = state, pinning.pin(
+            state.mapInPandas(
+                _apply_merges([(a, b) for a, b, _ in batch]), state.schema
+            ),
+            "bpe_state",
+        )
+        pinning.release(prev)
+    pinning.release(state)
     if rounds_out is not None:
         rounds_out.append(rounds)
     return merges

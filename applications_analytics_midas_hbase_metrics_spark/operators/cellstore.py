@@ -57,6 +57,7 @@ from ..functions.keys import (
     salt_bucket,
     split_preserve,
 )
+from . import pinning
 
 NEWLINE = "\n"
 
@@ -330,8 +331,8 @@ def merge_cells(spark: SparkSession, path: str, changes: DataFrame) -> dict:
     * ``spark.catalog.refreshByPath`` fences BOTH sides of the swap so
       pinned/cached plans can neither feed the merge a stale snapshot
       nor serve readers the pre-merge files;
-    * the change batch's localCheckpoint is released on every exit,
-      normal or raised, so a per-micro-batch caller holds no blocks.
+    * the change batch's pin is released on every exit, normal or
+      raised, so a per-micro-batch caller holds no blocks.
 
     Returns ``{"touched_salts", "rows_written", "untouched_partitions"}``.
     """
@@ -341,17 +342,18 @@ def merge_cells(spark: SparkSession, path: str, changes: DataFrame) -> dict:
 
     if "op" not in changes.columns:
         changes = changes.withColumn("op", F.lit("U"))
-    ch = changes.select(
-        "row_key",
-        "col_name",
-        "values",
-        "op",
-        salt_bucket(F.col("row_key")).alias("salt"),
-    ).localCheckpoint(eager=True)  # reused by key-set, upserts AND touched scan
-    # DataFrame.unpersist does nothing on a checkpointed frame: release
-    # the LogicalRDD's backing RDD directly
-    ckpt_rdd = ch._jdf.queryExecution().analyzed().rdd()
-    try:
+    with pinning.scope():
+        # reused by key-set, upserts AND touched scan
+        ch = pinning.pin(
+            changes.select(
+                "row_key",
+                "col_name",
+                "values",
+                "op",
+                salt_bucket(F.col("row_key")).alias("salt"),
+            ),
+            "merge_changes",
+        )
         touched_salts = sorted(
             r.salt
             for r in ch.select("salt").distinct().collect()  # driver-ok: <= 24
@@ -415,8 +417,6 @@ def merge_cells(spark: SparkSession, path: str, changes: DataFrame) -> dict:
             "rows_written": rows_written,
             "untouched_partitions": SALT_BUCKETS - len(touched_salts),
         }
-    finally:
-        ckpt_rdd.unpersist(True)
 
 
 def recover_cell_store(path: str, spark: SparkSession | None = None) -> dict:

@@ -26,7 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _self_join_ready, tokens
+from . import pinning
+from .dedup import tokens
 
 
 def nb_quality_train(
@@ -158,7 +159,8 @@ def nb_quality_score(
     base = df.select(
         F.col(id_col).cast("bigint").alias("id"), tokens(text_col).alias("tks")
     )
-    base = _self_join_ready(base, materialize)  # token explode AND final join
+    # token explode AND final join
+    base = pinning.pin(base, "nb_score_tokens", eager=materialize)
     doctoks = (
         base.select("id", F.explode("tks").alias("tk"))
         .groupBy("id", "tk")

@@ -35,81 +35,10 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
 from ..functions.keys import java_hash, java_hash_py, java_hash_vec
+from . import pinning
 
 # Mersenne prime for the affine minhash permutations (universal hashing).
 _MH_PRIME = 2_147_483_647
-
-
-#: Frames persisted by lazy-mode (``materialize=False``) pipelines.
-#: Lazy mode exists for plan inspection: persists mark the self-join
-#: reuse points so the audited plan matches what the eager path runs,
-#: but some of those handles are internal to the operator (the bands
-#: frame) and unreachable by the caller — they are recorded here so a
-#: lazy caller can release every pinned cache with
-#: :func:`release_lazy_pins` instead of leaking blocks for the life of
-#: the session.
-_LAZY_PINS: list[DataFrame] = []
-
-
-def release_lazy_pins() -> None:
-    """Unpersist every frame pinned by a ``materialize=False`` pipeline
-    (call after collecting/inspecting the lazy plan).  Blocking, so
-    cache-count assertions and baselines never race an in-flight async
-    removal (the cost is a few ms per released pin)."""
-    while _LAZY_PINS:
-        _LAZY_PINS.pop().unpersist(blocking=True)
-
-
-def _self_join_ready(
-    df: DataFrame, materialize: bool, keep_partitioning: bool = False
-) -> DataFrame:
-    """Prepare a frame that is consumed on BOTH sides of a self-join:
-    without materialization the entire upstream pipeline (signature
-    build, fingerprinting, projections) executes once per side —
-    exchange reuse across a self-join is not guaranteed.  The prepared
-    bucket frames are tiny (ids + bucket keys), so an eager
-    localCheckpoint is the cheap way to run the pipeline exactly once;
-    in lazy mode (plan inspection) a persist marks the reuse point
-    instead, recorded in :data:`_LAZY_PINS` so the caller can release
-    it via :func:`release_lazy_pins`.
-
-    Size-aware flavor (round 16, ADVICE r15): the default
-    localCheckpoint unrolls MEMORY_AND_DISK *deserialized*, the exact
-    flavor the round-14 rung measured convoying all tasks on the
-    UnifiedMemoryManager lock above ~100 MB — and some callers' frames
-    are NOT bounded-small (bm25_scores' tf is O(queries × doc-freq)).
-    When Catalyst's plan-time estimate crosses the same threshold
-    FootprintPin uses, the pin streams to DISK_ONLY serialized
-    instead; semantics identical either way."""
-    if materialize:
-        if keep_partitioning:
-            # A checkpointed frame reports UnknownPartitioning in
-            # Spark 4.1 (measured: LogicalRDD drops the child's
-            # outputPartitioning), which would erase the co-partition
-            # a caller just paid an exchange for.  InMemoryRelation
-            # preserves it, so a partitioning-bearing pin rides a
-            # lineage-kept DISK_ONLY persist instead; registered in
-            # _LAZY_PINS so callers/tests can release it — the branch
-            # only fires in the large-frame regime where the pin is a
-            # deliberate job-lifetime artifact.
-            from pyspark import StorageLevel
-
-            df = df.persist(StorageLevel.DISK_ONLY)
-            _LAZY_PINS.append(df)
-            return df
-        from .pinning import SMALL_FRAME_BYTES, plan_size_estimate
-
-        est = plan_size_estimate(df)
-        if est is None or est >= SMALL_FRAME_BYTES:
-            from pyspark import StorageLevel
-
-            return df.localCheckpoint(
-                eager=True, storageLevel=StorageLevel.DISK_ONLY
-            )
-        return df.localCheckpoint(eager=True)
-    df = df.persist()
-    _LAZY_PINS.append(df)
-    return df
 
 
 # ---------------------------------------------------------------------------
@@ -449,8 +378,8 @@ def lsh_near_duplicates(
     DAG and a long-lived session does not accumulate cached blocks; on
     a cluster deployment a persisted signature table serves the same
     role.  ``materialize=False`` returns the lazy plan (for inspection
-    / custom caching) — the internal signature persists stay cached;
-    release them with :func:`release_lazy_pins`.
+    / custom caching); its internal signature persists live in the
+    caller's pin scope (operators/pinning.py).
 
     The whole pipeline is HOF-free by construction: shingling is one
     regex pass, element hashing happens AFTER the explode as a plain
@@ -464,8 +393,10 @@ def lsh_near_duplicates(
     # (collect_set + 64 mins in one ObjectHashAggregate) exhausted a
     # 252 GB disk at the mult=150 rung.  hs feeds the mins build once
     # and the verify joins twice; sig feeds the band self-join.
-    hs = _self_join_ready(_hset_frame(base), materialize)
-    sig = _self_join_ready(_mins_frame(hs, num_hashes), materialize)
+    hs = pinning.pin(_hset_frame(base), "lsh_hash_sets", eager=materialize)
+    sig = pinning.pin(
+        _mins_frame(hs, num_hashes), "lsh_minima", eager=materialize
+    )
     bands = _band_frame(sig, num_hashes, rows_per_band)
 
     a = bands.alias("a")
@@ -491,7 +422,7 @@ def lsh_near_duplicates(
         if chunked is not None:
             return chunked
     verified = _verify_pairs(cand, hs, hs, threshold)
-    return verified.localCheckpoint(eager=True) if materialize else verified
+    return pinning.pin(verified, "lsh_verified") if materialize else verified
 
 
 #: Scratch budget per exact-verify pass, bytes.  The verify joins ship
@@ -501,9 +432,10 @@ def lsh_near_duplicates(
 #: 106k -> 419k -> 1.65M pairs at 50k/100k/200k docs, ~3e-5 of all
 #: pairs), so the single-shuffle payload is unbounded even though the
 #: verified OUTPUT is tiny.  Above the budget the verify runs in
-#: deterministic pair-hash chunks, each its own job, so peak scratch is
-#: budget-bounded instead of payload-bounded.  Env-tunable for cluster
-#: deployments with real shuffle capacity.
+#: deterministic pair-hash chunks, each its own job.  The budget bounds
+#: the payload of one chunk's join; that chunk's scratch (shuffle files
+#: of both exchanges) can reach about twice the budget.  Env-tunable for
+#: cluster deployments with real shuffle capacity.
 VERIFY_CHUNK_BYTES = int(
     float(os.environ.get("SPARK_GRAFT_VERIFY_CHUNK_GB", "24")) * (1 << 30)
 )
@@ -513,52 +445,49 @@ def _verify_chunked(
     cand: DataFrame, hs: DataFrame, threshold: float
 ) -> DataFrame | None:
     """Budget-bounded exact verification, engaged only in the large
-    regime: returns ``None`` when the projected verify payload fits
-    :data:`VERIFY_CHUNK_BYTES` (the caller then keeps the one-pass plan
-    — every test-SF plan is unchanged by construction).
+    regime: returns ``None`` when the hash-set frame's plan estimate is
+    below :data:`pinning.SMALL_FRAME_BYTES` (the caller then keeps the
+    one-pass plan — every test-SF plan is unchanged by construction).
 
-    Above the budget: pin the candidate table (narrow — 28 bytes/pair),
-    measure the EXACT payload from its carried set sizes, split the
-    pairs into ``K = ceil(payload / budget)`` deterministic chunks by
-    pair hash, and verify each chunk as its own job against a
-    partition-pinned hash-set frame (repartitioned by id once; the
-    lineage-kept persist preserves the partitioning, so no chunk
-    re-exchanges the 8+ byte/element set table — only the chunk's own
-    pair×array rows move).  Chunk results are tiny and checkpointed;
-    finished chunks drop their lineage so the ContextCleaner can
-    reclaim their shuffle files while later chunks run."""
-    from pyspark import StorageLevel
-
-    from .pinning import SMALL_FRAME_BYTES, plan_size_estimate
-
-    est = plan_size_estimate(hs)
-    if est is None or est < SMALL_FRAME_BYTES:
+    Above it: pin the candidate table (narrow — 28 bytes/pair), measure
+    the EXACT payload from its carried set sizes, split the pairs into
+    ``K = ceil(payload / budget)`` deterministic chunks by pair hash,
+    and verify each chunk as its own job against a partition-pinned
+    hash-set frame (repartitioned by id once; the lazy pin keeps the
+    partitioning, so no chunk re-exchanges the 8+ byte/element set
+    table — only the chunk's own pair×array rows move).  The chunk
+    results are tiny eager pins handed to the caller's scope; the
+    candidate and hash-set pins are released when the loop ends,
+    normally or by a failed chunk job."""
+    est = pinning.plan_size_estimate(hs)
+    if est is None or est < pinning.SMALL_FRAME_BYTES:
         return None
-    cand = cand.localCheckpoint(eager=True)
-    payload = cand.agg(
-        F.sum((F.col("sz_a") + F.col("sz_b")).cast("bigint"))
-    ).first()[0]
-    payload = (payload or 0) * 8
-    k = -(-payload // VERIFY_CHUNK_BYTES)
-    if k <= 1:
-        out = _verify_pairs(cand, hs, hs, threshold)
-        return out.localCheckpoint(eager=True)
-    hs = hs.repartition("id").persist(StorageLevel.DISK_ONLY)
-    chunk_col = F.pmod(F.xxhash64("id_a", "id_b"), F.lit(int(k)))
-    parts = []
-    jvm_gc = None
-    for i in range(int(k)):
-        piece = _verify_pairs(
-            cand.filter(chunk_col == i), hs, hs, threshold
-        ).localCheckpoint(eager=True)
-        parts.append(piece)
-        if jvm_gc is None:
-            jvm_gc = piece.sparkSession.sparkContext._jvm.System.gc
-        # nudge the driver GC so the finished chunk's shuffle
-        # dependencies hit the ContextCleaner before the next chunk
-        # starts writing — this is what keeps peak scratch at ~budget
-        jvm_gc()
-    hs.unpersist()
+    with pinning.scope() as chunks:
+        cand = pinning.pin(cand, "verify_candidates")
+        payload = cand.agg(
+            F.sum((F.col("sz_a") + F.col("sz_b")).cast("bigint"))
+        ).first()[0]
+        payload = (payload or 0) * 8
+        k = int(-(-payload // VERIFY_CHUNK_BYTES))
+        if k <= 1:
+            verified = _verify_pairs(cand, hs, hs, threshold)
+            parts = [pinning.pin(verified, "verified")]
+        else:
+            hs = pinning.pin(
+                hs.repartition("id"), "verify_hash_sets", eager=False
+            )
+            chunk_col = F.pmod(F.xxhash64("id_a", "id_b"), F.lit(k))
+            parts = [
+                pinning.pin(
+                    _verify_pairs(
+                        cand.filter(chunk_col == i), hs, hs, threshold
+                    ),
+                    f"verify_chunk_{i}",
+                )
+                for i in range(k)
+            ]
+        for piece in parts:
+            chunks.keep(piece)
     out = parts[0]
     for piece in parts[1:]:
         out = out.unionAll(piece)
@@ -735,8 +664,8 @@ def lsh_pairs_between(
     core (same band hashes, same size-ratio prefilter).
 
     Each signature frame is consumed TWICE (the band join and the
-    exact-verify join), so by default both are materialized via
-    :func:`_self_join_ready` — otherwise the full shingle/explode/
+    exact-verify join), so by default both are pinned
+    (operators/pinning.py) — otherwise the full shingle/explode/
     minhash aggregate upstream of a lazily-built frame executes once
     per consumer, defeating the persisted-signature cost story.  A
     caller that passes frames already read from a stored signature
@@ -748,11 +677,11 @@ def lsh_pairs_between(
     the in-session analogue of the persisted history table."""
     sig_left = (
         pin_left(sig_left) if pin_left is not None
-        else _self_join_ready(sig_left, materialize)
+        else pinning.pin(sig_left, "lsh_sig_left", eager=materialize)
     )
     sig_right = (
         pin_right(sig_right) if pin_right is not None
-        else _self_join_ready(sig_right, materialize)
+        else pinning.pin(sig_right, "lsh_sig_right", eager=materialize)
     )
     a = _band_frame(sig_left, num_hashes, rows_per_band).alias("a")
     b = _band_frame(sig_right, num_hashes, rows_per_band).alias("b")
@@ -867,7 +796,7 @@ def simhash_pairs_from_fingerprints(
         ).alias("_b"),
     ).select("id", "simhash", "_b.band_id", "_b.band_val")
     # both self-join sides read the fingerprint pipeline — run it once
-    bands = _self_join_ready(bands, materialize)
+    bands = pinning.pin(bands, "simhash_bands", eager=materialize)
     a, b = bands.alias("a"), bands.alias("b")
     ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
     return (
@@ -1035,7 +964,7 @@ def embedding_near_duplicates(
     # the signature frame feeds BOTH self-join sides; now that the
     # projection is a python-worker round trip (not pure arithmetic),
     # run it once (small frame: id + vector + 8-byte sig)
-    signed = _self_join_ready(signed, materialize)
+    signed = pinning.pin(signed, "hyperplane_sigs", eager=materialize)
 
     # bucket keys: the signature itself plus every one-bit flip
     probes = F.array(
@@ -1091,4 +1020,6 @@ def embedding_near_duplicates(
         .filter(F.col("cos") >= threshold)
         .select("id_a", "id_b", F.round("cos", 6).alias("cos"))
     )
-    return verified.localCheckpoint(eager=True) if materialize else verified
+    if not materialize:
+        return verified
+    return pinning.pin(verified, "cosine_verified")

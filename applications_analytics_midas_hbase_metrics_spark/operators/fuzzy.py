@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from . import pinning
+
 
 def deletion_neighborhood(col: Column | str) -> Column:
     """Array of the term plus each single-character-deletion variant
@@ -154,11 +156,11 @@ def canonicalize_vocab(
 
     from .graph import connected_components
 
-    v = (
+    v = pinning.pin(
         vocab.select(F.col(term_col).alias("term"))
         .filter(F.col("term").isNotNull() & (F.length("term") > 0))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "fuzzy_vocab",
     )
     if id_fn == "rank":
         # Ranks the distinct VOCAB (dictionary-sized by construction,

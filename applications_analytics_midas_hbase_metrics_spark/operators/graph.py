@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import scoped_sql_confs
+from . import pinning
 
 #: Target edges per shuffle partition inside the propagation loop.
 _EDGES_PER_PARTITION = 50_000
@@ -72,9 +73,13 @@ def connected_components(
     # twice.  Pair sets are small relative to the corpus, so the eager
     # checkpoint is cheap; it also truncates the caller's lineage out of
     # every superstep plan.
-    e = edges.select(
-        F.col(src).cast("bigint").alias("a"), F.col(dst).cast("bigint").alias("b")
-    ).localCheckpoint(eager=True)
+    e = pinning.pin(
+        edges.select(
+            F.col(src).cast("bigint").alias("a"),
+            F.col(dst).cast("bigint").alias("b"),
+        ),
+        "cc_edges",
+    )
     # count() on the checkpointed frame is a cheap cached scan; it sizes
     # the loop's shuffle width to the graph, not the session default
     spark = e.sparkSession
@@ -91,8 +96,9 @@ def connected_components(
     # and a distinct here would cost a full extra shuffle before the
     # loop even starts
     und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    und = und.persist()
+    und = pinning.pin(und, "cc_undirected", eager=False)
     labels: DataFrame | None = None
+    superstep: DataFrame | None = None
 
     with _loop_confs(spark, width):
         for it in range(max_iter):
@@ -128,22 +134,28 @@ def connected_components(
             # contributes exactly one distinct non-null "old" value), so
             # convergence is read off the materialized result with a cheap
             # scan — no second join+count per superstep.
-            # localCheckpoint, not persist: each superstep's plan would
+            # an eager pin, not a lazy one: each superstep's plan would
             # otherwise embed the whole previous lineage, and analysis time
             # grows exponentially with iteration count (the classic
-            # iterative-DataFrame trap).
-            new_labels = (
+            # iterative-DataFrame trap).  It truncates the lineage, so the
+            # previous superstep's pin is dead once this one lands.
+            new_labels = pinning.pin(
                 combined.groupBy("id").agg(
                     F.min("label").alias("label"), F.max("old").alias("old")
-                )
-            ).localCheckpoint(eager=True)
+                ),
+                "cc_superstep",
+            )
+            if superstep is not None:
+                pinning.release(superstep)
+            superstep = new_labels
             changed = (
                 new_labels.filter(F.col("label") != F.col("old")).limit(1).count()
             )
             labels = new_labels.select("id", "label")
             if changed == 0:
                 break
-    und.unpersist()
+    pinning.release(und)
+    pinning.release(e)
     if strict and changed != 0:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} supersteps "
@@ -263,7 +275,7 @@ def pagerank(
     the dst aggregation; nothing is ever all-pairs and the rank vector
     never leaves the cluster.  The driver loop only BUILDS the plan
     (n_iter is a small constant); for larger budgets pass
-    ``checkpoint_every`` to localCheckpoint the rank vector every k
+    ``checkpoint_every`` to pin the rank vector eagerly every k
     rounds, bounding lineage/plan growth exactly like the CC loop
     (value-identical — checkpointing only truncates lineage; pinned in
     tests/test_graph.py).
@@ -284,6 +296,7 @@ def pagerank(
         "node", (F.lit(1.0) / F.col("n")).alias("rank")
     )
     base = F.lit(1.0 - damping) / F.col("n")
+    pinned: DataFrame | None = None
     for i in range(n_iter):
         contrib = (
             e.join(deg, "src")
@@ -309,7 +322,11 @@ def pagerank(
             )
         )
         if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
+            # the eager pin truncates the lineage: the previous one is dead
+            ranks = pinning.pin(ranks, "pagerank_ranks")
+            if pinned is not None:
+                pinning.release(pinned)
+            pinned = ranks
     return ranks
 
 
@@ -417,38 +434,42 @@ def bfs_distances(
     leaves the cluster."""
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
-    e = edges.select(
-        F.col(src).cast("bigint").alias("src"),
-        F.col(dst).cast("bigint").alias("dst"),
-    ).localCheckpoint(eager=True)
+    e = pinning.pin(
+        edges.select(
+            F.col(src).cast("bigint").alias("src"),
+            F.col(dst).cast("bigint").alias("dst"),
+        ),
+        "bfs_edges",
+    )
     spark = e.sparkSession
     width = max(2, min(
         spark.sparkContext.defaultParallelism,
         e.count() // _EDGES_PER_PARTITION + 1,
     ))
-    frontier = (
+    frontier = pinning.pin(
         seeds.select(F.col(node).cast("bigint").alias("node"))
         .distinct()
-        .withColumn("dist", F.lit(0).cast("bigint"))
-        .localCheckpoint(eager=True)
+        .withColumn("dist", F.lit(0).cast("bigint")),
+        "bfs_level",
     )
     levels = [frontier]
     visited = frontier
     with _loop_confs(spark, width):
         for h in range(1, max_hops + 1):
-            nxt = (
+            nxt = pinning.pin(
                 frontier.join(e, frontier["node"] == e["src"])
                 .select(e["dst"].alias("node"))
                 .distinct()
                 .join(visited, "node", "left_anti")
-                .withColumn("dist", F.lit(h).cast("bigint"))
-                .localCheckpoint(eager=True)
+                .withColumn("dist", F.lit(h).cast("bigint")),
+                "bfs_level",
             )
             if nxt.isEmpty():
                 break
             levels.append(nxt)
             visited = visited.union(nxt)
             frontier = nxt
+    pinning.release(e)
     out = levels[0]
     for lv in levels[1:]:
         out = out.union(lv)

@@ -1,71 +1,76 @@
-"""Footprint-aware pin selection — the round-14 on-disk rung's lesson
-turned into code.
+"""One pin lifecycle: the only code that materializes a frame for reuse
+or releases one.
 
-A multi-consumer frame in a composed pipeline needs a "pin" so its
-upstream executes once, not once per consumer.  The rung (SCALE.md
-round 14, 1.68 GiB input) measured BOTH naive flavors failing at GB
-inputs:
+A frame read by more than one consumer is pinned so its upstream runs
+once.  :func:`pin` picks the flavor from ``eager`` and Catalyst's
+plan-time size estimate against :data:`SMALL_FRAME_BYTES`:
 
-* **eager ``localCheckpoint`` everywhere** — its MEMORY_AND_DISK
-  *deserialized* blocks serialize all tasks on the
-  UnifiedMemoryManager unroll-reservation lock once a pinned frame
-  stops fitting trivially (jstack'd convoy, >1 h, killed);
-* **``DISK_ONLY`` persist everywhere** — streams in parallel (convoy
-  gone) but materializes every frame, including PRE-reduction frames
-  like the exact-substring shingle keys at ~40× corpus bytes (60 GiB
-  on a 1.68 GiB input, killed at 84% disk).
+===========  ======================  ================================
+``eager``    estimate below it       estimate at/above it, or unknown
+===========  ======================  ================================
+True         ``localCheckpoint``     ``localCheckpoint(DISK_ONLY)``
+False        ``persist()``           ``persist(DISK_ONLY)``
+===========  ======================  ================================
 
-The operators were right; pin *selection* was the scale-killer.  The
-policy here encodes the rung's criterion:
+The threshold is the convoy criterion: an in-memory pin unrolls its
+blocks deserialized, and once a frame stops fitting trivially every task
+serializes on the unroll-reservation lock (a jstack'd convoy that ran
+over an hour on a 1.68 GiB input, SCALE.md round 14); DISK_ONLY streams
+serialized blocks in parallel.  Unknown goes to disk, since the convoy,
+not the disk write, is the failure guarded against.
 
-* **post-reduction frames** (survivor manifests, pair tables, capped
-  corpora — anything ≤ ~corpus-sized): pin, choosing the flavor by a
-  plan-time size estimate — eager ``localCheckpoint`` for demonstrably
-  small frames (its deserialized unroll is the fastest pin when the
-  frame trivially fits), eager ``DISK_ONLY`` *serialized* persist
-  above the threshold (out of executor memory, parallel write path,
-  lineage KEPT so a lost executor recomputes instead of failing);
-* **pre-reduction frames** (shingle keys, exploded positions —
-  anything ∝ corpus tokens or bigger): NEVER pin; their producing
-  projection is narrow, so each consumer recomputes it from the
-  nearest *pinned post-reduction ancestor* — two map-side scans beat
-  one 40×-input materialization at any scale.
+Eager pins truncate the plan, so consumers' plans stay constant-size (a
+lineage-kept persist nests its producer's plan once per reader, and
+rendering that down a pinned chain cost 209 s of driver CPU at sf0.001),
+but a released eager pin cannot recompute: release one only after every
+consumer has materialized.  Lazy pins keep lineage; they serve
+plan-inspection mode (``materialize=False``), the registry's keyed pins
+(materialized by the query's own action), and frames that must keep
+their ``outputPartitioning``, which a checkpoint drops (Spark 4.1's
+``LogicalRDD`` reports ``UnknownPartitioning``).
 
-The size estimate is Catalyst's ``optimizedPlan().stats()`` — free
-(pure stat propagation, no execution), and self-correcting along a
-pinned chain: cache substitution runs before the optimizer, so a frame
-downstream of an already-materialized persist estimates from the REAL
-cached size, not the propagated guess.  Unknown or failed estimates
-pin to disk — the conservative direction (the convoy, not the disk
-write, is the failure mode the estimate guards).
+Scopes.  Every pin is recorded (label, estimate, flavor, release handle)
+in the calling thread's innermost scope: an open ``with scope():``
+block, else the registry query scope the thread last entered, else a
+default scope that only :func:`release_all` drains.  Stacks are per
+thread because a streaming ``foreachBatch`` runs on a callback thread.
+A ``with`` scope releases its pins on exit, normal or raised;
+:meth:`Scope.keep` first hands a result pin to the enclosing scope.
 
-Disk pins register in :data:`operators.dedup._LAZY_PINS` so the
-existing ``release_lazy_pins()`` call sites (plan audit, scale
-harnesses) release them; within a query run they are also released by
-Spark's ContextCleaner when the driver references drop.
+Query scopes.  Each registry entry (:func:`enter_query`) opens a scope
+and releases the one two entries back, so a query's pins outlive its
+action and the next query can :func:`claim` them by key.  A claim adopts
+the previous query's whole scope, so a claimed frame never reads a
+released ancestor (e.g. a keyed persist over ``connected_components``
+reads the loop's checkpoints).
+
+Release.  A persist is released with ``DataFrame.unpersist``.  A
+checkpoint is not a CacheManager entry — ``unpersist`` on it is a
+silent no-op that leaves its blocks until a JVM GC reaches the
+ContextCleaner — so it is released through its backing RDD, recorded at
+pin time.  No release waits on GC.
 """
 
 from __future__ import annotations
 
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
+from dataclasses import dataclass
+
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
-from .dedup import _LAZY_PINS
-
-#: Flip threshold between eager localCheckpoint and DISK_ONLY persist,
-#: from SCALE.md's measured criterion ("above ~100 MB of corpus text
-#: per pinned frame, use disk").
+#: Flavor threshold, from SCALE.md's measured criterion ("above ~100 MB
+#: of corpus text per pinned frame, use disk").
 SMALL_FRAME_BYTES = 100 << 20
 
 
 def plan_size_estimate(df: DataFrame) -> int | None:
     """Catalyst's size-in-bytes estimate of ``df``'s optimized plan, or
-    ``None`` when the estimate is unavailable (Connect-style sessions
-    without ``_jdf``, analysis errors).  Pure stat propagation — no
-    job runs.  Estimates skew LARGE through joins (multiplicative
-    propagation) and unknown-width strings, which is the safe skew for
-    pin selection: an over-estimate costs a disk write, an
-    under-estimate would re-create the unroll convoy."""
+    ``None`` when it is unavailable (analysis errors, sessions without
+    ``_jdf``).  Pure stat propagation — no job runs.  Downstream of an
+    existing pin the estimate reads the pin's real size."""
     try:
         return int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
@@ -74,180 +79,222 @@ def plan_size_estimate(df: DataFrame) -> int | None:
         return None
 
 
-def recompute_pin(df: DataFrame) -> DataFrame:
-    """The explicit NO-pin: hand this as a ``pin=`` argument to mark a
-    pre-reduction frame as recompute-from-lineage (each consumer
-    re-runs the narrow producing projection from the nearest pinned
-    ancestor).  Identity on purpose — the name documents the choice at
-    the call site."""
-    return df
+@dataclass
+class Pin:
+    """One pin decision.  ``frame`` and ``rdd`` are dropped on release;
+    the record stays in its scope until the scope closes."""
+
+    label: str
+    est: int | None
+    flavor: str  # checkpoint | checkpoint_disk | persist | persist_disk
+    frame: DataFrame | None
+    rdd: object | None  # a checkpoint's backing JVM RDD
+
+    @property
+    def live(self) -> bool:
+        return self.frame is not None
+
+    @property
+    def disk(self) -> bool:
+        return self.flavor.endswith("_disk")
 
 
-class FootprintPin:
-    """Per-site pin policy for composed pipelines: call :meth:`post`
-    at post-reduction pin sites and pass :meth:`pre` (an alias of
-    :func:`recompute_pin`) into operators that would otherwise pin
-    pre-reduction frames.  Tracks its disk pins for :meth:`release`.
+def _detach(pins: list[Pin]) -> list[tuple]:
+    """Take the release handles of ``pins`` (under :data:`_LOCK`), so
+    each pin is released exactly once."""
+    handles = [(p.frame, p.rdd) for p in pins if p.live]
+    for p in pins:
+        p.frame = p.rdd = None
+    return handles
 
-    ``small_bytes`` flips the post-reduction flavor; ``None`` disables
-    the checkpoint fast path entirely (every post pin goes to disk —
-    the paranoid setting for rungs where even "small" estimates are
-    distrusted).
 
-    ``lineage`` selects the large-frame flavor (round 16).  Default
-    ``False``: eager ``localCheckpoint(storageLevel=DISK_ONLY)`` —
-    the same streaming serialized disk-write path as the round-15
-    persist (no MEMORY_AND_DISK unroll convoy), but the logical plan
-    TRUNCATES at the pin.  With the lineage-kept persist, every
-    consumer's plan nests the producer's full cached plan once per
-    ``InMemoryTableScan`` reference (SparkPlanInfo.fromSparkPlan
-    recurses into ``relation.cachedPlan`` per occurrence, no
-    memoization), so plan-info node count multiplies down a pinned
-    chain — measured 209 s build + 276 s collect of pure DRIVER CPU
-    at sf0.001 in all-disk mode, a data-size-independent tax the
-    composed pipeline paid again at the rung (guide §7.3: planning/
-    render time as the bottleneck; §5 endorses localCheckpoint to cut
-    lineage when the intermediate's fault tolerance is not critical).
-    ``lineage=True`` restores the round-15 ``persist(DISK_ONLY)`` with
-    lineage kept — a lost executor recomputes instead of failing the
-    query — for deployments that want that trade; the rung A/Bs both.
-    NOTE with ``lineage=False`` a released pin CANNOT recompute: the
-    pipeline's release schedule must only drop frames whose every
-    consumer has materialized (the stage-incremental drop accounting
-    in queries_curation guarantees this ordering)."""
-
-    def __init__(
-        self,
-        small_bytes: int | None = SMALL_FRAME_BYTES,
-        lineage: bool = False,
-    ):
-        self.small_bytes = small_bytes
-        self.lineage = lineage
-        self.disk_pins: list[DataFrame] = []
-        #: (site#, estimated bytes or None, flavor, label) — audit
-        #: trail the scale harness prints so a rung run shows WHICH
-        #: sites went to disk and what the estimator believed.
-        self.decisions: list[tuple[int, int | None, str, str | None]] = []
-        #: label -> post-materialization executed-plan string for
-        #: labelled pin sites, captured only when ``capture_plans`` is
-        #: set (tests assert operator shapes — e.g. the manifest's
-        #: drop-accounting anti joins — that an eager pin removes from
-        #: the FINAL executed plan; capturing here keeps them
-        #: assertable).  Off by default: rung-scale plan strings are
-        #: MBs each.
-        self.capture_plans = False
-        self.plans: dict[str, str] = {}
-        #: id(frame) -> JVM RDD handle for ckpt_disk pins.
-        #: ``DataFrame.unpersist`` is a CacheManager lookup, which a
-        #: localCheckpoint'ed frame is NOT in — calling it is a silent
-        #: no-op and the checkpoint blocks survive until JVM GC +
-        #: ContextCleaner get around to them (measured: every block
-        #: still live after release() at sf0.001).  Deterministic
-        #: release needs the LogicalRDD's backing RDD unpersisted
-        #: directly; analyzed() of the frame localCheckpoint returned
-        #: IS that LogicalRDD.
-        self._ckpt_rdds: dict[int, object] = {}
-
-    def _capture(self, df: DataFrame, label: str | None) -> None:
-        if label is None or not self.capture_plans:
-            return
-        try:
-            self.plans[label] = (
-                df._jdf.queryExecution().executedPlan().toString()
-            )
-        except Exception:  # noqa: BLE001 — capture is best-effort
-            self.plans[label] = ""
-
-    def post(self, df: DataFrame, label: str | None = None) -> DataFrame:
-        """Pin a post-reduction frame: eager localCheckpoint when the
-        plan-time estimate is demonstrably small, else eager DISK_ONLY
-        serialized persist with lineage kept."""
-        est = plan_size_estimate(df)
-        if (
-            self.small_bytes is not None
-            and est is not None
-            and est < self.small_bytes
-        ):
-            self.decisions.append(
-                (len(self.decisions), est, "checkpoint", label)
-            )
-            out = df.localCheckpoint(eager=True)
-            # capture AFTER the eager checkpoint: executing df's plan
-            # finalizes its AQE tree, so the string shows the join
-            # strategies that actually ran, not the pre-runtime guess
-            self._capture(df, label)
-            return out
-        if self.lineage:
-            self.decisions.append((len(self.decisions), est, "disk", label))
-            out = df.persist(StorageLevel.DISK_ONLY)
-            out.count()  # eager: every consumer reads the store
-            self._capture(df, label)
-            self.disk_pins.append(out)
-            _LAZY_PINS.append(out)
-            return out
-        # default large-frame flavor: eager DISK_ONLY local checkpoint
-        # — identical serialized streaming write, plan truncated at
-        # the pin (see class docstring for the measured render tax)
-        self.decisions.append((len(self.decisions), est, "ckpt_disk", label))
-        out = df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-        self._capture(df, label)
-        self.disk_pins.append(out)
-        try:
-            self._ckpt_rdds[id(out)] = (
-                out._jdf.queryExecution().analyzed().rdd()
-            )
-        except Exception:  # noqa: BLE001 — release degrades to the
-            pass  # GC path; footprint accounting loses determinism only
-        return out
-
-    def _unpersist(self, df: DataFrame, blocking: bool) -> None:
-        jr = self._ckpt_rdds.pop(id(df), None)
-        if jr is not None:
-            jr.unpersist(blocking)
+def _unpersist(handles: list[tuple], blocking: bool) -> None:
+    for frame, rdd in handles:
+        if rdd is not None:
+            rdd.unpersist(blocking)
         else:
-            df.unpersist(blocking=blocking)
+            frame.unpersist(blocking)
 
-    def is_disk(self, df: DataFrame) -> bool:
-        """True when ``df`` is one of this policy's LIVE disk pins
-        (either flavor: lineage-kept persist or DISK_ONLY local
-        checkpoint) — i.e. holding it costs real pinned footprint and
-        an early release (with the matching eager drop-frame pin)
-        pays.  False for small checkpoint-flavored pins and released
-        frames, where stage-incremental accounting would only add
-        eager jobs."""
-        return any(p is df for p in self.disk_pins)
 
-    #: Pre-reduction sites: never pin (see module docstring).
-    pre = staticmethod(recompute_pin)
+class Scope:
+    """The pins made while this scope was a thread's innermost one, plus
+    the registry keys bound to them."""
 
-    def release(self) -> None:
-        """Unpersist this policy's disk pins (blocking).  Under
-        ``lineage=True`` this is safe while downstream results are
-        still lazy (a post-release action recomputes); under the
-        default ``ckpt_disk`` flavor the blocks are gone for good —
-        call only after every consumer has materialized."""
-        while self.disk_pins:
-            df = self.disk_pins.pop()
-            if df in _LAZY_PINS:
-                _LAZY_PINS.remove(df)
-            self._unpersist(df, blocking=True)
+    def __init__(self, parent: Scope | None = None):
+        self.parent = parent
+        self.pins: list[Pin] = []
+        self.keys: dict[str, DataFrame] = {}
+        self.closed = False
 
-    def release_one(self, df: DataFrame) -> None:
-        """Release a single disk pin EARLY — the caller asserts every
-        consumer of ``df`` has already materialized, so holding its
-        blocks only inflates the pipeline's peak pinned footprint.
-        No-op for small checkpoint-flavored pins (nothing to
-        unpersist) and for frames this policy never pinned, so call
-        sites stay correct under any flavor mix.  Under
-        ``lineage=True`` a consumer the caller missed recomputes
-        instead of failing; under the default ``ckpt_disk`` flavor it
-        would FAIL — the release schedule's consumers-first ordering
-        is load-bearing and is what the rung + pin-mode equivalence
-        tests prove."""
-        for i, p in enumerate(self.disk_pins):
-            if p is df:
-                self.disk_pins.pop(i)
-                if df in _LAZY_PINS:
-                    _LAZY_PINS.remove(df)
-                self._unpersist(df, blocking=False)
+    def keep(self, df: DataFrame) -> None:
+        """Hand the live pin of ``df`` to the enclosing scope, so it
+        outlives this one."""
+        with _LOCK:
+            rec = _find(df, [self])
+            if rec is None:
                 return
+            self.pins.remove(rec)
+            dest = self.parent
+            if dest is None or dest.closed:
+                dest = _DEFAULT
+            dest.pins.append(rec)
+
+    def _drain(self) -> list[tuple]:
+        handles = _detach(self.pins)
+        self.pins, self.keys = [], {}
+        return handles
+
+    def _close(self) -> None:
+        with _LOCK:
+            self.closed = True
+            _OPEN.discard(self)
+            handles = self._drain()
+        _unpersist(handles, blocking=False)
+
+
+_LOCK = threading.RLock()
+_THREAD = threading.local()
+_DEFAULT = Scope()
+#: Every scope that may hold live pins.
+_OPEN: set[Scope] = {_DEFAULT}
+#: Registry query scopes, oldest first; at most two.
+_GENS: list[Scope] = []
+
+
+def _current() -> Scope:
+    stack = getattr(_THREAD, "stack", None)
+    if stack:
+        return stack[-1]
+    query = getattr(_THREAD, "query", None)
+    if query is not None and not query.closed:
+        return query
+    return _DEFAULT
+
+
+def _find(df: DataFrame, scopes) -> Pin | None:
+    for s in scopes:
+        for p in s.pins:
+            if p.frame is df:
+                return p
+    return None
+
+
+def pin(df: DataFrame, label: str, eager: bool = True) -> DataFrame:
+    """Pin ``df`` in the current scope and return the frame consumers
+    must read.  ``eager=True`` materializes now and truncates the plan;
+    ``eager=False`` keeps lineage and materializes on first use."""
+    # A lazy pin returns ``df`` itself, so its estimate runs on an alias:
+    # optimizing df's own query execution before the persist would fix
+    # a plan without the cache for every later action on df.
+    est = plan_size_estimate(df if eager else df.alias("pin"))
+    small = est is not None and est < SMALL_FRAME_BYTES
+    rdd = None
+    if eager:
+        if small:
+            flavor, out = "checkpoint", df.localCheckpoint(eager=True)
+        else:
+            flavor = "checkpoint_disk"
+            out = df.localCheckpoint(
+                eager=True, storageLevel=StorageLevel.DISK_ONLY
+            )
+        # the LogicalRDD the checkpointed frame analyzes to
+        rdd = out._jdf.queryExecution().analyzed().rdd()
+    elif small:
+        flavor, out = "persist", df.persist()
+    else:
+        flavor, out = "persist_disk", df.persist(StorageLevel.DISK_ONLY)
+    with _LOCK:
+        _current().pins.append(Pin(label, est, flavor, out, rdd))
+    return out
+
+
+def release(df: DataFrame) -> None:
+    """Release the live pin of ``df`` now.  A no-op for a frame that
+    holds no live pin."""
+    with _LOCK:
+        rec = _find(df, list(_OPEN))
+        handles = _detach([rec]) if rec is not None else []
+    _unpersist(handles, blocking=False)
+
+
+def is_disk(df: DataFrame) -> bool:
+    """True when ``df`` holds a live pin on disk."""
+    with _LOCK:
+        rec = _find(df, list(_OPEN))
+    return rec is not None and rec.disk
+
+
+@contextmanager
+def scope() -> Iterator[Scope]:
+    """Open a scope in this thread; every pin made inside it is released
+    when the block exits, normally or by an exception."""
+    s = Scope(parent=_current())
+    with _LOCK:
+        _OPEN.add(s)
+    stack = _THREAD.__dict__.setdefault("stack", [])
+    stack.append(s)
+    try:
+        yield s
+    finally:
+        stack.remove(s)
+        s._close()
+
+
+def live_pins() -> list[Pin]:
+    """The records of every live pin, in every scope."""
+    with _LOCK:
+        return [p for s in _OPEN for p in s.pins if p.live]
+
+
+def release_all() -> None:
+    """Release every live pin, in every scope (blocking, so a following
+    cache assertion never sees a removal still in flight)."""
+    with _LOCK:
+        handles = [h for s in list(_OPEN) for h in s._drain()]
+    _unpersist(handles, blocking=True)
+
+
+# -- registry query scopes ---------------------------------------------------
+
+
+def enter_query() -> None:
+    """Open the calling thread's scope for a new registry query entry,
+    and release the scope of the entry two back."""
+    s = Scope()
+    with _LOCK:
+        _GENS.append(s)
+        _OPEN.add(s)
+        stale = _GENS.pop(0) if len(_GENS) > 2 else None
+    _THREAD.query = s
+    if stale is not None:
+        stale._close()
+
+
+def claim(key: str, spark: SparkSession) -> DataFrame | None:
+    """The frame pinned under ``key`` in the current scope or, for the
+    newest query scope, in the previous query's scope — whose pins the
+    current one then adopts.  ``None`` on a miss or when the frame
+    belongs to another SparkSession."""
+    with _LOCK:
+        cur = _current()
+        hit = cur.keys.get(key)
+        if hit is None and len(_GENS) == 2 and cur is _GENS[1]:
+            prev = _GENS[0]
+            hit = prev.keys.get(key)
+            if hit is not None and hit.sparkSession is spark:
+                cur.pins.extend(prev.pins)
+                for k, v in prev.keys.items():
+                    cur.keys.setdefault(k, v)
+                prev.pins, prev.keys = [], {}
+        if hit is None or hit.sparkSession is not spark:
+            return None
+        return hit
+
+
+def pin_keyed(df: DataFrame, key: str) -> DataFrame:
+    """Lazy :func:`pin` of ``df``, bound to ``key`` in the current scope
+    so the next query can :func:`claim` it."""
+    out = pin(df, key, eager=False)
+    with _LOCK:
+        _current().keys[key] = out
+    return out

@@ -29,7 +29,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _self_join_ready, tokens
+from . import pinning
+from .dedup import tokens
 from .similarity import _topk_per_query
 
 __all__ = [
@@ -224,7 +225,7 @@ def bm25_scores(
     # corpus-sized), so an eager pin is the guide-§2.4 move: share
     # one materialization.  materialize=False keeps the lazy twin for
     # plan inspection, same convention as ngram_lm_score.
-    tf = _self_join_ready(tf, materialize)
+    tf = pinning.pin(tf, "bm25_term_freqs", eager=materialize)
     # One row per (doc, tok) after the agg => count(*) IS the document
     # frequency.  Correct ONLY because tf is term-filtered upstream of
     # nothing that drops docs — each matching (doc, tok) survives.

@@ -29,12 +29,11 @@ from __future__ import annotations
 import functools
 import math
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .dedup import _LAZY_PINS, _self_join_ready
+from . import pinning
 
 
 def top_k_per_group(
@@ -121,8 +120,8 @@ def _pin_branch_input(df: DataFrame) -> DataFrame:
     deduplicate those executions because its replication-1,
     lineage-truncated blocks made any executor loss fatal.  The
     measured price was ~2× wall on the two-phase queries (SCALE.md
-    round 14).  The round-15 fix is a plain ``persist(MEMORY_AND_DISK)``
-    — lineage is KEPT, so the round-14 fault-tolerance argument is
+    round 14).  The round-15 fix is a lazy pin (a ``persist``) —
+    lineage is KEPT, so the round-14 fault-tolerance argument is
     untouched (a lost block recomputes from lineage, and the
     deterministic bucket expression guarantees every recomputation
     agrees by construction); the cache merely stops the healthy path
@@ -139,18 +138,15 @@ def _pin_branch_input(df: DataFrame) -> DataFrame:
     ``_jdf``) the pin is applied — the conservative direction for the
     expensive-upstream case.
 
-    Pinned frames register in :data:`~.dedup._LAZY_PINS`, so the
-    registry's entry-hygiene wrapper (plans/queries.py) releases them
-    at the next query entry and sweeps never accumulate blocks."""
+    The pin is a lazy :func:`pinning.pin`, released with the caller's
+    pin scope."""
     try:
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         if not any(n in plan for n in _EXPENSIVE_NODES):
             return df
     except Exception:
         pass
-    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _LAZY_PINS.append(df)
-    return df
+    return pinning.pin(df, "branch_input", eager=False)
 
 
 def _norm_order(order_cols) -> list[tuple[str, bool]]:
@@ -688,9 +684,9 @@ def temperature_mixture(
     # counts feeds BOTH nmin and the thresholds frame — without a
     # materialization point the full corpus count scan can execute
     # twice (exchange reuse across a self-join is not guaranteed, see
-    # dedup._self_join_ready); the frame is |strata| rows, so the
+    # operators/pinning.py); the frame is |strata| rows, so the
     # eager checkpoint is ~free
-    counts = _self_join_ready(counts, True)
+    counts = pinning.pin(counts, "strata_counts")
     nmin = counts.agg(F.min("_n").alias("_nmin"))
     ratio = F.col("_nmin") / F.col("_n")
     rate = (

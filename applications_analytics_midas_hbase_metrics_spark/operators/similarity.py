@@ -21,7 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .dedup import _dot, _self_join_ready
+from . import pinning
+from .dedup import _dot
 
 
 def _norm(v: Column) -> Column:
@@ -356,13 +357,13 @@ def semantic_dedup(
     assigned = _assign_nearest(c, centroids, vec="cv", out="cluster_id", id_col="id")
     # assigned feeds BOTH pair sides and the final keep-join — without
     # materialization the full-corpus centroid assignment (the dominant
-    # cost) executes once per consumer; see dedup._self_join_ready.
+    # cost) executes once per consumer.
     # ``pin`` (df -> df) overrides HOW it materializes — the registry
     # queries pass plans.queries.persist_deferred so a repeat run (warm
     # bench, driver retry) claims the cached assignment instead of
     # recomputing it
-    assigned = pin(assigned) if pin is not None else _self_join_ready(
-        assigned, materialize
+    assigned = pin(assigned) if pin is not None else pinning.pin(
+        assigned, "semdedup_assign", eager=materialize
     )
     a = assigned.select(
         F.col("id").alias("id_a"), F.col("cv").alias("va"),
@@ -430,8 +431,8 @@ def semantic_dedup_cover(
     # three consumers (both pair sides + the final keep-join): run the
     # full-corpus centroid assignment once, not three times; ``pin``
     # overrides the materialization like in :func:`semantic_dedup`
-    assigned = pin(assigned) if pin is not None else _self_join_ready(
-        assigned, materialize
+    assigned = pin(assigned) if pin is not None else pinning.pin(
+        assigned, "semdedup_cover_assign", eager=materialize
     )
     a = assigned.select(
         F.col("id").alias("id_a"), F.col("cv").alias("va"),

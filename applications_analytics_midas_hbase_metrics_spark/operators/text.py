@@ -11,7 +11,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.keys import java_hash
-from .dedup import _self_join_ready, adjacent_pairs, tokens
+from . import pinning
+from .dedup import adjacent_pairs, tokens
 
 #: Tiny stopword profiles for the n-gram/stopword language heuristic.
 #: Deliberately small and fixed: the point is deterministic, scalable
@@ -503,8 +504,8 @@ def ngram_decontaminate(
     set rides **broadcast** and the corpus-side membership test is a
     map-side left join on the exploded grams; no corpus bytes shuffle
     for the join.  But the hint is MEASURED, not assumed (round 15):
-    the gram set is persisted (lineage kept, released on the next
-    registry entry) and counted, and above ``broadcast_max_grams``
+    the gram set is pinned lazily (lineage kept, released with the
+    caller's pin scope) and counted, and above ``broadcast_max_grams``
     (default 1M ≈ low-hundreds of MB built) the join falls back to a
     plain gram-keyed shuffle join — the round-15 GB rung drove this
     operator with a 68k-doc benchmark whose gram set serialized past
@@ -541,15 +542,9 @@ def ngram_decontaminate(
         .withColumn("hit", F.lit(1))
     )
     # measure-then-choose (round 15, guide §3.1): pin the gram set
-    # (lineage kept; released by the registry's entry hygiene), count
-    # it, and only then hint broadcast — identical join semantics
-    # either way, only the strategy differs
-    from pyspark import StorageLevel
-
-    from .dedup import _LAZY_PINS
-
-    bench_g = bench_g.persist(StorageLevel.MEMORY_AND_DISK)
-    _LAZY_PINS.append(bench_g)
+    # (lineage kept), count it, and only then hint broadcast —
+    # identical join semantics either way, only the strategy differs
+    bench_g = pinning.pin(bench_g, "decontam_bench_grams", eager=False)
     n_bench_grams = bench_g.count()
     right = (
         F.broadcast(bench_g)
@@ -684,7 +679,7 @@ def repeated_ngram_spans(
         F.col(id_col).cast("bigint").alias("id"),
         tokens(text_col).alias("tks"),
     ).withColumn("n_tokens", F.size("tks").cast("bigint"))
-    base = _self_join_ready(base, materialize)
+    base = pinning.pin(base, "ngram_rep_tokens", eager=materialize)
     g = (
         base.filter(F.col("n_tokens") >= n)
         .select(
@@ -698,7 +693,7 @@ def repeated_ngram_spans(
             F.array_join(F.slice("tks", F.col("pos") + 1, n), " ").alias("gram"),
         )
     )
-    g = _self_join_ready(g, materialize)
+    g = pinning.pin(g, "ngram_rep_grams", eager=materialize)
     dup_grams = g.groupBy("gram").count().filter(F.col("count") >= min_count)
     hits = g.join(dup_grams.select("gram"), "gram", "left_semi")
     cov = (
@@ -756,7 +751,8 @@ def ngram_lm_score(
     # materialize=False builds the LAZY twin for plan inspection
     # (tools/plan_audit.py), same convention as the dedup operators —
     # eager checkpoints would truncate the audited plan at ExistingRDD
-    base = _self_join_ready(base, materialize)  # feeds pairs AND the final join
+    # feeds pairs AND the final join
+    base = pinning.pin(base, "lm_tokens", eager=materialize)
     # Pre-aggregate the doc side to (id, a, b, c) BEFORE the gram-keyed
     # score join: a Zipfian hot bigram ("of the") otherwise fans one
     # join-shuffle row per OCCURRENCE into a single (a, b) partition;
@@ -783,17 +779,14 @@ def ngram_lm_score(
     # not (a): a Zipfian head unigram would funnel every "the …" bigram
     # into one partition; the pair key spreads the head.
     if copartition is None:
-        from .pinning import SMALL_FRAME_BYTES, plan_size_estimate
-
-        est = plan_size_estimate(docpairs)
-        copartition = est is not None and est >= SMALL_FRAME_BYTES
+        est = pinning.plan_size_estimate(docpairs)
+        copartition = est is not None and est >= pinning.SMALL_FRAME_BYTES
     if copartition:
         docpairs = docpairs.repartition("a", "b")
-    # trains B AND scores; a co-partitioned pin must keep its
-    # partitioning visible (checkpoint would erase it — see
-    # _self_join_ready)
-    docpairs = _self_join_ready(
-        docpairs, materialize, keep_partitioning=copartition
+    # trains B AND scores; a co-partitioned pin stays lazy to keep its
+    # partitioning visible (a checkpoint would erase it)
+    docpairs = pinning.pin(
+        docpairs, "lm_doc_pairs", eager=materialize and not copartition
     )
     uni = (
         base.select(F.explode("tks").alias("a"))
@@ -803,7 +796,9 @@ def ngram_lm_score(
     # vocab size AND the score join; in the co-partition regime the
     # pin keeps the aggregate's existing (a) partitioning (already
     # paid) so the unigram probe join needs no re-exchange either
-    uni = _self_join_ready(uni, materialize, keep_partitioning=copartition)
+    uni = pinning.pin(
+        uni, "lm_unigrams", eager=materialize and not copartition
+    )
     vocab = uni.groupBy().agg(F.count("*").alias("v"))
     big = docpairs.groupBy("a", "b").agg(F.sum("c").alias("bc"))
     scored = (
@@ -953,20 +948,21 @@ def pmi_collocations(
     at 1e-9; ties break on (term_a, term_b).  Returns (term_a, term_b,
     pair_count, pmi_q, pmi)."""
     base = df.select(tokens(text_col).alias("tks"))
-    base = _self_join_ready(base, materialize)  # feeds pairs AND unigrams
+    # feeds pairs AND unigrams
+    base = pinning.pin(base, "pmi_tokens", eager=materialize)
     pairs = (
         base.filter(F.size("tks") >= 2)
         .select(F.explode(adjacent_pairs("tks")).alias("p"))
         .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
         .agg(F.count(F.lit(1)).alias("bc"))
     )
-    pairs = _self_join_ready(pairs, materialize)  # scores AND totals M
+    pairs = pinning.pin(pairs, "pmi_pairs", eager=materialize)  # scores + M
     uni = (
         base.select(F.explode("tks").alias("a"))
         .groupBy("a")
         .agg(F.count(F.lit(1)).alias("u"))
     )
-    uni = _self_join_ready(uni, materialize)  # joins twice + totals N
+    uni = pinning.pin(uni, "pmi_unigrams", eager=materialize)  # joins + N
     n_tot = uni.groupBy().agg(F.sum("u").alias("n"))
     m_tot = pairs.groupBy().agg(F.sum("bc").alias("m"))
     pmi = (
@@ -1128,7 +1124,10 @@ def winnow_overlap_pairs(
     # ``pin`` (df -> df) overrides the materialization — registry
     # queries pass a keyed persist_deferred so warm repeats claim the
     # fingerprint frame instead of re-hashing the corpus
-    fps = pin(fps) if pin is not None else _self_join_ready(fps, materialize)
+    fps = (
+        pin(fps) if pin is not None
+        else pinning.pin(fps, "winnow_fingerprints", eager=materialize)
+    )
     keep = (
         fps.groupBy("fp")
         .agg(F.count("*").alias("_df"))
@@ -1184,7 +1183,10 @@ def winnow_overlap_spans(
         df, k=k, w=w, text_col=text_col, id_col=id_col, positions=True,
         hash_fn=hash_fn,
     )
-    pfs = pin(pfs) if pin is not None else _self_join_ready(pfs, materialize)
+    pfs = (
+        pin(pfs) if pin is not None
+        else pinning.pin(pfs, "winnow_positions", eager=materialize)
+    )
     keep = (
         pfs.select("id", "fp")
         .distinct()
@@ -1302,34 +1304,6 @@ def cut_spans(
     )
 
 
-def disk_persist_pin(df: DataFrame) -> DataFrame:
-    """The 100 TB ``pin=`` escape hatch for the ExactSubstr operators
-    (:func:`exact_substring_spans` / :func:`exact_substring_dedup` /
-    :func:`exact_substring_dedup_incremental`): persist the shingle
-    frame DISK_ONLY and materialize it eagerly, so the shingling
-    projection runs exactly once for both consumers (frequency count +
-    semi join) — the same reuse guarantee as the default
-    ``localCheckpoint``, with two differences that matter at scale:
-
-    * DISK_ONLY keeps the blocks OUT of executor memory — the shingle
-      frame is ∝ corpus tokens, and at 100 TB pinning it in memory
-      (or letting localCheckpoint's MEMORY_AND_DISK blocks compete
-      with shuffle/exec memory) evicts the working set;
-    * persist keeps LINEAGE — a lost executor recomputes its blocks
-      from the parquet scan, while localCheckpoint truncates lineage
-      and a lost block fails the job (the reason Spark docs gate
-      localCheckpoint on "performance over fault tolerance").
-
-    Caller releases with ``df.unpersist()`` when the consuming action
-    finishes (the tests and the gated query wrapper do).  Flip
-    criteria measured in SCALE.md round-11."""
-    from pyspark import StorageLevel
-
-    out = df.persist(StorageLevel.DISK_ONLY)
-    out.count()  # eager: both consumers read the store, never recompute
-    return out
-
-
 def exact_substring_spans(
     df: DataFrame,
     k: int = 20,
@@ -1396,7 +1370,7 @@ def exact_substring_spans(
     disk exhaustion exactly here: one-phase mode writes the ~150-byte
     string keys into BOTH the count and the join shuffles (~40×
     corpus bytes on disk); this shape writes ~2% of that.  ``pin``
-    (or the default ``materialize`` checkpoint) applies at the two
+    (or the default eager pin) applies at the two
     reuse sites — the narrow position frame and the candidate string
     frame — both bounded (~32 B/token and ∝ duplicated content).
 
@@ -1415,7 +1389,7 @@ def exact_substring_spans(
     def _pin(frame: DataFrame) -> DataFrame:
         return (
             pin(frame) if pin is not None
-            else _self_join_ready(frame, materialize)
+            else pinning.pin(frame, "substring_rows", eager=materialize)
         )
 
     if two_phase:
@@ -1454,8 +1428,7 @@ def exact_substring_spans(
             "id", "start", "end"
         )
     # consumed on BOTH sides (frequency count + semi join) — pin so the
-    # shingling projection runs once; at 100 TB prefer pin=persist-to-
-    # disk or recompute over the default localCheckpoint
+    # shingling projection runs once
     rows = _pin(_shingle_position_rows(df, k, text_col, id_col, key_fn))
     hot = (
         rows.groupBy("_sh")
@@ -1597,7 +1570,10 @@ def exact_substring_dedup_incremental(
             f"{want!r} — the store was built with the other key_fn"
         )
     rows = _shingle_position_rows(batch, k, text_col, id_col, key_fn)
-    rows = pin(rows) if pin is not None else _self_join_ready(rows, materialize)
+    rows = (
+        pin(rows) if pin is not None
+        else pinning.pin(rows, "substring_batch_rows", eager=materialize)
+    )
     hot_batch = (
         rows.groupBy("_sh")
         .agg(F.count(F.lit(1)).alias("_c"))

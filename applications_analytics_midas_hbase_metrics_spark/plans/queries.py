@@ -21,7 +21,6 @@ import os
 import shutil
 import tempfile
 from collections.abc import Callable
-from itertools import count
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,6 +34,7 @@ from ..functions.keys import (
 )
 from ..operators import cellstore as CS
 from ..operators import logs as LOGS
+from ..operators import pinning
 from ..operators import validate as V
 from ..sources import ingest as I
 
@@ -88,29 +88,6 @@ EXTRA_QUERIES: dict[str, QueryFn] = {}
 EXTRA_ORACLES: dict[str, str] = {}
 
 
-#: Session-scoped materialization registry: frames persisted by a query
-#: for reuse, released unless RECLAIMED.  Two-generation protocol —
-#: ``_DEFERRED`` holds the pins of the query currently being built (its
-#: action runs after the builder returns, so its pins must survive past
-#: the builder), ``_PENDING`` holds the previous query's pins.  At every
-#: registry-query entry the stale ``_PENDING`` generation is unpersisted
-#: and ``_DEFERRED`` is demoted into it; a query that declares the SAME
-#: key as its predecessor claims the still-cached frame instead of
-#: rebuilding the subplan (multi-query optimization over declared
-#: intermediates: the two validation queries share one cell build, the
-#: minhash pair table feeds dedup_minhash AND both graph queries — the
-#: Spark analogue of materializing the pairs table once on a cluster).
-#: Live cached frames are bounded by two generations of pins, so a
-#: sweeping session never accumulates blocks (enforced by
-#: tests/test_registry.py::test_no_cache_growth_across_sweeps).
-#: Registry queries run sequentially (driver gate, bench, pytest
-#: sweeps); concurrent invocation from multiple threads would release a
-#: neighbor's cache early — safe (persist is an optimization), just
-#: slower.
-_DEFERRED: dict[str, DataFrame] = {}
-_PENDING: dict[str, DataFrame] = {}
-_ANON = count()
-
 #: Keys claimed since the current query's entry — observability for the
 #: bench harness (a claimed run reads a sibling's cached intermediate,
 #: so its wall time measures the residual work, not a cold build; the
@@ -126,79 +103,41 @@ def claimed_keys() -> list[str]:
 
 
 def persist_deferred(df: DataFrame, key: str | None = None) -> DataFrame:
-    """Persist ``df`` for reuse; auto-released two query entries later
-    unless reclaimed.  With a ``key``, a frame the PREVIOUS query pinned
-    under the same key is claimed instead of ``df`` — the caller's
-    contract is that the key uniquely identifies the logical plan
-    (include ``sf_dir``), so the claimed frame is plan-equivalent.
+    """Pin ``df`` lazily in the current query's scope (operators/
+    pinning.py), which is released two query entries later unless the
+    next query claims from it.  With a ``key``, a frame the previous
+    query pinned under the same key is claimed instead of ``df`` — the
+    caller's contract is that the key uniquely identifies the logical
+    plan (include ``sf_dir``), so the claimed frame is plan-equivalent.
     Claims are skipped across SparkSessions (pytest fixtures may cycle
     sessions)."""
-    if key is not None:
-        hit = _PENDING.pop(key, None)
-        if hit is not None:
-            if hit.sparkSession is df.sparkSession:
-                _set_deferred(key, hit)
-                _CLAIMED_THIS_ENTRY.append(key)
-                return hit
-            hit.unpersist()
-    df = df.persist()
-    _set_deferred(key if key is not None else f"_anon_{next(_ANON)}", df)
-    return df
-
-
-def _set_deferred(key: str, df: DataFrame) -> None:
-    """Install ``df`` under ``key``, unpersisting any frame already pinned
-    there — a key collision within one query entry (pin twice, or claim
-    then re-persist) must not leak the displaced persisted frame for the
-    life of the session."""
-    old = _DEFERRED.pop(key, None)
-    if old is not None and old is not df:
-        old.unpersist()
-    _DEFERRED[key] = df
+    if key is None:
+        return pinning.pin(df, "deferred", eager=False)
+    hit = claim_deferred(key, df.sparkSession)
+    return hit if hit is not None else pinning.pin_keyed(df, key)
 
 
 def claim_deferred(key: str, spark: SparkSession) -> DataFrame | None:
-    """Claim (and re-pin) a frame the previous query left under ``key``,
-    or None.  For callers that can DERIVE their input from a sibling
-    query's materialization (e.g. subset pair tables filter the full
-    pair table) but would build something cheaper from scratch."""
-    hit = _PENDING.pop(key, None)
-    if hit is None:
-        return None
-    if hit.sparkSession is not spark:
-        hit.unpersist()
-        return None
-    _set_deferred(key, hit)
-    _CLAIMED_THIS_ENTRY.append(key)
+    """Claim the frame pinned under ``key`` by this query or the
+    previous one (adopting the previous query's pins), or None.
+    For callers that can DERIVE their input from a sibling query's
+    materialization (e.g. subset pair tables filter the full pair
+    table) but would build something cheaper from scratch."""
+    hit = pinning.claim(key, spark)
+    if hit is not None:
+        _CLAIMED_THIS_ENTRY.append(key)
     return hit
 
 
-def release_deferred() -> None:
-    """Unpersist BOTH pin generations (test/teardown hook).  Blocking,
-    so a subsequent cache-count assertion (or fixture baseline) never
-    observes an RDD whose async removal is still in flight."""
-    for gen in (_PENDING, _DEFERRED):
-        while gen:
-            gen.popitem()[1].unpersist(blocking=True)
-
-
 def _entry_hygiene(fn: QueryFn) -> QueryFn:
-    """Wrap a registered query so invoking it ages the pin generations:
-    the previous query's unclaimed pins are released, its claimed ones
-    survive via re-pinning, and dedup's lazy-mode pins (the LSH
-    signature persist) are dropped with the same one-entry lifecycle
+    """Wrap a registered query so invoking it opens a new query scope
+    (releasing the scope two entries back) and resets the claimed keys
     (functools.wraps keeps the (spark, sf_dir) signature the registry
     contract asserts)."""
 
     @functools.wraps(fn)
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..operators.dedup import release_lazy_pins
-
-        release_lazy_pins()
-        while _PENDING:
-            _PENDING.popitem()[1].unpersist()
-        _PENDING.update(_DEFERRED)
-        _DEFERRED.clear()
+        pinning.enter_query()
         _CLAIMED_THIS_ENTRY.clear()
         return fn(spark, sf_dir)
 

@@ -19,6 +19,7 @@ from ..operators import importance as IM
 from ..operators import lines as LN
 from ..operators import normalize as NZ
 from ..operators import packing as P
+from ..operators import pinning
 from ..operators import text as T
 from ..operators.sampling import (
     fibonacci_bucket,
@@ -2341,7 +2342,7 @@ def _curation_full_oracle() -> str:
 
 @register("curation_pipeline_full", oracle=_curation_full_oracle())
 def q_curation_pipeline_full(
-    spark: SparkSession, sf_dir: str, pin=None, plant_offset: int = 100000
+    spark: SparkSession, sf_dir: str, plant_offset: int = 100000
 ) -> DataFrame:
     """The COMPLETE pretraining-data build, one manifest row per input
     document: wrap the fixture corpus (plus planted exact copies of
@@ -2371,41 +2372,26 @@ def q_curation_pipeline_full(
     output is total over the input corpus, a curation manifest, and
     the oracle replays all ten stages in one SQL chain.
 
-    ``pin=`` (default: the FOOTPRINT-AWARE policy,
-    operators.pinning.FootprintPin — round 15) selects per pin site:
-    frames pin eager-localCheckpoint when Catalyst's plan-time
-    estimate is demonstrably small and eager DISK_ONLY persist
-    (lineage kept) above ~100 MB.  The exact-substring stage runs its
-    NARROW two-phase shape (round 15), so the ~40×-corpus shingle
-    STRING frame of the round-14 failure no longer exists anywhere —
-    its internal reuse frames are the 32-byte/row position-hash frame
-    and the ∝-duplicated-content candidate strings, pinned through
-    the same policy.  The round-14 rung measured both naive flavors
-    failing at 1.68 GiB input (the blanket-localCheckpoint unroll
-    convoy and the blanket-disk 40× footprint; SCALE.md round 14) —
-    the policy + the narrow substring shape are that measurement as
-    code.  Passing an explicit callable (e.g.
-    ``text.disk_persist_pin``, or ``lambda df:
-    df.localCheckpoint(eager=True)`` for the pre-round-15 default)
-    applies it at EVERY site, preserving the comparison modes.
-    Pin-flavor equivalence pinned in
+    Every multi-consumer stage frame is an eager pin
+    (operators/pinning.py): a checkpoint when Catalyst's plan-time
+    estimate is small, a DISK_ONLY checkpoint above ~100 MB.  The
+    exact-substring stage runs its NARROW two-phase shape (round 15),
+    so the ~40×-corpus shingle STRING frame of the round-14 failure no
+    longer exists anywhere — its internal reuse frames are the
+    32-byte/row position-hash frame and the ∝-duplicated-content
+    candidate strings.  Pin-flavor equivalence is pinned in
     tests/test_pipelines.py::test_curation_pipeline_full_pin_modes."""
     from ..operators import web as W
-    from ..operators.pinning import FootprintPin
     from ..operators.sampling import mixture_sample, shuffle_shards
 
-    if pin is None or isinstance(pin, FootprintPin):
-        # a FootprintPin INSTANCE may be passed in place of a callable
-        # so harnesses (the on-disk rung) can read .decisions after
-        policy = pin if isinstance(pin, FootprintPin) else FootprintPin()
-        _pin = policy.post
-        _release = policy.release_one
-    else:
-        policy = None
-        _pin = lambda df, label=None: pin(df)  # noqa: E731 — explicit
-        # callables (blanket checkpoint / disk modes) take no label
-        # and manage their own lifetimes
-        _release = lambda df: None  # noqa: E731
+    def _pin(df: DataFrame, label: str) -> DataFrame:
+        return pinning.pin(df, f"curation:{label}")
+
+    def _release(df: DataFrame) -> None:
+        # only a DISK pin is released early: a small checkpoint is still
+        # read by the lazy drop frames of the final union
+        if pinning.is_disk(df):
+            pinning.release(df)
 
     docs = _spread(spark, t(spark, sf_dir, "documents")).select(
         "doc_id", "text", "lang", "source"
@@ -2447,7 +2433,7 @@ def q_curation_pipeline_full(
             )
         )
     )
-    corpus = _pin(corpus)  # consumed by the HTML wrap + lang map
+    corpus = _pin(corpus, "corpus")  # consumed by the HTML wrap + lang map
 
     # ---- stage-incremental drop accounting (round 16) -------------
     # The manifest's six drop branches anti-join CONSECUTIVE stage
@@ -2458,13 +2444,12 @@ def q_curation_pipeline_full(
     # frame is DISK-pinned we pin its drop frame eagerly the moment
     # the successor stage lands and release the predecessor, capping
     # the live set at ~3 corpus-sized frames.  When the frames are
-    # checkpoint-flavored (bench SFs: release is impossible and the
-    # footprint trivial) the drops stay lazy in the final plan — the
+    # small checkpoints (bench SFs: the footprint is trivial, and they
+    # are never released early) the drops stay lazy in the final plan — the
     # executed manifest plan, its anti-join shape and the bench rows
     # are bit-identical to round 15 there; the restructure only
-    # engages where pins actually go to disk.  Under the default
-    # ckpt_disk flavor a released pin CANNOT recompute (deterministic
-    # checkpoint-RDD release, no lineage) — the eager-drop-pin-before-
+    # engages where pins actually go to disk.  A released checkpoint
+    # CANNOT recompute (no lineage) — the eager-drop-pin-before-
     # predecessor-release ordering below is load-bearing, and
     # tests/test_pipelines.py::test_curation_pipeline_full_footprint_disk_mode
     # is its proof.
@@ -2486,14 +2471,12 @@ def q_curation_pipeline_full(
         """Append the ``prev``-anti-``nxt`` drop frame for ``stage``;
         pin it eagerly when any frame its lineage reads (``prev``,
         ``nxt``, or a ``watch`` ancestor ``prev`` derives from
-        narrowly) is one of the policy's LIVE disk pins — those are
-        exactly the frames a later ``_release`` may drop, and the
-        eager pin is what makes that release safe without recompute."""
+        narrowly) is a LIVE disk pin — those are exactly the frames a
+        later ``_release`` may drop, and the eager pin is what makes
+        that release safe without recompute."""
         dr = dropped(prev.join(nxt, "id", "left_anti"), stage)
-        if policy is not None and any(
-            policy.is_disk(f) for f in (prev, nxt, *watch)
-        ):
-            dr = _pin(dr, label=f"drop:{stage}")
+        if any(pinning.is_disk(f) for f in (prev, nxt, *watch)):
+            dr = _pin(dr, f"drop:{stage}")
         drops.append(dr)
 
     wrapped = corpus.select(
@@ -2512,14 +2495,14 @@ def q_curation_pipeline_full(
         ).alias("html"),
     )
     # 1. extract — reused by the quality stage AND the bench slice
-    ex = _pin(T.html_extract(wrapped))
+    ex = _pin(T.html_extract(wrapped), "extract")
     # 2. quality
     q = ex.filter(
         (F.col("link_density") <= 0.2) & (F.size(D.tokens("text")) >= 20)
     ).select("id", F.col("text").alias("txt"))
     # 3. exact dedup
     ed = D.drop_exact_duplicates(q, content_col="txt", id_col="id")
-    ed = _pin(ed)  # consumed by near-dup + anti
+    ed = _pin(ed, "exact_dedup")  # consumed by near-dup + anti
     # ed landed: the quality and exact-dup drop frames are computable
     # from live pins (ex, ed; q is a narrow filter of ex) — account
     # them now so `ex`/`ed` can release the moment their last heavy
@@ -2541,9 +2524,8 @@ def q_curation_pipeline_full(
     # text by offset.  The round-14 rung died on disk exhaustion in
     # exactly this stage's one-phase string shuffles (~40× corpus
     # bytes); the internal reuse frames (narrow positions, candidate
-    # strings) pin through the same footprint policy as every other
-    # site.
-    nd = _pin(nd)
+    # strings) are pinned by the operator itself.
+    nd = _pin(nd, "near_dedup")
     # nd landed: account the near-dup drop, then release `ed` — its
     # remaining consumers (the pair table into nd, both drop frames)
     # are materialized.  Stage-incremental accounting (round 16): the
@@ -2552,24 +2534,17 @@ def q_curation_pipeline_full(
     # frames where round 15 held all six until the final union.
     account("near_dup", ed, nd)
     _release(ed)
-    _before_substr = list(policy.disk_pins) if policy is not None else []
-    cut = T.exact_substring_dedup(
-        nd, k=20, text_col="txt", id_col="id", two_phase=True, pin=_pin
-    )
-    cut = _pin(cut)  # consumed by 3 stages
     # the substring stage's INTERNAL reuse pins (narrow positions,
     # candidate strings) feed only that stage: once `cut` is
     # materialized they are dead weight in the pipeline's pinned
     # footprint (the rung measured ten simultaneous live pins peaking
-    # at 6.9x input) — release them now.  Lineage is kept, so this is
-    # a footprint decision, never a correctness one.
-    if policy is not None:
-        for p in [
-            p
-            for p in policy.disk_pins
-            if p is not cut and not any(p is q for q in _before_substr)
-        ]:
-            _release(p)
+    # at 6.9x input) — the stage's scope releases them
+    with pinning.scope() as substr:
+        cut = T.exact_substring_dedup(
+            nd, k=20, text_col="txt", id_col="id", two_phase=True
+        )
+        cut = _pin(cut, "substring_cut")  # consumed by 3 stages
+        substr.keep(cut)
     # cut landed: `nd` fed only the substring stage (its near-dup drop
     # was accounted above) — release it with the stage internals
     _release(nd)
@@ -2584,7 +2559,7 @@ def q_curation_pipeline_full(
     )
     contaminated = flags.filter(F.col("contaminated") == 1).select("id")
     dec = cut.join(contaminated, "id", "left_anti")
-    dec = _pin(dec)
+    dec = _pin(dec, "decontaminate")
     # dec landed: its pin materialized the whole decontamination
     # subtree, including the bench slice — `ex`'s last consumer.
     # Account the decontaminated drop, then release `cut` and `ex`.
@@ -2596,7 +2571,7 @@ def q_curation_pipeline_full(
     capped = W.domain_cap(dm, n=2, id_col="id").select(
         "id", "n_spans", "cut_chars", "text_cut"
     )
-    capped = _pin(capped)
+    capped = _pin(capped, "domain_cap")
     # capped landed: account the domain-cap drop, release `dec`
     account("domain_cap", dec, capped)
     _release(dec)
@@ -2606,7 +2581,7 @@ def q_curation_pipeline_full(
         capped.join(lang_map, "id"), _MIX_RATES,
         strat_col="lang", key_col="id",
     ).select("id", "n_spans", "cut_chars", "text_cut")
-    mixed = _pin(mixed)
+    mixed = _pin(mixed, "mixture")
     # mixed landed: account the mixture drop, release `capped`; and
     # `corpus` (the largest pinned frame — the full planted input) has
     # no consumer past the lang_map join materialized into `mixed` —
@@ -3797,10 +3772,8 @@ def q_gopher_quality_pipeline(
     aggregate), and the verdict math runs on the 6-decimal rounded
     signals both engines emit.
 
-    ``pin`` is the multi-consumer materialization hook (the
-    curation_pipeline_full contract): default deferred memory persist;
-    pass ``text.disk_persist_pin`` at 100 TB where SCALE.md's flip
-    criteria apply (storage-memory eviction, executor-loss lineage).
+    ``pin`` is the multi-consumer materialization hook: default the
+    registry's deferred persist (a lazy pin, operators/pinning.py).
 
     ``published=True`` runs the quality-rules stage at the PUBLISHED
     Table A1 floors (50 words / 2 distinct stop hits) over the

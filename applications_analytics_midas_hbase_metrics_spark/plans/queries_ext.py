@@ -17,6 +17,7 @@ from ..operators import dedup as D
 from ..operators import multimodal as MM
 from ..operators import similarity as SIM
 from ..operators import embeddings as EMB
+from ..operators import pinning
 from ..operators import text as T
 from ..operators.sampling import (
     mixture_sample,
@@ -535,8 +536,8 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _spread(spark, t(spark, sf_dir, "embeddings"))
     queries = emb.filter(F.col("vec_id") < 10)
-    cents = SIM.build_ivf_centroids(emb, num_centroids=16).localCheckpoint(
-        eager=True
+    cents = pinning.pin(
+        SIM.build_ivf_centroids(emb, num_centroids=16), "ivf_centroids"
     )
     idx_path = scratch_dir("ann_ivf_indexed") + "/index"
     # partitionBy(list_id): probe pruning becomes partition pruning on

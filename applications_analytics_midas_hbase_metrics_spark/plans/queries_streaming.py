@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.keys import duckdb_salt_sql
+from ..operators import pinning
 from ..session import scoped_shuffle_partitions
 from ..streaming import dedup_stream as DS
 from ..streaming import ingest_stream as IS
@@ -684,8 +685,8 @@ def q_ann_ivf_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.move(part, dst)
         os.utime(dst, (1_000_000_000 + 1000 * k,) * 2)
         shutil.rmtree(tmp)
-    cents = SIM.build_ivf_centroids(emb, num_centroids=16).localCheckpoint(
-        eager=True
+    cents = pinning.pin(
+        SIM.build_ivf_centroids(emb, num_centroids=16), "ivf_centroids"
     )
     stream = spark.readStream.schema(emb.schema).option(
         "maxFilesPerTrigger", 1

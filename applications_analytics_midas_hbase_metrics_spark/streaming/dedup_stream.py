@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import dedup as D
+from ..operators import pinning
 
 
 def _prepared(docs: DataFrame) -> DataFrame:
@@ -269,19 +270,25 @@ def stream_incremental_dedup(
     sigs_dir = os.path.join(store_dir, "sigs")
 
     def process(batch: DataFrame, batch_id: int) -> None:
+        # every pin of the batch (its own, and the lazy signature pins
+        # of lsh_pairs_between) is released when the batch ends; the
+        # scope is this callback thread's, so a concurrent query's pins
+        # are untouched
+        with pinning.scope():
+            _process_batch(batch, batch_id)
+
+    def _process_batch(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        batch = batch.localCheckpoint(eager=True)  # consumed by 4 stages
+        batch = pinning.pin(batch, "stream_batch")  # consumed by 4 stages
         store_hashes = spark.read.parquet(hashes_dir)
         store_sigs = spark.read.parquet(sigs_dir)
         verdicts = classify_against_store(
             batch, store_hashes, store_sigs, num_hashes, threshold
         ).withColumn("ingest_batch", F.lit(batch_id))
         verdicts.write.mode("append").parquet(verdict_dir)
-        D.release_lazy_pins()  # lsh_pairs_between lazy mode pins both sides
         # append the batch's own store rows AFTER the verdict write, so
         # a batch never classifies against itself; both recompute from
-        # the checkpointed batch (sha is a cheap map; the signature
-        # pin was just released with the pairs join that used it)
+        # the pinned batch (sha is a cheap map)
         batch.select(
             F.col("doc_id").cast("bigint").alias("id"),
             F.sha2(F.col("text"), 256).alias("sha"),

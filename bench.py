@@ -244,16 +244,18 @@ def _warm_sweep(spark, sf_dir, queries, Q):
 def _cold_sweep(spark, sf_dir, queries, Q):
     """One pass per query, registry flushed before EVERY run — each
     number is a full rebuild with no claimable pins anywhere."""
+    from applications_analytics_midas_hbase_metrics_spark.operators import pinning
+
     timings: dict[str, float] = {}
     for name, fn in queries.items():
-        Q.release_deferred()
+        pinning.release_all()
         t0 = time.monotonic()
         df = fn(spark, sf_dir)
         n = df.count()
         dt = time.monotonic() - t0
         timings[name] = round(dt, 3)
         print(f"# cold {name}: {n} rows in {timings[name]}s", file=sys.stderr)
-    Q.release_deferred()
+    pinning.release_all()
     return timings
 
 

@@ -7,6 +7,7 @@ import os
 
 import pytest
 
+from applications_analytics_midas_hbase_metrics_spark.operators import pinning
 from applications_analytics_midas_hbase_metrics_spark.session import get_spark
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -22,6 +23,23 @@ TABLES = (
 def spark():
     s = get_spark(app_name="midas-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     yield s
+
+
+@pytest.fixture(autouse=True)
+def _release_pins():
+    """Every test leaves no live pin behind (operators/pinning.py), so
+    a pin one test makes never outlives it."""
+    yield
+    pinning.release_all()
+
+
+def persistent_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs the SparkContext holds persistent right now."""
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().keysIterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(it.next())
+    return ids
 
 
 @pytest.fixture(scope="session")

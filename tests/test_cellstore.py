@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from applications_analytics_midas_hbase_metrics_spark.functions import keys as K
 from applications_analytics_midas_hbase_metrics_spark.operators import cellstore as CS
-from tests.conftest import SF_CORRECT, assert_store_sorted
+from tests.conftest import SF_CORRECT, assert_store_sorted, persistent_rdd_ids
 
 KEY_COLS = ["l_returnflag", "l_linestatus", "l_orderkey"]
 VAL_COLS = ["l_linenumber", "l_quantity", "l_extendedprice"]
@@ -404,14 +404,6 @@ def test_recover_cell_store_noop_without_manifest(cells, spark, tmp_path):
 
 
 
-def _persistent_rdd_ids(spark) -> set[int]:
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().keysIterator()
-    ids = set()
-    while it.hasNext():
-        ids.add(it.next())
-    return ids
-
-
 def _upsert_batch(cells, spark):
     rows = cells.limit(3).collect()  # driver-ok: 3 rows
     return spark.createDataFrame(
@@ -429,9 +421,9 @@ def test_merge_cells_releases_change_checkpoint(cells, spark, tmp_path):
     path = str(tmp_path / "store")
     CS.write_cells(cells, path, mode="overwrite")
     batch = _upsert_batch(cells, spark)
-    before = _persistent_rdd_ids(spark)
+    before = persistent_rdd_ids(spark)
     CS.merge_cells(spark, path, batch)
-    assert _persistent_rdd_ids(spark) - before == set()
+    assert persistent_rdd_ids(spark) - before == set()
 
 
 def test_merge_cells_releases_change_checkpoint_on_error(cells, spark, tmp_path):
@@ -440,10 +432,10 @@ def test_merge_cells_releases_change_checkpoint_on_error(cells, spark, tmp_path)
     from pyspark.errors import AnalysisException
 
     batch = _upsert_batch(cells, spark)
-    before = _persistent_rdd_ids(spark)
+    before = persistent_rdd_ids(spark)
     with pytest.raises(AnalysisException):
         CS.merge_cells(spark, str(tmp_path / "no_store"), batch)
-    assert _persistent_rdd_ids(spark) - before == set()
+    assert persistent_rdd_ids(spark) - before == set()
 
 
 def _python_eval_nodes(df) -> list[str]:

@@ -96,11 +96,6 @@ def test_nb_score_plan_is_join_not_broadcast_of_docs(spark):
     assert plan.count("Aggregate") >= 2
     r = out.collect()[0]
     assert r.n_tokens == 6
-    from applications_analytics_midas_hbase_metrics_spark.operators.dedup import (
-        release_lazy_pins,
-    )
-
-    release_lazy_pins()
 
 
 def test_rank_importance_sample_tilts_and_is_deterministic(spark):

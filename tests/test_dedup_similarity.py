@@ -113,6 +113,58 @@ def test_minhash_chunked_verify_equivalence(spark, monkeypatch):
     assert chunked_rows == base_rows and len(base_rows) > 0
 
 
+def test_minhash_chunked_verify_releases_pins_on_error(spark, monkeypatch):
+    """A chunk job that fails mid-loop leaves no pin of the chunked
+    verify behind: the candidate checkpoint, the partitioned hash-set
+    persist and the finished first chunk are released with the loop's
+    pin scope.  Compared as RDD ids created during the _verify_chunked
+    call (see test_merge_cells_releases_change_checkpoint_on_error)."""
+    from pyspark.sql import functions as F
+
+    from applications_analytics_midas_hbase_metrics_spark.operators import (
+        dedup as dd,
+        pinning,
+    )
+    from tests.conftest import persistent_rdd_ids
+
+    docs = spark.range(60).select(
+        F.col("id").alias("doc_id"),
+        F.concat_ws(
+            " ",
+            F.lit("alpha beta gamma delta epsilon zeta eta theta"),
+            F.conv(F.col("id") % 7, 10, 16),
+            F.lit("iota kappa lambda mu nu xi omicron pi rho sigma"),
+        ).alias("text"),
+    )
+    monkeypatch.setattr(pinning, "SMALL_FRAME_BYTES", 1)
+    monkeypatch.setattr(dd, "VERIFY_CHUNK_BYTES", 200_000)  # forces k of ~3-5
+    calls = []
+    real_verify = dd._verify_pairs
+
+    def verify_failing_second_chunk(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("chunk 2 failed")
+        return real_verify(*args, **kwargs)
+
+    leaked = []
+    real_chunked = dd._verify_chunked
+
+    def chunked(*args, **kwargs):
+        before = persistent_rdd_ids(spark)
+        try:
+            return real_chunked(*args, **kwargs)
+        finally:
+            leaked.append(persistent_rdd_ids(spark) - before)
+
+    monkeypatch.setattr(dd, "_verify_pairs", verify_failing_second_chunk)
+    monkeypatch.setattr(dd, "_verify_chunked", chunked)
+    with pytest.raises(RuntimeError, match="chunk 2 failed"):
+        dd.minhash_near_duplicates(docs, threshold=0.4, shingle_k=2)
+    assert len(calls) == 2
+    assert leaked == [set()]
+
+
 def test_simhash_identical_and_distant(docs):
     fps = {r.id: r.simhash for r in D.simhash_fingerprints(docs).collect()}
     assert fps[1] == fps[2]  # identical text -> identical fingerprint
@@ -534,31 +586,32 @@ def test_no_driver_collect_in_package():
     assert offenders == []
 
 
-def test_lazy_mode_pins_recorded_and_released(spark, docs):
-    # materialize=False persists the internal signature frame the caller
-    # cannot reach; it must be recorded in _LAZY_PINS and fully released
-    # by release_lazy_pins() — no cached blocks may outlive a
-    # plan-inspection pass.
-    # Assert on the PINS' OWN identity (their is_cached / storage level),
-    # never on a global cache count: other suites' blocks unpersist
-    # asynchronously and a count-based baseline deflates mid-test.
-    from applications_analytics_midas_hbase_metrics_spark.plans import queries as Q
+def test_lazy_mode_pins_recorded_and_released(spark, docs, monkeypatch):
+    # materialize=False pins the internal signature frames lazily —
+    # handles the caller cannot reach.  They are recorded in the
+    # caller's pin scope and released when it closes, under either lazy
+    # flavor, with identical rows.  Asserted on the pins' OWN identity
+    # (is_cached), never on a global cache count.
+    from applications_analytics_midas_hbase_metrics_spark.operators import (
+        pinning,
+    )
 
-    Q.release_deferred()
-    D.release_lazy_pins()
-    lazy = D.minhash_near_duplicates(docs, threshold=0.5, materialize=False)
-    lazy.collect()
-    pins = list(D._LAZY_PINS)
-    assert len(pins) >= 1  # signature frame
-    # every recorded pin is actually persisted right now
-    for p in pins:
-        assert p.is_cached
-        assert p.storageLevel.useMemory or p.storageLevel.useDisk
-    D.release_lazy_pins()
-    assert D._LAZY_PINS == []
-    # after the blocking release every pin reports uncached
-    for p in pins:
-        assert not p.is_cached
+    rows = []
+    for threshold, flavor in ((1 << 100, "persist"), (0, "persist_disk")):
+        monkeypatch.setattr(pinning, "SMALL_FRAME_BYTES", threshold)
+        with pinning.scope() as s:
+            lazy = D.minhash_near_duplicates(
+                docs, threshold=0.5, materialize=False
+            )
+            rows.append(sorted(tuple(r) for r in lazy.collect()))
+            pins = [p.frame for p in s.pins]
+            assert len(pins) >= 1  # signature frames
+            assert {p.flavor for p in s.pins} == {flavor}
+            for f in pins:
+                assert f.is_cached
+        for f in pins:
+            assert not f.is_cached
+    assert rows[0] == rows[1] and rows[0]
 
 
 def test_regex_shingles_equal_hof_shingles(spark):

@@ -1,9 +1,10 @@
-"""The keyed deferred-persist registry (plans/queries.py): claim
-semantics, generation aging, and the driver-contract reorder that makes
-the sharing families adjacent.
+"""The keyed deferred-persist registry (plans/queries.py over the query
+scopes of operators/pinning.py): claim semantics, scope aging, claim
+adoption, and the driver-contract reorder that makes the sharing
+families adjacent.
 
-The mechanism is a two-generation pin store — a query's pins survive
-exactly one subsequent query entry and are claimable there by key.
+Each query entry opens a pin scope; a query's pins survive exactly one
+subsequent query entry and are claimable there by key.
 These tests drive it through the SAME wrapped entry points the driver,
 bench, and correctness harness use, so the lifecycle they check is the
 one production traffic sees.
@@ -13,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from applications_analytics_midas_hbase_metrics_spark.operators import pinning
 from applications_analytics_midas_hbase_metrics_spark.plans import queries as Q
 from tests.conftest import SF_SMOKE
 
@@ -22,11 +24,14 @@ def _n_cached(spark) -> int:
 
 
 def setup_function(_fn):
-    Q.release_deferred()
+    pinning.release_all()
 
 
-def teardown_function(_fn):
-    Q.release_deferred()
+def _keys(age: int) -> dict:
+    """Keys bound in the newest (``age=0``) or the previous (``age=1``)
+    query scope."""
+    gens = pinning._GENS
+    return gens[-1 - age].keys if len(gens) > age else {}
 
 
 def _entry(spark, builder):
@@ -59,7 +64,7 @@ def test_claim_returns_previous_pin_and_ages_out(spark):
     _entry(spark, lambda s, d: s.range(0))
     _entry(spark, lambda s, d: s.range(0))
     assert Q.claim_deferred("pin-test", spark) is None
-    assert not Q._DEFERRED and not Q._PENDING
+    assert all(not g.keys and not g.pins for g in pinning._GENS)
 
 
 def test_unclaimed_pins_release_after_one_entry(spark):
@@ -69,10 +74,10 @@ def test_unclaimed_pins_release_after_one_entry(spark):
     _entry(spark, q1).count()
     # entry 2 does not claim: pin moves to the pending generation
     _entry(spark, lambda s, d: s.range(0))
-    assert "fleeting" in Q._PENDING
-    # entry 3: the stale pending generation is gone
+    assert "fleeting" in _keys(1)
+    # entry 3: the scope two entries back is released
     _entry(spark, lambda s, d: s.range(0))
-    assert "fleeting" not in Q._PENDING and "fleeting" not in Q._DEFERRED
+    assert "fleeting" not in _keys(1) and "fleeting" not in _keys(0)
 
 
 def test_claim_rejects_foreign_session(spark):
@@ -132,13 +137,13 @@ def test_cell_family_chain_shares_one_build(spark):
     assert len(names) == len(Q.QUERIES)
 
     qs["cell_build"](spark, SF_SMOKE).count()
-    assert "lineitem_cells:" + SF_SMOKE in Q._DEFERRED
+    assert "lineitem_cells:" + SF_SMOKE in _keys(0)
     cached_after_build = _n_cached(spark)
     n = qs["cell_decode"](spark, SF_SMOKE).count()
     assert n > 0
     # the claim re-pinned the same frame: no new persisted RDD appeared
     assert _n_cached(spark) <= cached_after_build
-    assert "lineitem_cells:" + SF_SMOKE in Q._DEFERRED
+    assert "lineitem_cells:" + SF_SMOKE in _keys(0)
 
 
 def test_dedup_corpus_claim_and_cold_paths_agree(spark):
@@ -153,13 +158,13 @@ def test_dedup_corpus_claim_and_cold_paths_agree(spark):
     qs = E.queries()
     registry = {**Q.QUERIES, **Q.EXTRA_QUERIES}
     # cold path: no pins anywhere
-    Q.release_deferred()
+    pinning.release_all()
     cold = sorted(
         r.id for r in registry["dedup_corpus"](spark, SF_SMOKE).collect()
     )
     # pairs-claim path: dedup_minhash pins the pair table; dedup_corpus
     # claims it and runs its own propagation
-    Q.release_deferred()
+    pinning.release_all()
     qs["dedup_minhash"](spark, SF_SMOKE).count()
     via_pairs = sorted(
         r.id for r in registry["dedup_corpus"](spark, SF_SMOKE).collect()
@@ -169,7 +174,7 @@ def test_dedup_corpus_claim_and_cold_paths_agree(spark):
     # labels-claim path: full family order — dedup_clusters (extra tier
     # since the round-8 rotation) pins its (id, cluster_id) frame;
     # dedup_corpus claims it, skipping the loop
-    Q.release_deferred()
+    pinning.release_all()
     qs["dedup_minhash"](spark, SF_SMOKE).count()
     registry["dedup_clusters"](spark, SF_SMOKE).count()
     via_labels = sorted(
@@ -186,11 +191,11 @@ def test_dedup_clusters_claim_and_cold_paths_agree(spark):
     import __spark_entry__ as E
 
     qs = {**E.queries(), **E.extra_queries()}
-    Q.release_deferred()
+    pinning.release_all()
     cold = sorted(
         (r.id, r.cluster_id) for r in qs["dedup_clusters"](spark, SF_SMOKE).collect()
     )
-    Q.release_deferred()
+    pinning.release_all()
     qs["dedup_minhash"](spark, SF_SMOKE).count()
     via_claim = sorted(
         (r.id, r.cluster_id) for r in qs["dedup_clusters"](spark, SF_SMOKE).collect()
@@ -222,11 +227,11 @@ def test_dedup_best_quality_labels_claim_agrees(spark):
         "dedup_corpus",
         "dedup_best_quality",
     ]
-    Q.release_deferred()
+    pinning.release_all()
     cold = sorted(tuple(r) for r in qs["dedup_best_quality"](spark, SF_SMOKE).collect())
     # warm family order: minhash pins pairs, corpus claims them and
     # pins labels, best_quality claims the labels
-    Q.release_deferred()
+    pinning.release_all()
     qs["dedup_minhash"](spark, SF_SMOKE).count()
     qs["dedup_corpus"](spark, SF_SMOKE).count()
     via_labels = sorted(
@@ -244,10 +249,50 @@ def test_blob_codec_claim_and_cold_paths_agree(spark):
 
     blob = E.extra_queries()["blob_codec"]
     build = E.queries()["cell_build"]
-    Q.release_deferred()
+    pinning.release_all()
     cold = sorted(tuple(r) for r in blob(spark, SF_SMOKE).collect())
-    Q.release_deferred()
+    pinning.release_all()
     build(spark, SF_SMOKE).count()
     via_claim = sorted(tuple(r) for r in blob(spark, SF_SMOKE).collect())
     assert f"lineitem_cells:{SF_SMOKE}" in Q.claimed_keys(), "claim must hit"
     assert via_claim == cold
+
+
+def test_claim_adopts_the_previous_query_scope(spark):
+    """A keyed pin's lineage may read other pins of the query that made
+    it — here the checkpoints of the connected_components loop under a
+    lazy persist.  A claim adopts the previous query's WHOLE scope, so
+    those ancestors live as long as the claimed frame: entry 1 pins the
+    labels and materializes only part of them, entry 2 claims them,
+    entry 3 releases the scope two entries back, and the claimed frame
+    must still collect in full."""
+    from applications_analytics_midas_hbase_metrics_spark.operators import (
+        graph as G,
+    )
+
+    key = "cc-adoption"
+    n = 400
+    edges = spark.range(n).select(
+        F.col("id").alias("id_a"), (F.col("id") - F.col("id") % 4).alias("id_b")
+    ).filter(F.col("id_a") != F.col("id_b"))
+    want = sorted((i, i - i % 4) for i in range(n))
+
+    def q1(s, d):
+        labels = Q.persist_deferred(G.connected_components(edges), key=key)
+        labels.limit(1).collect()  # materializes one partition only
+        return labels
+
+    claimed = []
+
+    def q2(s, d):
+        hit = Q.claim_deferred(key, s)
+        claimed.append(hit)
+        return hit
+
+    first = _entry(spark, q1)
+    assert first.rdd.getNumPartitions() >= 2
+    _entry(spark, q2)
+    assert claimed[0] is first
+    _entry(spark, lambda s, d: s.range(0))
+    got = sorted((r.id, r.cluster_id) for r in claimed[0].collect())
+    assert got == want

@@ -116,106 +116,82 @@ def test_job_status_report(spark, tmp_path):
     assert (r.job_seq_key, r.job_status, r.value) == ("12345678", "successful", "OK")
 
 
-def test_curation_pipeline_full_pin_modes(spark):
+def test_curation_pipeline_full_pin_modes(spark, monkeypatch):
     """The 10-stage pretraining build must produce an IDENTICAL
-    manifest under all three pin modes: the footprint-aware default
-    (round 15 — operators.pinning.FootprintPin: post-reduction sites
-    checkpoint-or-disk by plan-time estimate, the ExactSubstr shingle
-    frame NEVER pinned), the pre-round-15 blanket eager
-    localCheckpoint, and the blanket DISK_ONLY escape hatch
-    (text.disk_persist_pin, lineage kept) — pins are semantics-neutral
-    by contract, and this is the contract's test."""
+    manifest whichever flavor its pins take: the size-chosen default
+    (every site a small checkpoint at smoke SF) and the forced all-disk
+    mode (SMALL_FRAME_BYTES = 0: every eager pin a DISK_ONLY
+    checkpoint) — pins are semantics-neutral by contract, and this is
+    the contract's test."""
     from applications_analytics_midas_hbase_metrics_spark.operators import (
-        text as T,
+        pinning,
     )
     from applications_analytics_midas_hbase_metrics_spark.plans import (
         queries_curation as QC,
     )
     from tests.conftest import SF_SMOKE
 
-    base = sorted(
-        tuple(r)
-        for r in QC.q_curation_pipeline_full(spark, SF_SMOKE).collect()
-    )
+    with pinning.scope() as default:
+        base = sorted(
+            tuple(r)
+            for r in QC.q_curation_pipeline_full(spark, SF_SMOKE).collect()
+        )
+        flavors = {p.flavor for p in default.pins}
+    assert "checkpoint" in flavors, flavors
 
-    ckpt = sorted(
-        tuple(r)
-        for r in QC.q_curation_pipeline_full(
-            spark, SF_SMOKE, pin=lambda d: d.localCheckpoint(eager=True)
-        ).collect()
-    )
-    assert base == ckpt
-
-    pinned = []
-
-    def disk_pin(df):
-        out = T.disk_persist_pin(df)
-        pinned.append(out)
-        return out
-
-    try:
+    monkeypatch.setattr(pinning, "SMALL_FRAME_BYTES", 0)
+    with pinning.scope() as disk:
         alt = sorted(
             tuple(r)
-            for r in QC.q_curation_pipeline_full(
-                spark, SF_SMOKE, pin=disk_pin
-            ).collect()
+            for r in QC.q_curation_pipeline_full(spark, SF_SMOKE).collect()
         )
-    finally:
-        for f in pinned:
-            f.unpersist(blocking=True)
-
-    assert len(pinned) >= 8, len(pinned)  # every pin site took the hatch
+        sites = [p for p in disk.pins if p.label.startswith("curation:")]
+    assert len(sites) >= 8 and all(p.disk for p in sites), sites
     assert base == alt
 
 
-def test_curation_pipeline_full_footprint_disk_mode(spark):
-    """Round 16: the all-disk FootprintPin path — the rung's mode —
-    engages the stage-incremental drop accounting (eager drop-frame
-    pins, early predecessor releases) over plan-truncating ckpt_disk
-    pins.  The manifest must equal the default path's, every accounted
-    drop stage must appear in the decisions audit trail, and with the
-    deterministic checkpoint-RDD release a mis-scheduled early release
-    FAILS the query outright (the blocks are gone, no lineage to
-    recompute) — so this passing IS the consumers-first ordering
-    proof.  release() must then leave none of the policy's pins in the
-    block manager."""
-    from applications_analytics_midas_hbase_metrics_spark.operators.pinning import (
-        FootprintPin,
+def test_curation_pipeline_full_footprint_disk_mode(spark, monkeypatch):
+    """The all-disk mode (SMALL_FRAME_BYTES = 0) engages the
+    stage-incremental drop accounting (eager drop-frame pins, early
+    predecessor releases) over plan-truncating DISK_ONLY checkpoints.
+    The manifest must equal the default path's, every accounted drop
+    stage must appear in the scope's pin records, and because a
+    released checkpoint cannot recompute, a mis-scheduled early release
+    FAILS the query outright — so this passing IS the consumers-first
+    ordering proof.  Closing the scope must then leave none of the
+    pipeline's RDDs persistent."""
+    from applications_analytics_midas_hbase_metrics_spark.operators import (
+        pinning,
     )
     from applications_analytics_midas_hbase_metrics_spark.plans import (
         queries_curation as QC,
     )
-    from tests.conftest import SF_SMOKE
+    from tests.conftest import SF_SMOKE, persistent_rdd_ids
 
     base = sorted(
         tuple(r)
         for r in QC.q_curation_pipeline_full(spark, SF_SMOKE).collect()
     )
 
-    pol = FootprintPin(small_bytes=None)  # every pin site goes to disk
-    try:
+    monkeypatch.setattr(pinning, "SMALL_FRAME_BYTES", 0)
+    before = persistent_rdd_ids(spark)
+    with pinning.scope() as pipeline:
         alt = sorted(
             tuple(r)
-            for r in QC.q_curation_pipeline_full(
-                spark, SF_SMOKE, pin=pol
-            ).collect()
+            for r in QC.q_curation_pipeline_full(spark, SF_SMOKE).collect()
         )
-    finally:
-        tracked = [jr.id() for jr in pol._ckpt_rdds.values()]
-        pol.release()
+        labels = {p.label for p in pipeline.pins}
+        released = [p.label for p in pipeline.pins if not p.live]
     assert base == alt
-    labels = {d[3] for d in pol.decisions if d[3]}
     assert labels >= {
-        f"drop:{s}"
+        f"curation:drop:{s}"
         for s in (
             "quality", "exact_dup", "near_dup",
             "decontaminated", "domain_cap", "mixture",
         )
     }, labels
-    live = {
-        i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    }
-    assert not (live & set(tracked)), live & set(tracked)
+    assert "curation:exact_dedup" in released, released
+    assert persistent_rdd_ids(spark) - before == set()
 
 
 def test_curation_pipeline_full_manifest_anti_join_shape(spark):
@@ -247,62 +223,46 @@ def test_curation_pipeline_full_manifest_anti_join_shape(spark):
     ), anti_lines
 
 
-def test_footprint_pin_policy(spark):
-    """FootprintPin unit contract: small frames checkpoint; large
-    frames take the round-16 default ckpt_disk flavor (eager DISK_ONLY
-    localCheckpoint — plan truncated at the pin, release deterministic
-    via the tracked checkpoint RDD) or, under ``lineage=True``, the
-    round-15 DISK_ONLY persist with lineage kept; pre() never pins."""
+def test_footprint_pin_policy(spark, monkeypatch):
+    """operators/pinning.py's flavor contract: ``eager`` and the
+    plan-size estimate pick one of four flavors, each returns the same
+    rows, and :func:`pinning.release` drops the pin from the block
+    manager at once — a checkpoint through its RDD handle, since
+    ``DataFrame.unpersist`` is a no-op on a checkpointed frame."""
     from pyspark import StorageLevel
 
-    from applications_analytics_midas_hbase_metrics_spark.operators.pinning import (
-        FootprintPin,
-        plan_size_estimate,
+    from applications_analytics_midas_hbase_metrics_spark.operators import (
+        pinning,
     )
+    from tests.conftest import persistent_rdd_ids
 
     df = spark.range(1000).selectExpr("id", "id * 2 as v")
-    assert plan_size_estimate(df) is not None
-
-    pol = FootprintPin(small_bytes=1 << 30)
-    small = pol.post(df)
-    assert pol.decisions[-1][2] == "checkpoint"
-    assert small.count() == 1000
-
-    # lineage=True: the round-15 flavor — persist, lineage survives
-    pol2 = FootprintPin(small_bytes=1, lineage=True)
-    big = pol2.post(df)
-    assert pol2.decisions[-1][2] == "disk"
-    assert big.storageLevel == StorageLevel.DISK_ONLY
-    assert big.count() == 1000
-    # pre() is identity — the frame is NOT pinned
-    assert pol2.pre(df) is df
-    pol2.release()
-    assert big.storageLevel == StorageLevel.NONE
-    # lineage survived the release: the frame still evaluates
-    assert big.count() == 1000
-
-    # default (round 16): plan-truncating DISK_ONLY localCheckpoint.
-    # DataFrame.unpersist is a CacheManager no-op for checkpointed
-    # frames, so release must go through the tracked RDD handle — the
-    # block must LEAVE the block manager, not wait for GC.
-    pol3 = FootprintPin(small_bytes=1)
-    big2 = pol3.post(df, label="unit")
-    assert pol3.decisions[-1][2:] == ("ckpt_disk", "unit")
-    assert big2.count() == 1000
-    assert pol3.is_disk(big2) and not pol3.is_disk(df)
-    jsc = spark.sparkContext._jsc.sc()
-    rid = pol3._ckpt_rdds[id(big2)].id()
-    assert rid in {i.id() for i in jsc.getRDDStorageInfo()}
-    pol3.release()
-    assert rid not in {i.id() for i in jsc.getRDDStorageInfo()}
-    assert not pol3.is_disk(big2)
-
-    # small_bytes=None: every post pin goes to disk regardless
-    pol4 = FootprintPin(small_bytes=None)
-    forced = pol4.post(df)
-    assert pol4.decisions[-1][2] == "ckpt_disk"
-    assert forced.count() == 1000
-    pol4.release()
+    assert pinning.plan_size_estimate(df) is not None
+    want = sorted(tuple(r) for r in df.collect())
+    cases = [
+        (1 << 30, True, "checkpoint", None),
+        (1, True, "checkpoint_disk", None),
+        (1 << 30, False, "persist", StorageLevel.MEMORY_AND_DISK_DESER),
+        (1, False, "persist_disk", StorageLevel.DISK_ONLY),
+    ]
+    for threshold, eager, flavor, level in cases:
+        monkeypatch.setattr(pinning, "SMALL_FRAME_BYTES", threshold)
+        before = persistent_rdd_ids(spark)
+        with pinning.scope() as s:
+            out = pinning.pin(df.selectExpr("id", "v"), "unit", eager=eager)
+            assert [p.flavor for p in s.pins] == [flavor]
+            if level is not None:
+                assert out.storageLevel == level
+            assert sorted(tuple(r) for r in out.collect()) == want
+            assert persistent_rdd_ids(spark) - before, flavor
+            assert pinning.is_disk(out) == flavor.endswith("_disk")
+            pinning.release(out)
+            assert persistent_rdd_ids(spark) - before == set(), flavor
+            assert not pinning.is_disk(out)
+            assert [p.live for p in s.pins] == [False]
+        if not eager:
+            # a released lazy pin keeps its lineage: it still evaluates
+            assert sorted(tuple(r) for r in out.collect()) == want
 
 
 def test_gopher_quality_pipeline_stages(spark):
@@ -335,39 +295,31 @@ def test_gopher_quality_pipeline_stages(spark):
     assert "Window" not in plan
 
 
-def test_gopher_quality_pipeline_pin_modes(spark):
-    """Identical manifest under the default deferred memory pin and the
-    100 TB DISK_ONLY escape hatch (the curation_pipeline_full pin
-    contract extended to the composed quality pipeline)."""
+def test_gopher_quality_pipeline_pin_modes(spark, monkeypatch):
+    """Identical manifest under the default deferred pin (a lazy
+    in-memory persist at smoke SF) and the forced DISK_ONLY persist
+    (SMALL_FRAME_BYTES = 0) of its one multi-consumer site."""
     from applications_analytics_midas_hbase_metrics_spark.operators import (
-        text as T,
+        pinning,
     )
     from applications_analytics_midas_hbase_metrics_spark.plans import (
         queries_curation as QC,
     )
     from tests.conftest import SF_SMOKE
 
-    base = sorted(
-        tuple(r)
-        for r in QC.q_gopher_quality_pipeline(spark, SF_SMOKE).collect()
-    )
-    pinned = []
-
-    def disk_pin(df):
-        out = T.disk_persist_pin(df)
-        pinned.append(out)
-        return out
-
-    try:
-        alt = sorted(
-            tuple(r)
-            for r in QC.q_gopher_quality_pipeline(
-                spark, SF_SMOKE, pin=disk_pin
-            ).collect()
-        )
-    finally:
-        for f in pinned:
-            f.unpersist(blocking=True)
-
-    assert len(pinned) == 1  # the one multi-consumer site took the hatch
-    assert base == alt
+    flavors = []
+    for threshold in (pinning.SMALL_FRAME_BYTES, 0):
+        monkeypatch.setattr(pinning, "SMALL_FRAME_BYTES", threshold)
+        with pinning.scope() as s:
+            flavors.append(
+                sorted(
+                    tuple(r)
+                    for r in QC.q_gopher_quality_pipeline(
+                        spark, SF_SMOKE
+                    ).collect()
+                )
+            )
+            assert [p.flavor for p in s.pins if p.label == "deferred"] == (
+                ["persist"] if threshold else ["persist_disk"]
+            )
+    assert flavors[0] == flavors[1]

@@ -6,7 +6,6 @@ accumulate cached blocks."""
 
 from __future__ import annotations
 
-import gc
 import hashlib
 import inspect
 import math
@@ -143,32 +142,33 @@ def test_extra_tier_differential(spark, duck):
 # -- cache hygiene over a long-lived session --------------------------------
 
 def test_no_cache_growth_across_sweeps(spark):
-    """Queries that persist intermediates must RELEASE them: sweeping the
-    same persist-heavy queries repeatedly may not accumulate cached
-    blocks (transient localCheckpoint blocks of still-referenced results
-    are reclaimed by the context cleaner once dereferenced)."""
+    """Queries that pin intermediates must RELEASE them: after each
+    sweep of the same persist-heavy queries the live pins are exactly
+    those of the last two query scopes, their number does not grow, and
+    release_all() leaves none of the sweeps' RDDs persistent.  No GC,
+    no sleep, no slack: every release is deterministic."""
+    from applications_analytics_midas_hbase_metrics_spark.operators import (
+        pinning,
+    )
     from applications_analytics_midas_hbase_metrics_spark.plans import queries as Q
+    from tests.conftest import persistent_rdd_ids
 
     names = ["validation_diff", "dedup_minhash", "dedup_clusters"]
     registry = {**Q.QUERIES, **Q.EXTRA_QUERIES}
+    before = persistent_rdd_ids(spark)
 
-    def n_cached() -> int:
-        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-    def sweep() -> None:
+    sizes = []
+    for _ in range(3):
         for n in names:
             registry[n](spark, SF_SMOKE).collect()
-
-    counts = []
-    for _ in range(3):
-        sweep()
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(1.0)
-        counts.append(n_cached())
-    # pre-fix behavior leaked >= 3 persisted frames per sweep; allow a
-    # little slack for async cleaner timing
-    assert counts[-1] <= counts[0] + 2, counts
+        live = {id(p) for p in pinning.live_pins()}
+        scoped = {id(p) for g in pinning._GENS for p in g.pins if p.live}
+        assert len(pinning._GENS) == 2
+        assert live == scoped
+        sizes.append(len(live))
+    assert sizes[0] > 0 and len(set(sizes)) == 1, sizes
+    pinning.release_all()
+    assert persistent_rdd_ids(spark) - before == set()
 
 
 # -- session-global conf scoping under concurrency --------------------------

@@ -109,24 +109,14 @@ def test_bm25_topk_materialize_twins_agree(spark, sf_dir):
     pinned = sorted(
         map(key, bm25_topk(docs, queries, k=7).collect())  # driver-ok: k x 2
     )
-    from applications_analytics_midas_hbase_metrics_spark.operators.dedup import (
-        release_lazy_pins,
-    )
-
-    try:
-        lazy = sorted(
-            map(
-                key,
-                bm25_topk(
-                    docs, queries, k=7, materialize=False
-                ).collect(),  # driver-ok: k x 2
-            )
+    lazy = sorted(
+        map(
+            key,
+            bm25_topk(
+                docs, queries, k=7, materialize=False
+            ).collect(),  # driver-ok: k x 2
         )
-    finally:
-        # the lazy twin registers a persist in _LAZY_PINS — release it
-        # (as tools/plan_audit.py does) instead of leaking the cached
-        # frame into the rest of the shared-session suite (ADVICE r15)
-        release_lazy_pins()
+    )
     assert pinned == lazy and pinned
 
 

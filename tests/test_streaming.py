@@ -427,3 +427,37 @@ def test_stream_incremental_dedup_restart_idempotent(spark, tmp_path):
     run()
     got = {r.doc_id: r.verdict for r in spark.read.parquet(vd).collect()}
     assert len(got) == 3 and got[20] == "exact_dup"
+
+
+def test_stream_incremental_dedup_releases_batch_pins(spark, sf_dir, tmp_path):
+    """Each micro-batch runs in its own pin scope on the stream's
+    callback thread: the batch checkpoint and the lazy signature pins
+    of the near tier are released when the batch ends, so after an
+    availableNow run over three micro-batches no RDD persisted during
+    the run is still persistent."""
+    from applications_analytics_midas_hbase_metrics_spark.streaming import (
+        dedup_stream as DS,
+    )
+    from tests.conftest import persistent_rdd_ids
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "text"
+    )
+    store = str(tmp_path / "store")
+    DS.seed_signature_store(docs.filter(F.col("doc_id") % 3 == 0), store, 32)
+    src = str(tmp_path / "src")
+    docs.filter(F.col("doc_id") % 3 != 0).repartition(3).write.parquet(src)
+    stream = spark.readStream.schema(docs.schema).option(
+        "maxFilesPerTrigger", "1"
+    ).parquet(src)
+    verdicts = str(tmp_path / "verdicts")
+    before = persistent_rdd_ids(spark)
+    q = DS.stream_incremental_dedup(
+        stream, store, verdicts, str(tmp_path / "ckpt"),
+        num_hashes=32, trigger_available_now=True,
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+    batches = spark.read.parquet(verdicts).select("ingest_batch").distinct()
+    assert batches.count() >= 2
+    assert persistent_rdd_ids(spark) - before == set()

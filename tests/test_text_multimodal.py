@@ -416,21 +416,12 @@ def test_ngram_lm_score_copartition_equivalence(spark):
             F.conv(F.col("id") % 5, 10, 16),
         ).alias("text"),
     )
-    from applications_analytics_midas_hbase_metrics_spark.operators.dedup import (
-        release_lazy_pins,
-    )
-
     base = sorted(
         T.ngram_lm_score(docs, copartition=False).collect()
     )
-    try:
-        copart = sorted(
-            T.ngram_lm_score(docs, copartition=True).collect()
-        )
-    finally:
-        # the co-partitioned pin is a lineage-kept persist (it must
-        # carry its partitioning); don't leak it into later tests
-        release_lazy_pins()
+    copart = sorted(
+        T.ngram_lm_score(docs, copartition=True).collect()
+    )
     assert base == copart
 
 
@@ -1349,13 +1340,18 @@ def test_audio_fingerprint_stereo_exact(spark):
     assert ch == {0: 2, 1: 2, 2: 2}
 
 
-def test_disk_persist_pin_identical_verdicts(spark):
-    """pin=disk_persist_pin (the 100 TB escape hatch: DISK_ONLY persist
-    with lineage instead of the default lineage-truncating
-    localCheckpoint) must produce byte-identical cuts for BOTH the
-    self-contained and the incremental ExactSubstr operators, and the
-    pinned frame must really be DISK_ONLY."""
+def test_disk_persist_pin_identical_verdicts(spark, monkeypatch):
+    """With SMALL_FRAME_BYTES forced to 0, a ``pin=`` that takes the
+    lazy DISK_ONLY flavor (lineage kept) instead of the default
+    lineage-truncating DISK_ONLY checkpoint must produce byte-identical
+    cuts for
+    BOTH the self-contained and the incremental ExactSubstr operators,
+    and the pinned frame must really be DISK_ONLY."""
     from pyspark import StorageLevel
+
+    from applications_analytics_midas_hbase_metrics_spark.operators import (
+        pinning,
+    )
 
     docs = spark.createDataFrame(
         [
@@ -1366,15 +1362,16 @@ def test_disk_persist_pin_identical_verdicts(spark):
         ],
         ["doc_id", "text"],
     )
+    monkeypatch.setattr(pinning, "SMALL_FRAME_BYTES", 0)
     pinned = []
 
     def pin(df):
-        out = T.disk_persist_pin(df)
+        out = pinning.pin(df, "substring_disk", eager=False)
         assert out.storageLevel == StorageLevel.DISK_ONLY
         pinned.append(out)
         return out
 
-    try:
+    with pinning.scope():
         base = sorted(
             tuple(r) for r in T.exact_substring_dedup(docs, k=3).collect()
         )
@@ -1406,9 +1403,6 @@ def test_disk_persist_pin_identical_verdicts(spark):
         assert inc_got == inc_base
         assert any(r[2] > 0 for r in inc_base)  # history cut the batch
         assert len(pinned) == 2  # both operators routed through the pin
-    finally:
-        for f in pinned:
-            f.unpersist()
 
 
 def test_gopher_quality_rules_hand_checked(spark):

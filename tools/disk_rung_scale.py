@@ -41,22 +41,15 @@ Env knobs (round-14 follow-ups):
   RUNG_STEPS=a,b,...   run only the named steps (default: all of
                        dedup_exact dedup_paragraphs dedup_minhash
                        ann curation)
-  RUNG_PIPELINE_PIN=policy_lineage  run the curation pipeline with
-                       the round-15 FootprintPin flavor (lineage-kept
-                       DISK_ONLY persists) for the A/B against the
-                       round-16 default (plan-truncating DISK_ONLY
-                       localCheckpoints + stage-incremental drop
-                       accounting)
-  RUNG_PIPELINE_PIN=disk  run the curation pipeline with
-                       text.disk_persist_pin (DISK_ONLY serialized,
-                       lineage kept) instead of the default eager
-                       localCheckpoint — the flip the FIRST rung run
-                       measured: at this rung the default pin's
-                       MEMORY_AND_DISK deserialized unroll serializes
-                       all 32 tasks on the UnifiedMemoryManager lock
-                       (jstack: reserveUnrollMemoryForThisTask
-                       convoy) and the pin stage alone ran > 1 h
-                       before being killed
+  RUNG_PIPELINE_PIN=all_disk  run the curation pipeline with
+                       pinning.SMALL_FRAME_BYTES forced to 0, so every
+                       pin is a DISK_ONLY checkpoint — the flip the FIRST
+                       rung run measured: at this rung the in-memory
+                       checkpoint's MEMORY_AND_DISK deserialized unroll
+                       serializes all 32 tasks on the
+                       UnifiedMemoryManager lock (jstack:
+                       reserveUnrollMemoryForThisTask convoy) and the pin
+                       stage alone ran > 1 h before being killed
 
 Evidence printed per step: wall seconds, output rows, result checksum
 (xxhash64 bit_xor — comparable across reruns: every operator here is
@@ -409,103 +402,80 @@ def main() -> None:
     if "curation" in steps:
         # the composed ten-stage pipeline, full manifest, big-id plant
         # offset.  RUNG_PIPELINE_PIN selects the pin mode:
-        #   policy (default) — the round-15 footprint-aware FootprintPin
-        #     (post-reduction sites checkpoint-or-DISK_ONLY by plan-time
-        #     estimate; the shingle frame NEVER pinned) — the mode the
-        #     round-14 findings prescribed: the blanket-checkpoint
-        #     unroll convoyed >1 h and the blanket-disk footprint blew
-        #     40× input at mult=150
-        #   disk — blanket text.disk_persist_pin (the round-14 flavor)
-        #   ckpt — blanket eager localCheckpoint (the pre-round-15
-        #     default, kept reproducible)
-        from applications_analytics_midas_hbase_metrics_spark.operators.pinning import (
-            FootprintPin,
-        )
-        from applications_analytics_midas_hbase_metrics_spark.operators.text import (
-            disk_persist_pin,
+        #   policy (default) — operators/pinning.py's size-chosen flavors
+        #     (checkpoint below SMALL_FRAME_BYTES, DISK_ONLY checkpoint
+        #     above) — the mode the round-14 findings prescribed: the
+        #     blanket-checkpoint unroll convoyed >1 h and the blanket-disk
+        #     footprint blew 40× input at mult=150
+        #   all_disk — the same pipeline with the threshold forced to 0,
+        #     so every pin goes to disk
+        import threading
+
+        from applications_analytics_midas_hbase_metrics_spark.operators import (
+            pinning,
         )
         from applications_analytics_midas_hbase_metrics_spark.plans.queries_curation import (
             q_curation_pipeline_full,
         )
 
         mode = os.environ.get("RUNG_PIPELINE_PIN", "policy")
-        if mode == "disk":
-            pin = disk_persist_pin
-        elif mode == "ckpt":
-            pin = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
-        elif mode == "policy_lineage":
-            # round-15 flavor A/B: lineage-kept DISK_ONLY persists
-            # (pays the nested plan-info render per pinned consumer)
-            pin = FootprintPin(lineage=True)
-        else:
-            pin = FootprintPin()
+        if mode == "all_disk":
+            pinning.SMALL_FRAME_BYTES = 0
         label = f"curation_pipeline_full_{mode}pin"
-        sampler = stop = series = None
-        if isinstance(pin, FootprintPin):
-            # TIME-SAMPLED pinned-footprint probe (round 16): a daemon
-            # thread polls the block manager every 0.5 s for the whole
-            # step, so the series brackets BOTH edges of every pin's
-            # lifetime — the round-15 at-pin-site probe missed peaks
-            # between sites and the release edges (ADVICE r15), making
-            # its number a lower/mixed bound.  The sum is the block
-            # manager TOTAL (any non-policy internal pin counts too) —
-            # that is the number the "peak pinned <= ~3x input"
-            # criterion is about.
-            import threading
+        # TIME-SAMPLED pinned-footprint probe (round 16): a daemon thread
+        # polls the block manager every 0.5 s for the whole step, so the
+        # series brackets BOTH edges of every pin's lifetime.  The sum is
+        # the block manager TOTAL — the number the "peak pinned <= ~3x
+        # input" criterion is about.
+        series = []
+        stop = threading.Event()
+        jsc = spark.sparkContext._jsc.sc()
 
-            series = []
-            stop = threading.Event()
-            jsc = spark.sparkContext._jsc.sc()
+        def _sample():
+            while not stop.is_set():
+                try:
+                    live = jsc.getRDDStorageInfo()
+                    series.append((
+                        time.time(),
+                        sum(i.diskSize() + i.memSize() for i in live),
+                    ))
+                except Exception:  # noqa: BLE001 — probe only
+                    pass
+                stop.wait(0.5)
 
-            def _sample():
-                while not stop.is_set():
-                    try:
-                        live = jsc.getRDDStorageInfo()
-                        series.append((
-                            time.time(),
-                            sum(i.diskSize() + i.memSize() for i in live),
-                        ))
-                    except Exception:  # noqa: BLE001 — probe only
-                        pass
-                    stop.wait(0.5)
-
-            sampler = threading.Thread(target=_sample, daemon=True)
-            sampler.start()
-        step(
-            label,
-            lambda: q_curation_pipeline_full(
-                spark, RUNG_DIR, pin=pin, plant_offset=10**9
-            ),
-        )
-        if isinstance(pin, FootprintPin):
-            pin.release()
-            time.sleep(1.5)  # one post-release sample closes the series
-            stop.set()
-            sampler.join(timeout=5)
+        sampler = threading.Thread(target=_sample, daemon=True)
+        sampler.start()
+        with pinning.scope() as pipeline:
+            step(
+                label,
+                lambda: q_curation_pipeline_full(
+                    spark, RUNG_DIR, plant_offset=10**9
+                ),
+            )
+            records = [(p.label, p.est, p.flavor) for p in pipeline.pins]
+        time.sleep(1.5)  # one post-release sample closes the series
+        stop.set()
+        sampler.join(timeout=5)
+        print("PIN records (label, est bytes, flavor):", records, flush=True)
+        if series:
+            t0 = series[0][0]
+            peak_t, peak_b = max(series, key=lambda s: s[1])
             print(
-                "PIN decisions (site#, est bytes, flavor, label):",
-                pin.decisions,
+                f"PIN peak pinned bytes: {peak_b}"
+                f" ({peak_b / 2**30:.2f} GiB) at t+{peak_t - t0:.0f}s"
+                f" of {series[-1][0] - t0:.0f}s"
+                f" ({len(series)} samples @0.5s)",
                 flush=True,
             )
-            if series:
-                t0 = series[0][0]
-                peak_t, peak_b = max(series, key=lambda s: s[1])
-                print(
-                    f"PIN peak pinned bytes: {peak_b}"
-                    f" ({peak_b / 2**30:.2f} GiB) at t+{peak_t - t0:.0f}s"
-                    f" of {series[-1][0] - t0:.0f}s"
-                    f" ({len(series)} samples @0.5s)",
-                    flush=True,
-                )
-                stride = max(1, len(series) // 40)
-                print(
-                    "PIN footprint series (t_rel_s, GiB):",
-                    [
-                        (round(t - t0), round(b / 2**30, 2))
-                        for t, b in series[::stride]
-                    ],
-                    flush=True,
-                )
+            stride = max(1, len(series) // 40)
+            print(
+                "PIN footprint series (t_rel_s, GiB):",
+                [
+                    (round(t - t0), round(b / 2**30, 2))
+                    for t, b in series[::stride]
+                ],
+                flush=True,
+            )
 
     print("METRICS", json.dumps(_metrics(spark)), flush=True)
     if not keep:

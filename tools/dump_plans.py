@@ -35,14 +35,10 @@ def main() -> int:
 
     spark = get_spark(app_name=f"dump_plans_{suffix}", cpus=8)
     qs = {**E.queries(), **E.extra_queries()}
-    from applications_analytics_midas_hbase_metrics_spark.plans import queries as Q
-    from applications_analytics_midas_hbase_metrics_spark.operators.dedup import (
-        release_lazy_pins,
-    )
+    from applications_analytics_midas_hbase_metrics_spark.operators import pinning
 
     for name in names:
-        Q.release_deferred()
-        release_lazy_pins()
+        pinning.release_all()
         try:
             df = qs[name](spark, SF_DIR)
             buf = io.StringIO()

@@ -50,14 +50,12 @@ def main() -> None:
     )
     print(f"# corpus: {corpus.count()} docs (factor {FACTOR})", flush=True)
 
-    from applications_analytics_midas_hbase_metrics_spark.operators.dedup import (
-        release_lazy_pins,
-    )
+    from applications_analytics_midas_hbase_metrics_spark.operators import pinning
 
     for variant in (False, True):
         walls = []
         for i in range(REPEATS):
-            release_lazy_pins()  # each run rebuilds its own pins
+            pinning.release_all()  # each run rebuilds its own pins
             spark.sparkContext.setJobDescription(
                 f"lm_score copartition={variant} run{i}"
             )

@@ -124,8 +124,8 @@ CHECKS = {
     # round 15: the LeftAnti fragment moved to
     # tests/test_pipelines.py::
     # test_curation_pipeline_full_manifest_anti_join_shape (full
-    # executed-plan string) — the FootprintPin default's disk persist
-    # at the `mixed` site nests an AQE render whose
+    # executed-plan string) — a disk persist at the `mixed` site
+    # nests an AQE render whose
     # '== Initial Plan ==' marker lands before the manifest's anti
     # joins, so they sit beyond this audit's sliced plan (the
     # dsir_weights caveat below).
@@ -191,7 +191,7 @@ def _fragment_in(fragment: str, plan: str) -> bool:
 
 def main() -> None:
     import __spark_entry__ as E
-    from applications_analytics_midas_hbase_metrics_spark.plans import queries as Q
+    from applications_analytics_midas_hbase_metrics_spark.operators import pinning
     from applications_analytics_midas_hbase_metrics_spark.session import get_spark
 
     from applications_analytics_midas_hbase_metrics_spark.operators import dedup as D
@@ -670,19 +670,16 @@ def main() -> None:
         "(scan-side exchanges = the top-k reduction's only).",
         "",
     ]
-    from applications_analytics_midas_hbase_metrics_spark.plans import queries as Q
-
     failures: list[str] = []
     for name in [n for n in qs if n in only]:
         # cell_prefix_scan needs an on-disk cell store to show parquet
         # pushdown; the in-memory build shows the agg pipeline instead.
         # Flush the keyed pin registry first: the audit documents the
         # COLD plan shape, never a claimed cached-scan shortcut.
-        Q.release_deferred()
+        pinning.release_all()
         df = qs[name](spark, SF_DIR)
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
-        D.release_lazy_pins()  # lazy twins pin caches; don't leak across audits
         final = plan.split("== Initial Plan ==")[0]
         n_exch = len(re.findall(r"Exchange (hashpartitioning|rangepartitioning|SinglePartition|RoundRobin)", final))
         n_bcast = final.count("BroadcastHashJoin")

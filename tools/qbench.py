@@ -34,7 +34,7 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     import __spark_entry__ as E
-    from applications_analytics_midas_hbase_metrics_spark.plans import queries as Q
+    from applications_analytics_midas_hbase_metrics_spark.operators import pinning
     from applications_analytics_midas_hbase_metrics_spark.session import get_spark
 
     spark = get_spark(app_name="midas-qbench", cpus=cpus)
@@ -50,7 +50,7 @@ def main() -> None:
         runs = []
         for _ in range(k):
             if cold:
-                Q.release_deferred()
+                pinning.release_all()
             t0 = time.monotonic()
             n = qs[name](spark, sf_dir).count()
             runs.append(round(time.monotonic() - t0, 3))

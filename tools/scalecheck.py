@@ -37,6 +37,7 @@ def main() -> None:
 
     from applications_analytics_midas_hbase_metrics_spark.operators import dedup as D
     from applications_analytics_midas_hbase_metrics_spark.operators import graph as G
+    from applications_analytics_midas_hbase_metrics_spark.operators import pinning
     from applications_analytics_midas_hbase_metrics_spark.session import get_spark
 
     spark = get_spark(app_name="midas-scalecheck", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -67,7 +68,7 @@ def main() -> None:
         t0 = time.monotonic()
         n_nodes = G.connected_components(pairs).count()
         t_cc = time.monotonic() - t0
-        D.release_lazy_pins()
+        pinning.release_all()
 
         for op, dt, n_out in (
             ("exact_dedup", t_exact, n_exact),

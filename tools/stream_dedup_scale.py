@@ -117,11 +117,9 @@ def main() -> None:
             num_hashes=96,
         )
         rows = sorted((r.doc_id, r.verdict) for r in out.collect())
-        from applications_analytics_midas_hbase_metrics_spark.operators.dedup import (
-            release_lazy_pins,
-        )
+        from applications_analytics_midas_hbase_metrics_spark.operators import pinning
 
-        release_lazy_pins()
+        pinning.release_all()
         return rows, round(time.monotonic() - t0, 2)
 
     v_before, t_frag = classify_wall()
