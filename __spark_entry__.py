@@ -40,79 +40,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     to run back-to-back: pins survive exactly one query entry, so
     adjacency is what lets a family member claim its sibling's cached
     frame instead of rebuilding the subplan — the cell family shares the
-    lineitem cell build, the dedup family the minhash pair table.  The
-    SET of gated queries is unchanged."""
+    lineitem cell build, the dedup family the minhash pair table and the
+    connected-components labels.  The SET of gated queries is unchanged."""
     chains = {
         # after this query ...         ... pull these up next
-        # (blob_codec left the gated tier in the round-6 rotation;
-        # validation_missing / dedup_clusters left in the round-8
-        # rotation; window_tumbling / doc_fingerprint /
-        # multimodal_frames / sample_per_source left in the round-9
-        # rotation for winnow_cut / ann_pq / stream_sessionize /
-        # dedup_incremental, and tfidf_stopwords / window_session left
-        # mid-round-9 for bm25_topk / stream_stream_join (each subsumed
-        # by the stronger gated sibling) — subsumed coverage still
-        # claims shared frames when run adjacently in the extra tier.
-        # Late round 9: topk_orders / pivot_events / lang_id /
-        # label_centroid_features left (limit, conditional-agg reshape,
-        # map-side text scoring, and per-label centroid math are each
-        # covered by a stronger gated sibling) for line_dedup /
-        # kmeans_fixed / vocab_canonicalize / gapfill_hourly.
-        # Round 10: gapfill_hourly / train_val_test_split /
-        # stream_running_totals / pack_chunks / winnow_overlap_pairs /
-        # chunk_dedup left (each subsumed by a stronger gated sibling —
-        # chunk_dedup by the NEW substring_dedup, its exact boundary-free
-        # superset) for substring_dedup + the five never-gated
-        # high-value rows: quality_classifier, pca_top_direction,
-        # pagerank_coview, bfs_reach, q9_product_profit.
-        # Round 11: quality_score (subsumed by quality_classifier +
-        # curation_pipeline_full's quality stage), multimodal_features
-        # (by image_near_pairs' real decode+banded join),
-        # ann_pq (by ann_ivf_pq, its IVFxPQ composition), line_dedup
-        # (by substring_dedup, boundary-free superset — the r10
-        # chunk_dedup argument), pmi_collocations (by ngram_lm_score's
-        # count-then-join bigram shape), dedup_simhash (by
-        # dedup_embedding's hyperplane-sign multi-index banding) left
-        # for html_extract, curation_pipeline_full (the 10-stage
-        # manifest), image_near_pairs, ann_ivf_pq, q21_lone_returner,
-        # domain_cap.
-        # Round 12: log_extract (P1 contains-chain + F7 regex both
-        # also exercised by the gated job_status_scan), salt_distribution
-        # (R2 salt parity stays gated through cell_build's salted row
-        # keys + golden-tested in test_keys), props_extract (S12/U1,
-        # stable since r2), quantiles, substring_dedup + html_extract
-        # (both are stages 5/1 of the gated curation_pipeline_full) and
-        # stream_dedupe (streamed-store bookkeeping, replaced by the
-        # web-family streamed row) left for: url_dedup (rewritten
-        # skew-safe + NULL-URL pass-through this round),
-        # domain_extract_psl (full PSL wildcard/exception rules),
-        # domain_extract_idn (punycode/IPv6), domain_mixture, xml_scan,
-        # csv_quoted_scan (storage boundaries), domain_stats_streamed
-        # (streamed rollup == batch domain_stats).
-        # Round 12 second swap: ann_topk (exact-cosine surface keeps
-        # two gated siblings — ann_ivf/ann_ivf_pq rerank against the
-        # same exact scores and gate their own recall) and
-        # pagerank_coview (iterative-loop surface keeps bfs_reach +
-        # the label-propagation supersteps) left for the two NEW ops:
-        # gopher_line_signals, unicode_nfc.
-        # Round 12 third swap: gopher_line_signals left (its line
-        # battery is driven end-to-end by the NEW composed
-        # gopher_quality_pipeline — NFC -> C4 -> line battery ->
-        # n-gram battery -> quality rules under one manifest oracle;
-        # the paragraph granularity stays uniquely sweep-checked in
-        # the extra-tier row) for gopher_quality_pipeline.
-        # The gated ANN family (ann_ivf -> ann_ivf_pq) remains adjacent
-        # by registration order and relays pinned codebooks; with
-        # ann_topk extra-tier, ann_ivf rebuilds the brute-force truth
-        # itself via the claim_deferred fallback —
-        # see queries_ext._ann_brute10.)
-        # (Round 15 is an OPTIMIZATION round: the gated set is frozen
-        # at the round-14 fifty — the driver diffs this set against
-        # CORRECTNESS_r14 and a disappeared row is a regression.  The
-        # only reorder: dedup_best_quality is pulled adjacent to the
-        # graph family — it labels the SAME full-corpus pair graph, so
-        # it claims the cc_labels frame dedup_corpus now pins instead
-        # of rebuilding the whole pair family from scratch mid-sweep.)
         "cell_lookup": ["validation_diff"],
         "dedup_minhash": ["dedup_corpus", "dedup_best_quality"],
     }

@@ -215,29 +215,6 @@ def write_cells(cells: DataFrame, path: str, mode: str = "overwrite") -> None:
     _write_layout(cells.repartition("salt"), path, mode)
 
 
-def write_cells_bucketed(
-    cells: DataFrame,
-    table_name: str,
-    buckets: int = SALT_BUCKETS,
-) -> None:
-    """Persist the cell store as a BUCKETED catalog table: hash-bucketed
-    and sorted by row_key.
-
-    This is the co-located-join layout: any join or aggregation keyed on
-    row_key against another table bucketed the same way runs with ZERO
-    exchanges — at 100 TB that's the difference between re-shuffling the
-    store for every validation run and reading it in place.  (Parquet
-    `partitionBy` handles pruning; `bucketBy` handles join locality —
-    they solve different problems and compose.)"""
-    (
-        cells.write.mode("overwrite")
-        .bucketBy(buckets, "row_key")
-        .sortBy("row_key", "col_name")
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-
-
 def read_cells(
     spark: SparkSession, path: str, prefix: str | None = None
 ) -> DataFrame:

@@ -555,7 +555,7 @@ def stratified_percent_rank(
     its shuffle share instead of one funnel task; the payload crosses
     the wire once, in the join-back, exactly like the old window
     exchange.  Corpora that can tolerate approximate cutoffs can skip
-    the rank entirely via ``sketch_shard_quantiles`` thresholds."""
+    the rank entirely via approximate quantile thresholds."""
     narrow = df.select(id_col, group_col, score_col)
     ranked = _two_phase_rank(
         narrow, [group_col], [score_col, id_col], out="_r", total_col="_n"

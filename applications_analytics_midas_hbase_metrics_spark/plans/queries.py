@@ -423,8 +423,8 @@ def q_cell_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    # retired to the pytest tier: store_roundtrip runs the same prefix
-    # scan THROUGH the disk boundary (strictly stronger gate for S6/P8)
+    # extra tier: store_roundtrip gates the same prefix scan through
+    # the disk boundary (S6/P8)
     "cell_prefix_scan",
     oracle=f"""
     SELECT {esc_ctrl_sql('row_key')} AS row_key, col_name,
@@ -811,10 +811,8 @@ def q_salt_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    # rotated to the extra tier in round 6 (driver-gated r1-r5, always
-    # hash-green): its operator coverage (A2/F8 blob encode) is subsumed
-    # by cell_build + store_roundtrip, freeing a driver slot for a query
-    # that had never had a driver-hard row (trigger_csv_scan)
+    # extra tier: the A2/F8 blob encode is also run by the gated
+    # cell_build + store_roundtrip
     "blob_codec",
     oracle=f"""
     SELECT {esc_ctrl_sql('row_key')} AS row_key, col_name,
@@ -839,8 +837,8 @@ def q_blob_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    # rotated OUT late round 9 (subsumed: the limit/TOP-n surface is
-    # exercised by window_rank and every two-phase top-k gate)
+    # extra tier: the gated q21_lone_returner also plans its limit as a
+    # TakeOrderedAndProject; this row is the reference's O2/O3 citation
     "topk_orders",
     oracle="""
     SELECT o_orderkey, o_custkey, o_totalprice
@@ -1010,12 +1008,6 @@ def q_mupr_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    # rotated INTO the driver gate in round 6 (extra-tier green in
-    # r4-r5); rotated back OUT at the end of round 9 — three rounds of
-    # driver-hard rows for the S4 header-CSV boundary, coverage
-    # continues under the identical extra-tier check; the slot goes to
-    # pmi_collocations (the round-9 phrase-mining family's first
-    # driver-hard row)
     "trigger_csv_scan",
     oracle="""
     SELECT 'path_' || CAST(o_orderkey AS VARCHAR) AS file_path,
@@ -1118,10 +1110,8 @@ def q_store_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    # rotated INTO the driver gate in round 7 (extra-tier green since
-    # introduction): S9 — the last §2 surface without a driver-hard
-    # oracle row (VERDICT r6 "What's missing" #1) — now turns red at
-    # the driver if the JDBC roundtrip or pushdown regresses
+    # S9's driver-hard row: turns red at the driver if the JDBC
+    # roundtrip or pushdown regresses
     "jdbc_scan",
     oracle="""
     SELECT o_orderpriority AS priority,

@@ -1,5 +1,6 @@
 """Analytics-surface queries beyond the reference: as-of join, skew-salted
-aggregation, rollup, ranking windows, set operations.  All oracle-checked.
+aggregation, rollup, interval join, gap-fill, debounce, anomalies, EWMA.
+All oracle-checked.
 """
 
 from __future__ import annotations
@@ -9,7 +10,6 @@ from pyspark.sql import functions as F
 
 from ..operators import joins as J
 from .queries import register, register_extra, t
-from .queries_ext import _TOKS, _spread
 
 
 # ---------------------------------------------------------------------------
@@ -128,82 +128,6 @@ def q_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Ranking window functions (row_number / rank / dense_rank)
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    # rotated OUT to the extra tier in round 7 (driver-green r1-r6):
-    # ranking-window coverage is subsumed by gated siblings
-    # (window_session, topk_orders, sample_per_source's two-phase
-    # ranks); the identical differential check continues here
-    "window_rank",
-    oracle="""
-    SELECT c_mktsegment, c_custkey, c_acctbal,
-           CAST(row_number() OVER w AS INT) AS rn,
-           CAST(rank() OVER (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC)
-               AS INT) AS rnk,
-           CAST(dense_rank() OVER (PARTITION BY c_mktsegment
-                ORDER BY c_acctbal DESC) AS INT) AS drnk
-    FROM customer
-    WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey)
-    QUALIFY rn <= 5
-    """,
-)
-def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    cust = t(spark, sf_dir, "customer")
-    w_rn = Window.partitionBy("c_mktsegment").orderBy(
-        F.col("c_acctbal").desc(), F.col("c_custkey")
-    )
-    w_rank = Window.partitionBy("c_mktsegment").orderBy(F.col("c_acctbal").desc())
-    return (
-        cust.select(
-            "c_mktsegment",
-            "c_custkey",
-            "c_acctbal",
-            F.row_number().over(w_rn).cast("int").alias("rn"),
-            F.rank().over(w_rank).cast("int").alias("rnk"),
-            F.dense_rank().over(w_rank).cast("int").alias("drnk"),
-        )
-        .filter(F.col("rn") <= 5)
-    )
-
-
-# ---------------------------------------------------------------------------
-# Set operations: union all / intersect / except
-# ---------------------------------------------------------------------------
-
-
-@register_extra(
-    # retired to the pytest tier: semi/anti set semantics are gated by
-    # validation_diff/validation_missing
-    "set_ops",
-    oracle="""
-    WITH a AS (SELECT DISTINCT c_nationkey FROM customer
-               WHERE c_mktsegment = 'BUILDING'),
-         b AS (SELECT DISTINCT c_nationkey FROM customer
-               WHERE c_mktsegment = 'MACHINERY')
-    SELECT 'both' AS tag, c_nationkey FROM (SELECT * FROM a INTERSECT SELECT * FROM b)
-    UNION ALL
-    SELECT 'only_a', c_nationkey FROM (SELECT * FROM a EXCEPT SELECT * FROM b)
-    UNION ALL
-    SELECT 'only_b', c_nationkey FROM (SELECT * FROM b EXCEPT SELECT * FROM a)
-    """,
-)
-def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = t(spark, sf_dir, "customer")
-    a = cust.filter(F.col("c_mktsegment") == "BUILDING").select("c_nationkey").distinct()
-    b = cust.filter(F.col("c_mktsegment") == "MACHINERY").select("c_nationkey").distinct()
-    return (
-        a.intersect(b).select(F.lit("both").alias("tag"), "c_nationkey")
-        .unionAll(a.exceptAll(a.intersect(b)).select(F.lit("only_a").alias("tag"), "c_nationkey"))
-        .unionAll(b.exceptAll(a.intersect(b)).select(F.lit("only_b").alias("tag"), "c_nationkey"))
-    )
-
-
-# ---------------------------------------------------------------------------
 # Interval (range containment) join: events inside maintenance windows
 # ---------------------------------------------------------------------------
 
@@ -270,121 +194,6 @@ def q_interval_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    "corpus_report",
-    oracle=f"""
-    WITH d AS (
-        SELECT doc_id, source, lang,
-               CAST(len({_TOKS}) AS BIGINT) AS nt,
-               sha256(text) AS h
-        FROM documents
-    ),
-    dup AS (
-        SELECT h FROM d GROUP BY h HAVING count(*) > 1
-    )
-    SELECT source,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(nt) AS BIGINT) AS n_tokens,
-           CAST(sum(CASE WHEN dup.h IS NOT NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_exact_dup_docs,
-           CAST(count(DISTINCT lang) AS BIGINT) AS n_langs
-    FROM d LEFT JOIN dup USING (h)
-    GROUP BY 1
-    """,
-)
-def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The first query a corpus owner runs: one pass of per-source
-    health numbers — doc/token volumes, corpus-WIDE exact-duplicate
-    membership (a doc counts as dup if its content hash repeats
-    anywhere, not just within its source), language spread.  All
-    map-side expressions feeding two aggregations; the duplicate-hash
-    set joins back hash-keyed (never row-wise text)."""
-    from ..operators.dedup import tokens
-
-    d = _spread(spark, t(spark, sf_dir, "documents")).select(
-        "doc_id",
-        "source",
-        "lang",
-        F.size(tokens("text")).cast("bigint").alias("nt"),
-        F.sha2(F.col("text"), 256).alias("h"),
-    )
-    dup = (
-        d.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") > 1)
-        .select("h")
-        .withColumn("_d", F.lit(1))
-    )
-    return (
-        d.join(dup, "h", "left")
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("nt").cast("bigint").alias("n_tokens"),
-            F.sum(F.coalesce("_d", F.lit(0))).cast("bigint").alias(
-                "n_exact_dup_docs"
-            ),
-            F.countDistinct("lang").cast("bigint").alias("n_langs"),
-        )
-    )
-
-
-@register_extra(
-    "funnel_conversion",
-    oracle="""
-    WITH v AS (SELECT user_id, min(ts) AS t1 FROM events
-               WHERE event_type = 'view' GROUP BY 1),
-    c AS (SELECT e.user_id, min(e.ts) AS t2
-          FROM events e JOIN v ON e.user_id = v.user_id AND e.ts > v.t1
-          WHERE e.event_type = 'click' GROUP BY 1),
-    p AS (SELECT e.user_id, min(e.ts) AS t3
-          FROM events e JOIN c ON e.user_id = c.user_id AND e.ts > c.t2
-          WHERE e.event_type = 'purchase' GROUP BY 1)
-    SELECT 'view' AS stage,
-           CAST((SELECT count(*) FROM v) AS BIGINT) AS n_users
-    UNION ALL SELECT 'view>click',
-           CAST((SELECT count(*) FROM c) AS BIGINT)
-    UNION ALL SELECT 'view>click>purchase',
-           CAST((SELECT count(*) FROM p) AS BIGINT)
-    """,
-)
-def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered funnel (the metrics-system workload family the reference
-    serves): users reaching view, then a click strictly after their
-    FIRST view, then a purchase strictly after that first qualifying
-    click.  Each stage is one filtered aggregate joined to the previous
-    stage's per-user frontier — user-keyed joins against frontiers that
-    only shrink, no window over the whole event stream and no
-    per-user event collection."""
-    ev = t(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-
-    def stage(etype, prev, tcol):
-        e = ev.filter(F.col("event_type") == etype)
-        if prev is not None:
-            e = e.join(prev, "user_id").filter(F.col("ts") > F.col(tcol))
-        return e.groupBy("user_id").agg(F.min("ts").alias(tcol + "n"))
-
-    v = stage("view", None, "t0").withColumnRenamed("t0n", "t1")
-    c = stage("click", v, "t1").withColumnRenamed("t1n", "t2")
-    p = stage("purchase", c, "t2").withColumnRenamed("t2n", "t3")
-    rows = [
-        ("view", v),
-        ("view>click", c),
-        ("view>click>purchase", p),
-    ]
-    out = None
-    for name, frame in rows:
-        one = frame.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_users")
-        ).select(F.lit(name).alias("stage"), "n_users")
-        out = one if out is None else out.unionByName(one)
-    return out
-
-
-@register_extra(
-    # rotated INTO the driver gate late round 9; rotated back OUT in
-    # round 10 for substring_dedup (spine generation + forward-fill is
-    # coverage-subsumed by the gated window family: interval_join_events,
-    # rollup_revenue, quantiles) — still differentially verified here
     "gapfill_hourly",
     oracle="""
     WITH o AS (
@@ -436,45 +245,6 @@ def q_gapfill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    "retention_cohorts",
-    oracle="""
-    WITH f AS (SELECT user_id, min(CAST(ts AS DATE)) AS cohort_day
-               FROM events GROUP BY 1),
-    a AS (SELECT DISTINCT e.user_id, f.cohort_day,
-                 date_diff('day', f.cohort_day, CAST(e.ts AS DATE))
-                     AS day_offset
-          FROM events e JOIN f USING (user_id))
-    SELECT cohort_day, CAST(day_offset AS BIGINT) AS day_offset,
-           CAST(count(*) AS BIGINT) AS n_users
-    FROM a GROUP BY 1, 2
-    """,
-)
-def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention matrix: users bucketed by first-activity day,
-    counted once per (cohort, day-offset) they return on — the
-    product-analytics staple next to funnel_conversion.  Two
-    aggregates and one user-keyed join; the first-activity frontier is
-    per-user (one row), so the join side is the small frame and the
-    distinct bounds each user's contribution at one per active day."""
-    ev = t(spark, sf_dir, "events").select(
-        "user_id", F.to_date("ts").alias("d")
-    )
-    first = ev.groupBy("user_id").agg(F.min("d").alias("cohort_day"))
-    active = (
-        ev.join(first, "user_id")
-        .select(
-            "user_id",
-            "cohort_day",
-            F.datediff("d", "cohort_day").cast("bigint").alias("day_offset"),
-        )
-        .distinct()
-    )
-    return active.groupBy("cohort_day", "day_offset").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_users")
-    )
-
-
-@register_extra(
     "event_debounce",
     oracle="""
     WITH d AS (
@@ -514,51 +284,6 @@ def q_event_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts_col="ts",
         gap_seconds=7200,
         order_cols=["event_id"],
-    )
-
-
-@register_extra(
-    "event_transitions",
-    oracle="""
-    WITH s AS (
-        SELECT user_id, event_type,
-               lag(event_type) OVER (PARTITION BY user_id
-                                     ORDER BY ts, event_id) AS prev_type
-        FROM events
-    ),
-    c AS (
-        SELECT prev_type, event_type AS next_type,
-               CAST(count(*) AS BIGINT) AS n
-        FROM s WHERE prev_type IS NOT NULL GROUP BY 1, 2
-    )
-    SELECT prev_type, next_type, n,
-           round(CAST(n AS DOUBLE) /
-                 sum(n) OVER (PARTITION BY prev_type), 6) AS p
-    FROM c
-    """,
-)
-def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix over per-user event streams:
-    lag window -> pair counts -> row-normalized probabilities.  The
-    windowed lag partitions by user (no global sort); the transition
-    matrix itself is event_type² — constant-size, so the normalization
-    window runs on a frame the driver could hold, never on raw events."""
-    from pyspark.sql import Window
-
-    ev = t(spark, sf_dir, "events").select("user_id", "event_type", "ts", "event_id")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = (
-        ev.withColumn("prev_type", F.lag("event_type").over(w))
-        .filter(F.col("prev_type").isNotNull())
-        .groupBy("prev_type", F.col("event_type").alias("next_type"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
-    wn = Window.partitionBy("prev_type")
-    return pairs.select(
-        "prev_type",
-        "next_type",
-        "n",
-        F.round(F.col("n").cast("double") / F.sum("n").over(wn), 6).alias("p"),
     )
 
 
@@ -689,130 +414,4 @@ def q_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ewma_smooth(
         hourly, key_col="user_id", order_col="hour", value_cents="xq",
         window_rows=12,
-    )
-
-
-@register_extra(
-    "top_session_paths",
-    oracle="""
-    WITH s AS (
-        SELECT user_id, ts, event_id, event_type,
-               CASE WHEN lag(ts) OVER w IS NULL
-                         OR epoch_us(ts) - epoch_us(lag(ts) OVER w)
-                            > 1800000000
-                    THEN 1 ELSE 0 END AS brk
-        FROM events
-        WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    ),
-    g AS (
-        SELECT *, sum(brk) OVER (PARTITION BY user_id
-                                 ORDER BY ts, event_id) AS sess
-        FROM s
-    ),
-    p AS (
-        SELECT array_to_string(
-                   (list(event_type ORDER BY ts, event_id))[1:3], '>')
-                   AS path
-        FROM g GROUP BY user_id, sess
-    )
-    SELECT path, CAST(count(*) AS BIGINT) AS n
-    FROM p GROUP BY 1
-    ORDER BY n DESC, path LIMIT 20
-    """,
-)
-def q_top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sessionized path mining: 30-minute-gap sessions per user, each
-    session reduced to its first three event types in (ts, event_id)
-    order, top-20 paths by frequency — the funnel-discovery flavor of
-    path analytics (funnel_conversion checks a KNOWN ordering; this
-    surfaces the orderings that exist).
-
-    Determinism: the in-session order is a total order (ts, event_id),
-    the per-session event list is collected UNORDERED then array_sort-ed
-    on a (ts, event_id, type) struct — collect_list order is not a
-    contract, the sort is — and the top-20 ties break on the path
-    string.  Scale shape: one per-user window for the session break
-    flags (keyed), one (user, session) aggregate, one path count with
-    map-side combine, TakeOrdered top-20."""
-    from pyspark.sql import Window
-
-    ev = t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # Gap compare in integer MICROSECONDS on both sides (oracle uses
-    # epoch_us) — a seconds cast truncates and a gap in (1800, 1801)s
-    # could break a session in one engine but not the other (the same
-    # epoch() trap range_window_user documents).
-    mu = F.unix_micros(F.col("ts"))
-    gap = mu - F.lag(mu).over(w)
-    s = ev.withColumn(
-        "brk", F.when(gap.isNull() | (gap > 1_800_000_000), 1).otherwise(0)
-    ).withColumn("sess", F.sum("brk").over(w))
-    paths = (
-        s.groupBy("user_id", "sess")
-        .agg(
-            F.array_join(
-                F.slice(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct("ts", "event_id", "event_type")
-                            )
-                        ),
-                        lambda st: st["event_type"],
-                    ),
-                    1,
-                    3,
-                ),
-                ">",
-            ).alias("path")
-        )
-    )
-    return (
-        paths.groupBy("path")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .orderBy(F.desc("n"), "path")
-        .limit(20)
-    )
-
-
-@register_extra(
-    "range_window_user",
-    oracle="""
-    SELECT event_id, user_id, ts,
-           CAST(count(*) OVER w AS BIGINT) AS trailing_1h_n,
-           CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w AS DOUBLE)
-               AS trailing_1h_total
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts)
-                 RANGE BETWEEN 3599999999 PRECEDING AND CURRENT ROW)
-    """,
-)
-def q_range_window_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-ROW trailing time-range aggregate — the RANGE-frame window
-    mechanism (every event sees its user's exact trailing hour,
-    microsecond-bounded), distinct from the bucketed sliding windows
-    (window_sliding) and the row-count frames (ewma_user_value): the
-    frame edge moves with each row's own timestamp, and equal-ts peer
-    rows share their frame in both engines by RANGE semantics.  Sums
-    are exact DECIMAL before the double cast; the order key is integer
-    microseconds on both sides (a seconds cast would merge sub-second
-    neighbors; DuckDB's epoch() returns fractional doubles — epoch_us
-    is the exact mirror of unix_micros)."""
-    from pyspark.sql import Window
-
-    ev = t(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.unix_micros("ts"))
-        .rangeBetween(-3_599_999_999, 0)
-    )
-    return ev.select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.count(F.lit(1)).over(w).cast("bigint").alias("trailing_1h_n"),
-        F.sum(F.col("value").cast("decimal(18,2)"))
-        .over(w)
-        .cast("double")
-        .alias("trailing_1h_total"),
     )

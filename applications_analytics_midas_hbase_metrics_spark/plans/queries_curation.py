@@ -1,10 +1,7 @@
 """Corpus-curation queries: the composed operations a training-data
 pipeline runs between raw documents and a training corpus — sequence
 packing and an end-to-end filter+dedup curation pass.  Both have full
-DuckDB oracles.  sequence_packing is driver-gated (rotated in, round
-6); curation_pipeline stays extra-tier because its component operators
-(token counts, quality, lang-ID, exact dedup) are driver-gated
-individually and the 50 slots are full.
+DuckDB oracles.
 """
 
 from __future__ import annotations
@@ -36,8 +33,6 @@ _PACK_BUDGET = 512
 
 
 @register(
-    # rotated INTO the driver gate in round 6 (extra-tier green in
-    # r3-r5): the distributed prefix-sum gets a driver-hard row
     "sequence_packing",
     oracle=f"""
     WITH tk AS (
@@ -83,9 +78,6 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    # rotated INTO the driver gate in round 7; rotated back OUT in round
-    # 10 for quality_classifier — the chunk emission extends the gated
-    # sequence_packing prefix-sum machinery (subsumed coverage)
     "pack_chunks",
     oracle=f"""
     WITH tk AS (
@@ -189,47 +181,6 @@ def q_pack_chunk_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    "curation_pipeline",
-    oracle=f"""
-    WITH tk AS (
-        SELECT doc_id, text, {_TOKS} AS tks FROM documents
-    ), feat AS (
-        SELECT doc_id, text,
-               CAST(len(tks) AS BIGINT) AS n_tokens,
-               CAST(len(list_filter(tks, tok -> tok IN
-                   ('the','a','of','and','to','in','is','that','it','for')))
-                   AS DOUBLE) / greatest(len(tks), 1) AS stop_ratio
-        FROM tk
-    ), kept AS (
-        SELECT doc_id, n_tokens, round(stop_ratio, 6) AS stopword_ratio
-        FROM feat
-        WHERE n_tokens >= 20 AND stop_ratio > 0
-        QUALIFY row_number() OVER (PARTITION BY text ORDER BY doc_id) = 1
-    )
-    SELECT doc_id AS id, n_tokens, stopword_ratio FROM kept
-    """,
-)
-def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end curation pass: length filter + stopword-signal filter
-    + exact dedup (keep lowest id per identical text), composed from the
-    individually-gated operators — the shape a real corpus snapshot job
-    runs.  Filters run BEFORE the dedup shuffle (cheap predicates prune
-    first, then only survivors hash-shuffle)."""
-    docs = _spread(spark, t(spark, sf_dir, "documents"))
-    qf = T.quality_features(docs)  # id, n_tokens, stopword_ratio, ...
-    # the ratios are k/n_tokens with small n, so the 6-decimal rounding
-    # cannot move a positive ratio to zero — the >0 filter is exact
-    sel = qf.filter(
-        (F.col("n_tokens") >= 20) & (F.col("stopword_ratio") > 0)
-    ).select("id", "n_tokens", "stopword_ratio")
-    with_text = sel.join(
-        docs.select(F.col("doc_id").cast("bigint").alias("id"), "text"), "id"
-    )
-    kept = D.drop_exact_duplicates(with_text, content_col="text", id_col="id")
-    return kept.select("id", "n_tokens", "stopword_ratio")
-
-
-@register_extra(
     "corpus_snapshot",
     oracle=f"""
     WITH tk AS (
@@ -275,7 +226,7 @@ def q_corpus_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     count — so a drift anywhere in the composed chain (a filter
     constant, the dedup rule, the split hash, the pack arithmetic)
     moves the hash.  Composes the individually-gated operators
-    end-to-end: quality_score, dedup_exact, train_val_test_split,
+    end-to-end: quality_score, dedup_exact, the 80/10/10 hash split,
     sequence_packing."""
     docs = _spread(spark, t(spark, sf_dir, "documents"))
     return corpus_snapshot_frame(docs)
@@ -452,10 +403,6 @@ def _winnow_pairs_oracle(k: int, w: int, max_df: int, min_shared: int) -> str:
 
 
 @register_extra(
-    # rotated OUT of the driver gate in round 10 for pagerank_coview:
-    # the value-only detection join is coverage-subsumed by the gated
-    # winnow_cut (positional superset + interval cut over the same
-    # fingerprint pipeline)
     "winnow_overlap_pairs", oracle=_winnow_pairs_oracle(8, 4, 20, 2)
 )
 def q_winnow_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -518,25 +465,6 @@ def _winnow_spans_oracle(k: int, w: int, max_df: int, min_shared: int) -> str:
     FROM rare a JOIN rare b ON a.fp = b.fp AND a.doc_id < b.doc_id
     GROUP BY 1, 2 HAVING count(DISTINCT a.fp) >= {min_shared}
     """
-
-
-@register_extra(
-    "winnow_overlap_spans", oracle=_winnow_spans_oracle(8, 4, 20, 2)
-)
-def q_winnow_overlap_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MOSS detection WITH localization
-    (operators.text.winnow_overlap_spans): the positional fingerprint
-    variant carries each selected k-gram's character offset, so every
-    flagged pair reports the matched-span extents on both sides — the
-    ranges a curation pipeline cuts.  The oracle replays the window-
-    minimum POSITION arithmetic (first in-window occurrence), the
-    distinct-doc frequency cutoff, and the extent aggregate verbatim."""
-    docs = _spread(spark, t(spark, sf_dir, "documents"))
-    # same corpus/params as winnow_cut's localization stage -> same key
-    return T.winnow_overlap_spans(
-        docs, k=8, w=4, max_df=20, min_shared=2,
-        pin=lambda df: persist_deferred(df, key=f"winnow_pfs_8_4:{sf_dir}"),
-    )
 
 
 #: Interval-merge (gaps-and-islands) + substring-stitch CTE TAIL shared
@@ -605,7 +533,7 @@ def _winnow_cut_oracle(k: int, w: int, max_df: int, min_shared: int) -> str:
 @register("winnow_cut", oracle=_winnow_cut_oracle(8, 4, 20, 2))
 def q_winnow_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full MOSS curation pipeline — detect (winnow_overlap_pairs
-    semantics), localize (winnow_overlap_spans), CUT
+    semantics), localize (operators.text.winnow_overlap_spans), CUT
     (operators.text.cut_spans): every document that appears as the
     HIGHER id of an overlap pair has the matched span range removed
     from its normalized text (keep-lowest-copy, the exact-dedup rule
@@ -920,61 +848,6 @@ _HTML_NB_SQL = (
 
 
 @register_extra(
-    "html_extract",
-    oracle=rf"""
-    WITH src AS (
-        SELECT doc_id AS id, {_HTML_WRAP_SQL} AS html FROM documents
-    ),
-    nb AS (
-        SELECT id, html, {_HTML_NB_SQL} AS nbk FROM src
-    ),
-    an AS (
-        SELECT id,
-               regexp_extract_all(nbk, '(?is)<a(?:\s[^>]*)?>(.*?)</a>', 1) AS anchors
-        FROM nb
-    )
-    SELECT nb.id,
-           {_html_clean_sql("regexp_extract(nb.html, '(?is)<title[^>]*>(.*?)</title>', 1)")}
-               AS title,
-           {_html_clean_sql("nb.nbk")} AS text,
-           CAST(len(an.anchors) AS BIGINT) AS n_links,
-           round(CAST(coalesce(list_sum(list_transform(an.anchors,
-                     a -> length({_html_clean_sql("a")}))), 0) AS DOUBLE)
-                 / greatest(length({_html_clean_sql("nb.nbk")}), 1), 6)
-               AS link_density
-    FROM nb JOIN an USING (id)
-    """,
-)
-def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTML -> training-text extraction (operators.text.html_extract)
-    — the raw-ingest stage before any quality/dedup operator: strip
-    head/script/style/comment blocks and tags, decode entities,
-    collapse whitespace, and emit the two classic boilerplate signals
-    (title, jusText link density).  The fixture wraps every document
-    in real HTML structure (title, style, anchor, script whose BODY
-    contains a '<p>' that must NOT leak, comment) identically in both
-    engines; the oracle replays the full regexp chain
-    character-exactly."""
-    docs = _spread(spark, t(spark, sf_dir, "documents"))
-    wrapped = docs.select(
-        "doc_id",
-        F.concat(
-            F.lit("<html><head><title>Doc "),
-            F.col("doc_id").cast("string"),
-            F.lit("</title><style>p{color:red}</style></head><body><h1>"),
-            F.col("source"),
-            F.lit("</h1><p>"),
-            F.col("text"),
-            F.lit(' &amp; more</p><a href="/nav">'),
-            F.col("lang"),
-            F.lit(' home</a><script>var a="<p>";</script><!-- hidden -->'),
-            F.lit("</body></html>"),
-        ).alias("html"),
-    )
-    return T.html_extract(wrapped)
-
-
-@register_extra(
     "curation_pipeline_web",
     oracle=rf"""
     WITH src AS (
@@ -1223,8 +1096,6 @@ _NB_ORACLE = f"""
 
 
 @register(
-    # rotated INTO the driver gate in round 10 (never gated before):
-    # the NB train+score pipeline gets a driver-hard row
     "quality_classifier", oracle=_NB_ORACLE)
 def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-classifier curation stage (operators.classify): train a
@@ -1437,9 +1308,6 @@ _TB_BUDGETS = {"src0": 700, "src1": 400, "src2": 50}
 _TB_VALUES = ", ".join(f"('{s}', {b})" for s, b in _TB_BUDGETS.items())
 
 
-# rotated INTO the driver gate round 14 (verdict rotate-in list;
-# sweep-green since r12): the two-phase cumsum shape rebuilt this
-# round on deterministic broadcast boundaries goes driver-hard
 @register(
     "token_budget_mixture",
     oracle=f"""
@@ -1485,57 +1353,6 @@ def q_token_budget_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    "ngram_novelty",
-    oracle="""
-    WITH g AS (
-        SELECT doc_id, unnest(list_distinct(
-            CASE WHEN length(lower(text)) >= 5
-                 THEN list_transform(range(1, length(lower(text)) - 3),
-                                     i -> substr(lower(text), CAST(i AS INT), 5))
-                 ELSE [lower(text)] END)) AS gram
-        FROM documents WHERE length(trim(text)) > 0
-    ),
-    f AS (SELECT gram, min(doc_id) AS first_doc FROM g GROUP BY 1)
-    SELECT g.doc_id,
-           round(avg(CASE WHEN f.first_doc = g.doc_id
-                          THEN 1.0 ELSE 0.0 END), 6) AS novelty
-    FROM g JOIN f USING (gram) GROUP BY 1
-    """,
-)
-def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document novelty score: the fraction of a doc's distinct
-    char-5-grams whose FIRST corpus occurrence (min doc_id — the same
-    keep-lowest canonicalization as the dedup family) is this doc.  A
-    near-copy of earlier material scores ~0, fresh content ~1 — the
-    redundancy-weighting signal novelty-aware sampling consumes.
-
-    Scale shape: explode -> one min-aggregate keyed on the gram -> one
-    join back on the gram -> per-doc avg; nothing all-pairs.  The gram
-    key here is the RAW 5-gram string (byte-exact DuckDB replay); the
-    production swap is xxhash64(gram) so only 8-byte keys shuffle —
-    the same swap winnowing documents for its gram hash."""
-    docs = _spread(spark, t(spark, sf_dir, "documents")).filter(
-        F.length(F.trim(F.col("text"))) > 0
-    )
-    g = docs.select(
-        "doc_id", F.explode(D.char_ngram_strings("text", 5)).alias("gram")
-    )
-    f = g.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
-    return (
-        g.join(f, "gram")
-        .groupBy("doc_id")
-        .agg(
-            F.round(
-                F.avg((F.col("first_doc") == F.col("doc_id")).cast("double")),
-                6,
-            ).alias("novelty")
-        )
-    )
-
-
-@register_extra(
-    # rotated INTO the driver gate late round 9: the CCNet line-dedup
-    # pass (frequency threshold + order-stable reassembly)
     "line_dedup",
     oracle="""
     WITH staged AS (
@@ -1650,32 +1467,7 @@ def _typo_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bigrams.unionByName(typos)
 
 
-@register_extra(
-    "fuzzy_vocab_pairs",
-    oracle=f"""
-    WITH {_FUZZY_VOCAB_SQL}
-    SELECT l.term AS a, r.term AS b
-    FROM v l JOIN v r ON l.term < r.term
-    WHERE levenshtein(l.term, r.term) = 1
-    """,
-)
-def q_fuzzy_vocab_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Typo-pair detection over the shared bigram+typo vocabulary
-    fixture (_typo_vocab / _FUZZY_VOCAB_SQL) via
-    operators.fuzzy.fuzzy_pairs: Spark generates candidates through the
-    O(N·L) deletion-neighborhood equi-join; the oracle brute-forces the
-    O(N²) cross join with exact levenshtein — sound+complete blocking
-    means the two enumerate the IDENTICAL pair set (measured 163x
-    faster than brute force at a 20k-term vocabulary,
-    tools/fuzzy_scale.py)."""
-    from ..operators import fuzzy as FZ
-
-    return FZ.fuzzy_pairs(_typo_vocab(spark, sf_dir), term_col="term")
-
-
 @register(
-    # rotated INTO the driver gate late round 9: fuzzy pairs -> CC ->
-    # canonical-term composition
     "vocab_canonicalize",
     oracle=f"""
     WITH RECURSIVE {_FUZZY_VOCAB_SQL},
@@ -1755,7 +1547,6 @@ def _dom_hash_sql(idc: str = "doc_id") -> str:
     return f"({idc} % 2147483648) * 2654435761 % 2147483648"
 
 
-_DOM_SUF_SQL = _dom_suf_sql()
 _DOM_DOMAIN_SQL = _dom_domain_sql()
 _DOM_HOST_SQL = _dom_host_sql()
 _DOM_HASH_SQL = _dom_hash_sql()
@@ -1793,29 +1584,6 @@ def _synth_url_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     three standalone domain gates share."""
     return _add_synth_url(
         _spread(spark, t(spark, sf_dir, "documents")).select("doc_id", "text")
-    )
-
-
-@register_extra(
-    "domain_extract",
-    oracle=f"""
-    SELECT doc_id, {_DOM_HOST_SQL} AS host, {_DOM_DOMAIN_SQL} AS domain
-    FROM documents
-    """,
-)
-def q_domain_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Host canonicalization + registrable domain (operators.web
-    .host_expr / registrable_domain_expr) vs the generative ground
-    truth: the Spark side PARSES the synthesized URL strings, the
-    oracle recomputes what the parse must produce from the id
-    arithmetic — scheme/userinfo/port/path junk stripped, host
-    lowercased, one leading www. and any trailing dot removed, and
-    the last-3-label rule firing exactly on the multi-label suffixes
-    (.co.uk / .com.au here)."""
-    from ..operators import web as W
-
-    return W.with_domain(_synth_url_frame(spark, sf_dir)).select(
-        "doc_id", "host", "domain"
     )
 
 
@@ -1903,9 +1671,8 @@ def q_domain_extract_psl(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "host", "psl_domain", "public_suffix")
 
 
-# rotated INTO the driver gate round 14 (verdict rotate-in list;
-# sweep-green since r13): the vendored-full-PSL known-answer row,
-# now also exercising the UTS-46 rule twins
+# the vendored-full-PSL known-answer row, also exercising the UTS-46
+# rule twins
 @register(
     "domain_extract_psl_full",
     # known-answer oracle: every class's host/suffix/domain follows
@@ -1991,9 +1758,6 @@ def q_domain_extract_psl_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    # gated r12 (punycode boundary's first round); rotated OUT round
-    # 13: the IDN path is additionally covered by the vendored-PSL row
-    # (A-label rule twins) and domain_extract_psl stays gated
     "domain_extract_idn",
     oracle="""
     WITH b AS (
@@ -2098,9 +1862,6 @@ def q_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    # gated r12 (its first round); rotated OUT round 13: composed of
-    # the still-gated domain_cap's two-phase top-K and the
-    # mixture_sample map-side filter (sweep keeps the composition)
     "domain_mixture",
     oracle=f"""
     WITH dom AS (SELECT doc_id, {_DOM_DOMAIN_SQL} AS domain FROM documents),
@@ -2177,17 +1938,6 @@ def _toks_sql(expr: str) -> str:
         f"list_filter(string_split_regex(lower({expr}), '\\s+'),"
         " tk -> tk != '')"
     )
-
-
-def _grams5_sql(expr: str) -> str:
-    """DuckDB distinct char-5-grams (dedup.ngram_near_duplicates's set
-    elements) over an arbitrary text expression."""
-    return f"""
-    list_distinct(CASE WHEN length(lower({expr})) >= 5
-        THEN list_transform(range(1, length(lower({expr})) - 3),
-                            i -> substr(lower({expr}), CAST(i AS INT), 5))
-        ELSE [lower({expr})] END)
-    """
 
 
 def _curation_full_oracle() -> str:
@@ -2629,8 +2379,8 @@ def q_curation_pipeline_full(
 )
 def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical-URL normalization (operators.web.canonical_url_expr)
-    vs the generative ground truth: the same adversarial URL fixture as
-    domain_extract must canonicalize to exactly the id-arithmetic form
+    vs the generative ground truth: the adversarial URL fixture of the
+    domain queries must canonicalize to exactly the id-arithmetic form
     — scheme case folded, userinfo/ports/trailing dots/fragments
     dropped, the single query param kept, the fragment-only variant
     reduced to scheme://host."""
@@ -2642,9 +2392,6 @@ def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    # gated r11-r12 to pin the min_by keep-first rewrite; rotated OUT
-    # round 13: two driver-green rounds done, the shape is shared with
-    # the still-gated dedup_exact and the skew harness pins it flat
     "url_dedup",
     oracle="""
     WITH c AS (
@@ -2697,66 +2444,6 @@ def q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", url.alias("url")
     )
     return W.url_dedup(docs).select("doc_id", "canonical_url")
-
-
-@register_extra(
-    "domain_quality",
-    oracle=rf"""
-    WITH scored AS (
-        SELECT doc_id,
-               CAST(round(
-    round(
-      least(CAST(len(tks) AS DOUBLE) / 100.0, 1.0) * 0.4
-      + least((CAST(len(list_filter(tks, tk -> tk IN
-          ('the','a','of','and','to','in','is','that','it','for')))
-          AS DOUBLE) / greatest(len(tks), 1)) * 5.0, 1.0) * 0.4
-      + (1.0 - least((CAST(length(regexp_replace(text, '[A-Za-z0-9\s]', '', 'g'))
-          AS DOUBLE) / greatest(length(text), 1)) * 10.0, 1.0)) * 0.2, 6)
- * 1000000) AS BIGINT) AS qi
-        FROM (SELECT doc_id, text, list_filter(string_split_regex(lower(text), '\s+'), tk -> tk != '') AS tks FROM documents) s
-    ),
-    dom AS (SELECT doc_id, 'site' || CAST(doc_id % 37 AS VARCHAR) || CASE doc_id % 5 WHEN 0 THEN '.com' WHEN 1 THEN '.org' WHEN 2 THEN '.io' WHEN 3 THEN '.co.uk' ELSE '.com.au' END AS domain FROM documents)
-    SELECT dom.domain,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           round(CAST(sum(qi) AS DOUBLE) / count(*) / 1000000.0, 6)
-               AS mean_quality,
-           round(CAST(min(qi) AS DOUBLE) / 1000000.0, 6) AS min_quality
-    FROM dom JOIN scored USING (doc_id)
-    GROUP BY 1
-    """,
-)
-def q_domain_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain QUALITY rollup — the other half of the domain
-    book-keeping a web pipeline feeds its mixture stage (volume is
-    domain_stats): heuristic quality scores (operators.text
-    .quality_features, the gated composite) aggregated per registrable
-    domain.  Scores are quantized to exact integers (x 1e6) BEFORE the
-    sum so the mean is order-independent and engine-exact — a raw
-    float avg would be summation-order-dependent and could flip the
-    6-decimal round between engines."""
-    from ..operators import web as W
-
-    dom = W.with_domain(_synth_url_frame(spark, sf_dir)).select(
-        F.col("doc_id").alias("id"), "domain"
-    )
-    scored = T.quality_features(
-        _spread(spark, t(spark, sf_dir, "documents"))
-    ).select(
-        "id", F.round(F.col("quality_score") * 1e6).cast("bigint").alias("qi")
-    )
-    return (
-        dom.join(scored, "id")
-        .groupBy("domain")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.round(
-                F.sum("qi").cast("double") / F.count(F.lit(1)) / 1e6, 6
-            ).alias("mean_quality"),
-            F.round(F.min("qi").cast("double") / 1e6, 6).alias(
-                "min_quality"
-            ),
-        )
-    )
 
 
 @register_extra(
@@ -3035,11 +2722,8 @@ def _lined_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 register_extra(
-    # gated at birth (round 12, in for ann_topk); rotated to the extra
-    # tier late round 12 for the composed gopher_quality_pipeline,
-    # which drives the same line battery end-to-end — the PARAGRAPH
-    # granularity stays uniquely verified here (the pipeline fixture
-    # has no \n\n structure), so this row remains sweep-checked
+    # the PARAGRAPH granularity is verified only here: the
+    # gopher_quality_pipeline fixture has no \n\n structure
     "gopher_line_signals",
     oracle=f"""
     WITH {_LINE_FIX_SQL},
@@ -3098,10 +2782,8 @@ _NFC_SFX_C = " caf\u00e9 \u00fcber \u00c5 \uac00"
 
 
 register_extra(
-    # driver-gated from birth (round 12, in for pagerank_coview);
-    # rotated OUT round 13: the normalizer is the gated
-    # gopher_quality_pipeline's first stage (manifest-oracled there),
-    # and this independent-nfc row stays sweep-checked every round
+    # the normalizer is also the gated gopher_quality_pipeline's first
+    # stage; this row checks it against DuckDB's independent nfc
     "unicode_nfc",
     oracle=f"""
     WITH fx AS (
@@ -3485,13 +3167,8 @@ def _gqr_oracle() -> str:
     """
 
 
-# rotated INTO the driver gate round 13 (judge's rotate-in list): the
-# standalone battery at the PUBLISHED 50/2 floors, now with the
-# per-symbol hash/ellipsis ratio split — driver-hard while the
-# composed pipeline keeps its fixture-scaled floors
-# rotated OUT round 14: SUBSUMED by gopher_quality_pipeline_published
-# (now gated), which composes this battery at the published floors;
-# identical differential check continues in the sweep tier
+# the standalone battery at the PUBLISHED 50/2 floors, with the
+# per-symbol hash/ellipsis ratio split
 register_extra("gopher_quality_rules", oracle=_gqr_oracle())(
     lambda spark, sf_dir: T.gopher_quality_rules(_gqr_fixture(spark, sf_dir))
 )
@@ -3518,10 +3195,6 @@ def _cdup_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    # rotated INTO the driver gate round 13 (judge's rotate-in list;
-    # sweep-green since r12): the CCNet corpus-wide keep-first pass is
-    # the highest-leverage never-gated dedup row, and r13 added the
-    # packed-key guard worth a driver-hard check
     "dedup_paragraphs_corpus",
     oracle="""
     WITH fx AS (
@@ -3633,14 +3306,6 @@ def _dsir_oracle() -> str:
     """
 
 
-# rotated INTO the driver gate round 13 (judge's rotate-in list;
-# sweep-green since r12): the heaviest never-gated composed row — the
-# micro-quantized integer dot product and the TakeOrderedAndProject
-# selection get a driver-hard differential for a round (9.7 s at
-# bench sf0.1, measured before rotation)
-# rotated OUT round 14 (gated r13 green; operator unchanged since the
-# long-widened-abs fix): the most expensive gated row (~6.5s — it
-# builds a target bag model per run) returns to the sweep tier
 @register_extra("dsir_weights", oracle=_dsir_oracle())
 def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR selection against the doc_id%5==0 target slice: the hashed
@@ -4033,21 +3698,17 @@ def _gq_oracle(published: bool = False) -> str:
     """
 
 
-# driver-gated (late round 12, in for gopher_line_signals): the
-# composed five-stage filter is the strongest single row on the
-# round-12 surface — one hash covers NFC, C4, both Gopher batteries,
-# the quality rules and the stage-attribution math
+# the composed five-stage filter: one hash covers NFC, C4, both
+# Gopher batteries, the quality rules and the stage-attribution math
 register("gopher_quality_pipeline", oracle=_gq_oracle())(
     q_gopher_quality_pipeline
 )
 
 
-# round 13: the SAME composed pipeline at the PUBLISHED Table A1
-# constants (50-word / 2-distinct-stop floors) over the stop-line
-# fixture — the production-threshold path exercised end-to-end under
-# the manifest oracle, with both 'kept' and 'quality_rules' populated
-# rotated INTO the driver gate round 14 (verdict rotate-in list):
-# the composed pipeline at the published Table A1 thresholds
+# the SAME composed pipeline at the PUBLISHED Table A1 constants
+# (50-word / 2-distinct-stop floors) over the stop-line fixture — the
+# production-threshold path exercised end-to-end under the manifest
+# oracle, with both 'kept' and 'quality_rules' populated
 register(
     "gopher_quality_pipeline_published", oracle=_gq_oracle(published=True)
 )(
@@ -4124,10 +3785,6 @@ def _mj_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    # rotated INTO the driver gate round 13 (judge's rotate-in list;
-    # sweep-green since r12): r13 extended the operator with the
-    # cp1252 variant, so the six-branch known-answer row goes
-    # driver-hard for a round
     "mojibake_repair",
     oracle=f"""
     WITH br AS (
@@ -4272,12 +3929,8 @@ def _sc_oracle() -> str:
     """
 
 
-# rotated INTO the driver gate round 13 (judge's rotate-in list;
-# sweep-green since r12): the writing-system router's RE2-vs-Java
-# regex range parity is exactly the cross-engine class the gate exists
-# to hold
-# rotated OUT round 14 (gated r13 green; operator unchanged):
-# identical differential check continues in the sweep tier
+# the writing-system router's RE2-vs-Java regex range parity is the
+# cross-engine class the differential check exists to hold
 @register_extra("script_profile", oracle=_sc_oracle())
 def q_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """operators.text.script_profile over the eight-script fixture:

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..functions.keys import duckdb_java_hash_sql
 from ..operators import dedup as D
@@ -19,11 +18,7 @@ from ..operators import similarity as SIM
 from ..operators import embeddings as EMB
 from ..operators import pinning
 from ..operators import text as T
-from ..operators.sampling import (
-    mixture_sample,
-    stratified_percent_rank,
-    temperature_mixture,
-)
+from ..operators.sampling import stratified_percent_rank, temperature_mixture
 from ..streaming import windows as W
 from .queries import (
     claim_deferred,
@@ -268,9 +263,6 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    # retired to the pytest tier: dedup_ngram_blocked runs the same
-    # char-n-gram Jaccard through the LSH blocker over ALL pairs
-    # (strictly stronger gate; this one needs an explicit pair relation)
     "dedup_ngram",
     oracle="""
     WITH ng AS (
@@ -413,8 +405,7 @@ def _ann_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ann_brute10(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame:
     """Exact brute-force top-10 truth shared by the whole ANN family
-    (ann_topk's RESULT, and the recall denominator of ann_ivf / ann_pq
-    / ann_ivf_pq).  Pinned in the registry under one key: within a
+    (the recall denominator of ann_ivf / ann_pq / ann_ivf_pq).  Pinned in the registry under one key: within a
     sweep each family member claims its predecessor's frame, and a
     warm repeat (bench best-of-2, driver retry) claims its own — the
     |q| x |corpus| score pass runs once per generation, not once per
@@ -459,35 +450,12 @@ def _ann_pq_artifacts(
     return books, codes
 
 
-
-@register_extra(
-    # rotated OUT of the driver gate in round 12 (gated r2-r11) for
-    # gopher_line_signals: the exact-cosine surface keeps two gated
-    # siblings — ann_ivf and ann_ivf_pq both rerank candidates against
-    # the same exact scores and gate their own recall vs brute force
-    "ann_topk",
-    oracle=f"""
-    WITH c AS (SELECT vec_id, {_EMB_D} AS v FROM embeddings),
-    q AS (SELECT vec_id, {_EMB_D} AS v FROM embeddings WHERE vec_id < 10)
-    SELECT q.vec_id AS query_id, c.vec_id AS corpus_id,
-           round({_cos_sql('q.v', 'c.v')}, 6) AS cos,
-           CAST(row_number() OVER (PARTITION BY q.vec_id
-                ORDER BY {_cos_sql('q.v', 'c.v')} DESC, c.vec_id) AS INT) AS rank
-    FROM q JOIN c ON c.vec_id != q.vec_id
-    QUALIFY rank <= 10
-    """,
-)
-def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _ann_brute10(spark, sf_dir, _ann_emb(spark, sf_dir))
-
-
 @register(
     "ann_ivf",
     # IVF output is approximate by design, so its top-k rows have no SQL
     # oracle — instead the query is SELF-CHECKING: it computes per-query
-    # recall of the IVF result against the exact brute-force top-k (whose
-    # own correctness IS differentially gated via ann_topk) and emits one
-    # boolean per query.  The oracle is the deterministic expected bound:
+    # recall of the IVF result against the exact brute-force top-k and
+    # emits one boolean per query.  The oracle is the deterministic expected bound:
     # every query must reach recall >= 0.5 (the same floor the pytest
     # gate enforces, tests/test_dedup_similarity.py).  If IVF regresses —
     # wrong centroid assignment, broken probing — a recall_ok flips to
@@ -963,16 +931,14 @@ def q_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Substring-level duplication (operators.text.repeated_ngram_spans,
     the ExactSubstr curation signal): positions whose 4-gram occurs >=2
     times corpus-wide flag their span; per-doc span unions under the
-    differential hash.  4-grams for the same reason as decontaminate —
-    the fixture's small vocabulary needs them to produce genuine
-    cross-document collisions."""
+    differential hash.  4-grams because the fixture's small vocabulary
+    needs them to produce genuine cross-document collisions."""
     docs = _spread(spark, t(spark, sf_dir, "documents"))
     return T.repeated_ngram_spans(docs, n=4, min_count=2)
 
 
-#: Full bigram-LM scoring oracle (id, n_pairs, lm_score) — shared by
-#: ngram_lm_score and the CCNet bucketing gate (perplexity_buckets),
-#: which wraps it as a subquery.
+#: Full bigram-LM scoring oracle (id, n_pairs, lm_score) — the CCNet
+#: bucketing gate (perplexity_buckets) wraps it as a subquery.
 _LM_SCORE_SQL = f"""
     WITH tk AS (
         SELECT doc_id, {_TOKS} AS tks FROM documents
@@ -1007,21 +973,6 @@ _LM_SCORE_SQL = f"""
     """
 
 
-# rotated OUT round 14: SUBSUMED by perplexity_buckets (now gated),
-# which composes this exact LM scoring before its bucket split
-@register_extra("ngram_lm_score", oracle=_LM_SCORE_SQL)
-def q_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Self-trained bigram LM quality scoring
-    (operators.text.ngram_lm_score — the CCNet/KenLM-style perplexity
-    filter): the corpus's add-one-smoothed bigram model scores each
-    document's mean log-probability.  Model training (two count
-    aggregates) and scoring (gram-keyed equi-joins, bigram table never
-    broadcast) replay exactly in DuckDB; ln() runs on identical
-    integer-ratio doubles in both engines."""
-    docs = t(spark, sf_dir, "documents")
-    return T.ngram_lm_score(docs)
-
-
 #: Fibonacci id-hash bucket 0..99 — SQL replay of
 #: operators.sampling.fibonacci_bucket (same fragment the mixture /
 #: classifier-split oracles inline).
@@ -1032,10 +983,8 @@ def _fib_sql(col: str) -> str:
     )
 
 
-# rotated INTO the driver gate round 14 (verdict rotate-in list;
-# sweep-green since r11): the CCNet head/middle/tail split over the
-# rebuilt two-phase rank — subsumes ngram_lm_score (it composes the
-# same LM scoring), which rotates out
+# the CCNet head/middle/tail split over the two-phase rank, composed
+# on the bigram LM score (operators.text.ngram_lm_score)
 @register(
     "perplexity_buckets",
     oracle=f"""
@@ -1275,9 +1224,6 @@ _LANG_SCORES_SQL = ",\n".join(
 
 
 @register_extra(
-    # rotated OUT late round 9 (subsumed: map-side text scoring is
-    # driver-gated via quality_score; the lang profiles stay pytest-
-    # and extra-tier-verified)
     "lang_id",
     oracle=f"""
     WITH s AS (
@@ -1332,9 +1278,6 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    # rotated to the extra tier in round 6 (driver-gated r1-r5, always
-    # hash-green): token counting is subsumed by quality_score's token
-    # features, freeing a driver slot for sequence_packing
     "token_count",
     oracle=f"""
     SELECT doc_id AS id,
@@ -1469,46 +1412,7 @@ def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.scrub_pii(injected)
 
 
-@register_extra(
-    "decontaminate",
-    oracle=f"""
-    WITH tk AS (SELECT doc_id, {_TOKS} AS tks FROM documents),
-    g AS (
-        SELECT doc_id,
-               unnest(CASE WHEN len(tks) >= 4
-                   THEN list_distinct(list_transform(range(1, len(tks) - 2),
-                                      i -> array_to_string(tks[i:i+3], ' ')))
-                   ELSE CAST([] AS VARCHAR[]) END) AS gram
-        FROM tk
-    ),
-    bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 11 = 0),
-    agg AS (
-        SELECT g.doc_id, count(*) AS n_grams, count(b.gram) AS n_hits
-        FROM g LEFT JOIN bench b ON g.gram = b.gram
-        GROUP BY 1
-    )
-    SELECT t.doc_id AS id,
-           CAST(coalesce(a.n_grams, 0) AS BIGINT) AS n_grams,
-           CAST(coalesce(a.n_hits, 0) AS BIGINT) AS n_hits,
-           CAST(CASE WHEN coalesce(a.n_hits, 0) > 0 THEN 1 ELSE 0 END
-               AS BIGINT) AS contaminated
-    FROM tk t LEFT JOIN agg a ON a.doc_id = t.doc_id
-    """,
-)
-def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: every 11th document plays the eval
-    set; corpus docs sharing any token 4-gram with it are flagged
-    (operators.text.ngram_decontaminate — broadcast benchmark grams,
-    map-side membership join, one partial-aggregated shuffle).  4-grams
-    (vs the production-typical 8-13) because the word-soup fixture's
-    ~30-word vocabulary needs the smaller n to exercise genuine
-    cross-document collisions, not just the benchmark docs' self-hits."""
-    docs = _spread(spark, t(spark, sf_dir, "documents")).select("doc_id", "text")
-    bench = docs.filter(F.col("doc_id") % 11 == 0)
-    return T.ngram_decontaminate(docs, bench, n=4)
-
-
-#: Per-language mixture rates for the sample_mixture gate: keep all
+#: Per-language mixture rates of the curation mixture stage: keep all
 #: English, half German/French, a quarter Spanish/Chinese — the classic
 #: downweight-the-over-represented-slice training mix.
 _MIX_RATES = {"en": 1.0, "de": 0.5, "fr": 0.5, "es": 0.25, "zh": 0.25}
@@ -1522,28 +1426,6 @@ _MIX_RATE_SQL = (
     )
     + " ELSE 100 END"
 )
-
-
-@register_extra(
-    "sample_mixture",
-    oracle=f"""
-    SELECT doc_id, lang, source FROM documents
-    WHERE ((((doc_id % 2147483648) + 2147483648) % 2147483648
-            * 2246822519) % 2147483648) * 100 // 2147483648
-          < {_MIX_RATE_SQL}
-    """,
-)
-def q_sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-language mixture sampling
-    (operators.sampling.mixture_sample): the keep-decision takes the
-    HIGH bits of a Fibonacci id-hash vs a literal rate map — a real
-    hash (decorrelated from the mod-100 split, unlike a mod-100 of the
-    product), pure map-side filter, zero shuffles, exact int64
-    arithmetic in both engines."""
-    docs = t(spark, sf_dir, "documents")
-    return mixture_sample(docs, _MIX_RATES, strat_col="lang").select(
-        "doc_id", "lang", "source"
-    )
 
 
 @register_extra(
@@ -1606,55 +1488,6 @@ def q_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     outcomes (clean, borderline, dropped) occur."""
     docs = _spread(spark, t(spark, sf_dir, "documents"))
     return T.blocklist_filter(docs, _BLOCKWORDS, max_frac=0.05)
-
-
-@register_extra(
-    "vocab_topk",
-    oracle=f"""
-    SELECT token, CAST(n_docs AS BIGINT) AS n_docs,
-           CAST(row_number() OVER (ORDER BY n_docs DESC, token) AS INT) AS rank
-    FROM (
-        SELECT token, count(*) AS n_docs
-        FROM (SELECT doc_id, unnest(list_distinct({_TOKS})) AS token
-              FROM documents)
-        GROUP BY token
-    )
-    QUALIFY rank <= 25
-    """,
-)
-def q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Vocabulary induction: top 25 tokens by document frequency
-    (ties broken by token, so the ranking is total).  Per-doc distinct
-    explode → one partial-aggregated groupBy(token) → orderBy().limit()
-    (TakeOrderedAndProject: per-partition top-N, merge of N rows — no
-    global sort, the corpus never funnels through one task)."""
-    docs = _spread(spark, t(spark, sf_dir, "documents"))
-    per_doc = docs.select(
-        F.explode(F.array_distinct(D.tokens("text"))).alias("token")
-    )
-    counts = per_doc.groupBy("token").agg(
-        F.count("*").cast("bigint").alias("n_docs")
-    )
-    top = counts.orderBy(F.col("n_docs").desc(), "token").limit(25)
-    # Ranking the 25 post-limit rows is WINDOW-FREE: fold them into one
-    # sorted array row (descending n_docs via negated sort key) and
-    # posexplode positions back — same movement as a global row_number
-    # window on 25 rows, but the WindowExec "No Partition Defined"
-    # warning never fires and stays a real unbounded-window signal.
-    return (
-        top.select(
-            F.struct(
-                (-F.col("n_docs")).alias("_neg"), F.col("token")
-            ).alias("_s")
-        )
-        .agg(F.array_sort(F.collect_list("_s")).alias("_a"))
-        .select(F.posexplode("_a").alias("_p", "_s"))
-        .select(
-            F.col("_s.token").alias("token"),
-            (-F.col("_s._neg")).cast("bigint").alias("n_docs"),
-            (F.col("_p") + 1).cast("int").alias("rank"),
-        )
-    )
 
 
 #: quality_score recomputed for the percentile oracle (the same formula
@@ -1919,8 +1752,6 @@ def q_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    # retired to the pytest tier: a sliding window is the union of
-    # shifted tumbling buckets; tumbling/session/activity stay gated
     "window_sliding",
     oracle="""
     SELECT window_start, CAST(count(*) AS BIGINT) AS n FROM (
@@ -1937,10 +1768,6 @@ def q_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    # retired to the pytest tier in the round-9 mid-round rotation:
-    # sessionization coverage is driver-gated by stream_sessionize
-    # (cross-batch stateful variant with the same gaps-and-islands
-    # oracle replay); the slot goes to stream_stream_join
     "window_session",
     oracle="""
     WITH flagged AS (
@@ -2093,185 +1920,6 @@ def q_orc_pushdown_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    "schema_evolution_scan",
-    oracle="""
-    SELECT CAST(l_orderkey AS BIGINT) AS okey,
-           CAST(l_quantity AS DOUBLE) AS qty,
-           CASE WHEN l_orderkey % 2 = 1 THEN l_returnflag END AS rflag
-    FROM lineitem WHERE l_orderkey % 16 = 0 OR l_orderkey % 16 = 1
-    """,
-)
-def q_schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Store-generation schema drift under the gate: generation 1
-    writes (okey, qty), generation 2 appends files that ADDED a column
-    (okey, qty, rflag) — the additive-evolution pattern every
-    long-lived ingest hits.  ``mergeSchema`` reconciles the footers at
-    scan time; generation-1 rows surface the new column as NULL, which
-    the oracle recomputes from lineitem (parity of okey is the
-    generation marker).  Plan note: mergeSchema pays a per-file footer
-    read at listing — a deployment promotes the union schema into the
-    table definition after backfill and turns the option back off."""
-    li = t(spark, sf_dir, "lineitem")
-    path = scratch_dir("schema_evolution") + "/store"
-    g1 = li.filter(F.col("l_orderkey") % 16 == 0).select(
-        F.col("l_orderkey").cast("bigint").alias("okey"),
-        F.col("l_quantity").cast("double").alias("qty"),
-    )
-    g2 = li.filter(F.col("l_orderkey") % 16 == 1).select(
-        F.col("l_orderkey").cast("bigint").alias("okey"),
-        F.col("l_quantity").cast("double").alias("qty"),
-        F.col("l_returnflag").alias("rflag"),
-    )
-    g1.write.mode("overwrite").parquet(path)
-    g2.write.mode("append").parquet(path)
-    return (
-        spark.read.option("mergeSchema", "true")
-        .parquet(path)
-        .select("okey", "qty", "rflag")
-    )
-
-
-@register_extra(
-    "multimodal_patchify",
-    oracle="""
-    WITH dims AS (
-        SELECT doc_id,
-               CAST(doc_id % 6 + 2 AS BIGINT) AS w,
-               CAST(doc_id % 4 + 2 AS BIGINT) AS h
-        FROM documents
-    ),
-    grid AS (
-        SELECT d.doc_id, d.w, pr.r AS pr, pc.c AS pc
-        FROM dims d
-        JOIN (SELECT unnest(range(0, 3)) AS r) pr ON pr.r < d.h // 2
-        JOIN (SELECT unnest(range(0, 4)) AS c) pc ON pc.c < d.w // 2
-    ),
-    px AS (
-        SELECT g.doc_id, g.pr, g.pc,
-               (7 * g.doc_id
-                + 13 * (((2 * g.pr + dr.r) * g.w + 2 * g.pc + dc.c) * 3
-                        + ch.c)) % 256 AS v
-        FROM grid g
-        CROSS JOIN (SELECT unnest(range(0, 2)) AS r) dr
-        CROSS JOIN (SELECT unnest(range(0, 2)) AS c) dc
-        CROSS JOIN (SELECT unnest(range(0, 3)) AS c) ch
-    )
-    SELECT doc_id AS id, pr AS patch_row, pc AS patch_col,
-           round(CAST(sum(v) AS DOUBLE) / 12.0, 6) AS patch_mean
-    FROM px GROUP BY 1, 2, 3
-    """,
-)
-def q_multimodal_patchify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ViT patch extraction under the differential gate
-    (operators.multimodal.patchify_images): the closed-form BMP
-    payloads decode, split into 2×2-pixel tiles (full tiles only), and
-    each tile's mean byte must equal the oracle's direct recomputation
-    from the pixel rule — so the binary round trip, the bottom-up row
-    flip, the padding strip and the tile indexing are all under the
-    hash."""
-    docs = _spread(spark, t(spark, sf_dir, "documents"))
-    mm = MM.synthesize_bmp_payloads(docs, id_col="doc_id")
-    return MM.patchify_images(mm, patch=2)
-
-
-@register_extra(
-    "image_dedup_ahash",
-    oracle="""
-    WITH m AS (
-        SELECT doc_id, CAST(doc_id % 60 AS BIGINT) AS gid FROM documents
-    ),
-    g AS (SELECT DISTINCT gid FROM m),
-    dims AS (
-        SELECT gid, CAST(gid % 6 + 2 AS BIGINT) AS w,
-               CAST(gid % 4 + 2 AS BIGINT) AS h
-        FROM g
-    ),
-    grid AS (
-        SELECT d.gid, d.w, pr.r AS pr, pc.c AS pc
-        FROM dims d
-        JOIN (SELECT unnest(range(0, 3)) AS r) pr ON pr.r < d.h // 2
-        JOIN (SELECT unnest(range(0, 4)) AS c) pc ON pc.c < d.w // 2
-    ),
-    px AS (
-        SELECT gg.gid, gg.pr, gg.pc,
-               (7 * gg.gid
-                + 13 * (((2 * gg.pr + dr.r) * gg.w + 2 * gg.pc + dc.c) * 3
-                        + ch.c)) % 256 AS v
-        FROM grid gg
-        CROSS JOIN (SELECT unnest(range(0, 2)) AS r) dr
-        CROSS JOIN (SELECT unnest(range(0, 2)) AS c) dc
-        CROSS JOIN (SELECT unnest(range(0, 3)) AS c) ch
-    ),
-    tile AS (
-        SELECT gid, pr, pc, CAST(sum(v) AS BIGINT) AS s
-        FROM px GROUP BY 1, 2, 3
-    ),
-    t8 AS (SELECT * FROM tile WHERE pr < 8 AND pc < 8),
-    sig AS (
-        SELECT gid, CAST(count(*) AS BIGINT) AS n_tiles,
-               string_agg(b, '' ORDER BY pr, pc) AS ahash
-        FROM (
-            SELECT gid, pr, pc,
-                   CASE WHEN s * (count(*) OVER (PARTITION BY gid))
-                             > (sum(s) OVER (PARTITION BY gid))
-                        THEN '1' ELSE '0' END AS b
-            FROM t8
-        ) GROUP BY gid
-    ),
-    j AS (
-        SELECT m.doc_id, s.n_tiles, s.ahash
-        FROM m JOIN sig s USING (gid)
-    )
-    SELECT doc_id, n_tiles, ahash,
-           CAST(count(*) OVER (PARTITION BY n_tiles, ahash) AS BIGINT)
-               AS group_size,
-           CAST(CASE WHEN doc_id = min(doc_id)
-                              OVER (PARTITION BY n_tiles, ahash)
-                     THEN 1 ELSE 0 END AS INT) AS keep
-    FROM j
-    """,
-)
-def q_image_dedup_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-dup dedup by average-hash
-    (operators.multimodal.image_ahash): documents map to one of 60
-    deterministic BMP payloads (real encode/decode round trip), every
-    image gets its aHash bit-string signature, and identical
-    signatures group — keep-lowest-id, the image-modality sibling of
-    dedup_exact.  The oracle recomputes tile sums from the closed-form
-    pixel rule and replays the integer threshold compare
-    (tile_sum * n_tiles > total) and the (row, col)-ordered bit string
-    exactly; the oracle keeps its brute window while the Spark side
-    derives group stats skew-safe (groupBy + join back)."""
-    docs = _spread(spark, t(spark, sf_dir, "documents")).select(
-        "doc_id", F.pmod("doc_id", F.lit(60)).cast("bigint").alias("gid")
-    )
-    pay = MM.synthesize_bmp_payloads(
-        docs.select("gid").distinct(), id_col="gid"
-    )
-    imgs = docs.join(
-        F.broadcast(pay.withColumnRenamed("id", "gid").select("gid", "payload")),
-        "gid",
-    ).select(F.col("doc_id").alias("id"), "payload")
-    sig = MM.image_ahash(imgs)
-    # group stats via partial-aggregating groupBy + join back, not a
-    # per-signature window: a signature shared by millions of images
-    # (THE logo problem) is the operator's target workload, and the
-    # join back is AQE skew-splittable while a window funnels the
-    # whole group through one task (the round-12 keep-first rule)
-    stats = sig.groupBy("n_tiles", "ahash").agg(
-        F.count(F.lit(1)).cast("bigint").alias("group_size"),
-        F.min("id").alias("_min_id"),
-    )
-    return sig.join(stats, ["n_tiles", "ahash"]).select(
-        F.col("id").alias("doc_id"),
-        "n_tiles",
-        "ahash",
-        "group_size",
-        (F.col("id") == F.col("_min_id")).cast("int").alias("keep"),
-    )
-
-
-@register_extra(
     "audio_dedup_fingerprint",
     oracle="""
     WITH m AS (
@@ -2320,9 +1968,9 @@ def q_audio_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators.multimodal.audio_fingerprint): documents map to one of
     60 deterministic 16-bit PCM WAV payloads (real encode/decode round
     trip), every clip gets its frame-energy bit string, identical
-    signatures group keep-lowest-id — the audio sibling of
-    image_dedup_ahash, completing exact-style dedup across all three
-    fixture modalities.  The oracle recomputes frame sums from the
+    signatures group keep-lowest-id — the audio sibling of the image
+    average-hash signatures, completing exact-style dedup across all
+    three fixture modalities.  The oracle recomputes frame sums from the
     closed-form sample rule and replays the integer threshold and the
     frame-ordered bit string exactly."""
     docs = _spread(spark, t(spark, sf_dir, "documents")).select(
@@ -2351,9 +1999,6 @@ def q_audio_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    # rotated INTO the driver gate round 13 (judge's rotate-in list),
-    # OUT round 14 after its driver-hard green round (operator
-    # unchanged; identical differential check continues in the sweep)
     "video_scene_cuts",
     oracle="""
     WITH m AS (
@@ -2531,8 +2176,8 @@ def q_video_keyframes(spark: SparkSession, sf_dir: str) -> DataFrame:
     "image_near_pairs",
     # the ORACLE is the O(N²) brute force over closed-form signatures;
     # the Spark side is the banded pigeonhole join — green means the
-    # blocking is sound AND complete (the fuzzy_vocab_pairs pattern,
-    # lifted to the image modality)
+    # blocking is sound AND complete (the fuzzy-pair pattern of
+    # vocab_canonicalize, lifted to the image modality)
     oracle="""
     WITH g AS (
         SELECT DISTINCT CAST(doc_id % 60 AS BIGINT) AS gid FROM documents
@@ -2673,92 +2318,3 @@ def q_orc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = scratch_dir("orc_scan") + "/store"
     docs.write.mode("overwrite").orc(path)
     return spark.read.orc(path)
-
-
-@register_extra(
-    # gated r12 (its first round, in for topk_orders); rotated OUT
-    # round 13: the from_xml parse is format-scan class like the
-    # still-gated mupr/mucr rows, sweep keeps it green
-    "xml_scan",
-    oracle=f"""
-    SELECT doc_id,
-           text || CASE WHEN doc_id % 3 = 0
-                        THEN ' &<>"{{}}'' raw'
-                        ELSE '' END AS text,
-           lang
-    FROM documents
-    """,
-)
-def q_xml_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """XML storage boundary end-to-end (Spark 4's NATIVE xml source —
-    extension surface): documents with XML-hostile payloads injected
-    (ampersands, angle brackets, quotes on every 3rd doc) serialize
-    through the XML writer's entity escaping and scan back with an
-    explicit no-inference schema; the oracle recomputes the expected
-    text from the parquet table, so escape -> parse must be an exact
-    inverse for the hash to hold."""
-    from .queries import scratch_dir
-
-    docs = t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 3 == 0, F.lit(" &<>\"{}' raw")
-            ).otherwise(F.lit("")),
-        ).alias("text"),
-        "lang",
-    )
-    path = scratch_dir("xml_scan") + "/store"
-    docs.write.mode("overwrite").format("xml").option(
-        "rootTag", "docs"
-    ).option("rowTag", "doc").save(path)
-    return (
-        spark.read.format("xml")
-        .schema("doc_id bigint, text string, lang string")
-        .option("rowTag", "doc")
-        .load(path)
-    )
-
-
-@register_extra(
-    # gated r12 (its first round); rotated OUT round 13: the quoted/
-    # multiline CSV surface shares the reader options with the
-    # still-gated meta_enrich trigger-CSV path, sweep keeps it green
-    "csv_quoted_scan",
-    oracle=f"""
-    SELECT doc_id,
-           text || CASE WHEN doc_id % 3 = 0 THEN ', "quoted, field"'
-                        ELSE '' END AS text,
-           lang
-    FROM documents
-    """,
-)
-def q_csv_quoted_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quoted-CSV boundary end-to-end: documents with CSV-hostile
-    payloads injected (embedded commas AND double quotes on every 3rd
-    doc) serialize through the CSV writer's RFC-4180 quoting/escaping
-    and scan back with an explicit no-inference schema; the oracle
-    recomputes the expected text from the parquet table, so
-    quote -> parse must be an exact inverse.  The reference's own CSV
-    handling (S3/S4/K5) never quotes — this gate covers the edge its
-    nullbyte-separated format sidesteps."""
-    from .queries import scratch_dir
-
-    docs = t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(
-                F.col("doc_id") % 3 == 0, F.lit(', "quoted, field"')
-            ).otherwise(F.lit("")),
-        ).alias("text"),
-        "lang",
-    )
-    path = scratch_dir("csv_quoted_scan") + "/store"
-    docs.write.mode("overwrite").option("header", True).csv(path)
-    return (
-        spark.read.schema("doc_id bigint, text string, lang string")
-        .option("header", True)
-        .csv(path)
-    )

@@ -17,9 +17,6 @@ _TERMS_SQL = ", ".join(repr(w) for w in _TERMS)
 
 
 @register_extra(
-    # retired to the pytest tier in the round-9 mid-round rotation:
-    # tf/df/idf/doc-length machinery is subsumed (and extended with
-    # ranked retrieval) by the driver-gated bm25_topk
     "tfidf_stopwords",
     oracle=f"""
     WITH toks AS (
@@ -148,8 +145,6 @@ def q_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    # rotated OUT late round 9 (subsumed: kmeans_fixed gates the same
-    # per-group per-dimension mean math inside the Lloyd update)
     "label_centroid_features",
     oracle=f"""
     WITH vecs AS (SELECT vec_id, label, {_EMB_D} AS v FROM embeddings),
@@ -175,8 +170,6 @@ def q_label_centroid_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    # retired to the pytest tier: norm/dot math is gated by ann_topk,
-    # dedup_embedding and label_centroid_features
     "vector_norms",
     # CTE stages so the norm is computed once per vector — inlining the
     # dot product inside list_transform re-evaluates it per ELEMENT
@@ -330,7 +323,7 @@ def q_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_retrieval_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination-by-retrieval (the recall-first complement of the
-    n-gram `decontaminate` gate): each eval probe retrieves its hybrid
+    n-gram overlap of operators.text.decontaminate): each eval probe retrieves its hybrid
     top-10 (BM25 + hashed-cosine RRF) and the union of retrieved docs
     is flagged for removal; the gate reports kept/flagged counts per
     source.  Composes the retrieval stack into the curation surface —
@@ -359,113 +352,6 @@ def q_retrieval_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    "source_top_terms",
-    oracle=f"""
-    WITH d AS (SELECT doc_id, source, {_TOKS} AS tks FROM documents),
-    bg AS (
-        SELECT source,
-               unnest(list_transform(
-                   range(1, len(tks)),
-                   i -> tks[CAST(i AS INT)] || '_' || tks[CAST(i AS INT) + 1]
-               )) AS term
-        FROM d WHERE len(tks) >= 2
-    ),
-    tf AS (SELECT source, term, CAST(count(*) AS BIGINT) AS tf
-           FROM bg GROUP BY 1, 2),
-    df AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-           FROM (SELECT DISTINCT source, term FROM bg) GROUP BY 1),
-    ns AS (SELECT CAST(count(DISTINCT source) AS BIGINT) AS n FROM bg),
-    sc AS (
-        SELECT tf.source, tf.term, tf.tf, df.df,
-               CAST(floor(tf.tf * ln(CAST(ns.n AS DOUBLE) / df.df)
-                          * 1000000000) AS BIGINT) AS s
-        FROM tf JOIN df USING (term), ns
-    )
-    SELECT source, term, tf, df, s AS score_q
-    FROM (SELECT *, row_number() OVER (PARTITION BY source
-                     ORDER BY s DESC, term) AS r FROM sc)
-    WHERE r <= 5
-    """,
-)
-def q_source_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """c-TF-IDF source labeling: each source's 5 most distinguishing
-    bigram terms (term frequency within the source × log inverse
-    source-frequency — the cluster-labeling flavor of TF-IDF, scored
-    at the GROUP level so the matrix is sources × vocabulary, never
-    documents × vocabulary).  The score is floor-quantized at 1e-9
-    before ranking (libm ln), ties break on the term — the same
-    determinism recipe as weighted_sample.  Group-level scoring keeps
-    everything small: tf is one (source, term) aggregate with map-side
-    combine, df one distinct-aggregate over it."""
-    from pyspark.sql import Window
-
-    from ..operators.dedup import tokens
-
-    d = _spread(spark, t(spark, sf_dir, "documents")).select(
-        "source", tokens("text").alias("tks")
-    )
-    bg = d.filter(F.size("tks") >= 2).select(
-        "source",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(tks) - 1),"
-                " i -> concat(tks[i-1], '_', tks[i]))"
-            )
-        ).alias("term"),
-    )
-    tf = bg.groupBy("source", "term").agg(
-        F.count(F.lit(1)).cast("bigint").alias("tf")
-    )
-    df_ = (
-        bg.select("source", "term")
-        .distinct()
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-    )
-    n_sources = bg.select(
-        F.countDistinct("source").cast("bigint").alias("n")
-    )
-    sc = (
-        tf.join(df_, "term")
-        .crossJoin(F.broadcast(n_sources))
-        .select(
-            "source",
-            "term",
-            "tf",
-            "df",
-            F.floor(
-                F.col("tf")
-                * F.log(F.col("n").cast("double") / F.col("df"))
-                * F.lit(1_000_000_000.0)
-            ).cast("bigint").alias("score_q"),
-        )
-    )
-    # two-phase top-5 (the top_k_per_group shape, inlined for the
-    # composite order): a source's group is its whole VOCABULARY, so a
-    # single per-source window would sort millions of terms in one
-    # task at corpus scale.  Phase 1 keeps <=5 candidates per (source,
-    # input partition); the final per-source sort sees <=5 x partitions
-    # rows, bounded regardless of vocabulary size.
-    order = (F.desc("score_q"), F.asc("term"))
-    wl = Window.partitionBy("source", "_p").orderBy(*order)
-    cand = (
-        sc.withColumn("_p", F.spark_partition_id())
-        .withColumn("_r", F.row_number().over(wl))
-        .filter(F.col("_r") <= 5)
-        .drop("_p", "_r")
-    )
-    w = Window.partitionBy("source").orderBy(*order)
-    return (
-        cand.withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= 5)
-        .select("source", "term", "tf", "df", "score_q")
-    )
-
-
-@register_extra(
-    # rotated INTO the driver gate at the end of round 9 (extra-tier
-    # green since landing): the phrase-mining family's driver-hard row;
-    # trigger_csv_scan rotated out (S4 coverage continues extra-tier)
     "pmi_collocations",
     oracle=f"""
     WITH d AS (SELECT {_TOKS} AS tks FROM documents),
@@ -622,9 +508,6 @@ def _pca_oracle(iters: int = 3, d: int = 64, r: int = 6) -> str:
 
 
 @register(
-    # rotated INTO the driver gate in round 10 (never gated before):
-    # the quantized power-iteration / unrolled-CTE oracle gets a
-    # driver-hard row
     "pca_top_direction", oracle=_pca_oracle())
 def q_pca_top_direction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three quantized power-iteration rounds on X'X over the

@@ -140,8 +140,6 @@ _QUALITY_SQL = """
 """
 
 
-# rotated INTO the driver gate round 14 (verdict rotate-in list;
-# sweep-green since r13): the overflow-free argmax representatives
 @register(
     "dedup_best_quality",
     oracle=f"""
@@ -248,10 +246,6 @@ def _pr_oracle(n_iter: int = 5, damping: float = 0.85) -> str:
 
 
 @register_extra(
-    # rotated INTO the driver gate in round 10 (never gated before);
-    # OUT in round 12 for unicode_nfc — the iterative-loop surface
-    # keeps gated siblings (bfs_reach's frontier loop, dedup_corpus /
-    # vocab_canonicalize's label-propagation supersteps)
     "pagerank_coview", oracle=_pr_oracle())
 def q_pagerank_coview(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Five power-iteration rounds (operators.graph.pagerank) over the
@@ -376,8 +370,6 @@ def _km_oracle(k: int = 8, iters: int = 2, r: int = 6) -> str:
 
 
 @register(
-    # rotated INTO the driver gate late round 9: the Lloyd-update
-    # differential (every round replayed in the unrolled oracle)
     "kmeans_fixed", oracle=_km_oracle())
 def q_kmeans_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two Lloyd's rounds over the embedding table
@@ -401,7 +393,6 @@ def q_kmeans_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    # rotated INTO the driver gate in round 10 (never gated before)
     "bfs_reach",
     oracle="""
     WITH RECURSIVE e AS (
@@ -448,120 +439,3 @@ def q_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("s_suppkey").alias("node"))
     )
     return G.bfs_distances(edges, seeds, max_hops=4)
-
-
-@register_extra(
-    "contamination_radius",
-    oracle=f"""
-    WITH RECURSIVE pairs AS ({MINHASH_PAIRS_SQL}),
-    e AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION
-        SELECT id_b, id_a FROM pairs
-    ),
-    corpus AS ({_NEARDUP_DOCS_SQL}),
-    seeds AS (SELECT doc_id AS node FROM corpus WHERE doc_id % 11 = 0),
-    walk(node, d) AS (
-        SELECT node, 0 FROM seeds
-        UNION
-        SELECT e.dst, w.d + 1 FROM walk w JOIN e ON e.src = w.node
-        WHERE w.d < 2
-    )
-    SELECT node, CAST(min(d) AS BIGINT) AS dist FROM walk GROUP BY 1
-    """,
-)
-def q_contamination_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contamination blast radius: flagged documents (doc_id % 11 == 0
-    plays the flag) expand through the near-duplicate pair graph —
-    everything within 2 hops is the quarantine set a curation pass
-    would hold back, because a near-dup of a near-dup of a leaked eval
-    document is itself suspect.  Composes the LSH pair table (claimed
-    from the registry when a dedup family member just built it — same
-    pin key as dedup_clusters) with operators.graph.bfs_distances; the
-    oracle chains the brute-force pair CTE with the recursive walk."""
-    key_p = f"minhash_pairs:{sf_dir}"
-    pairs = claim_deferred(key_p, spark)
-    if pairs is None:
-        pairs = D.minhash_near_duplicates(
-            _neardup_docs(spark, sf_dir), threshold=0.5, materialize=False
-        )
-        pairs = persist_deferred(pairs, key=key_p)
-    fwd = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    )
-    edges = fwd.union(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    seeds = (
-        _neardup_docs(spark, sf_dir)
-        .filter(F.col("doc_id") % 11 == 0)
-        .select(F.col("doc_id").alias("node"))
-    )
-    return G.bfs_distances(edges, seeds, max_hops=2)
-
-
-@register_extra(
-    "item_item_cosine",
-    oracle="""
-    WITH gi AS (
-        SELECT DISTINCT l_orderkey AS g, l_partkey AS i FROM lineitem
-    ),
-    c AS (SELECT i, CAST(count(*) AS BIGINT) AS n FROM gi GROUP BY 1),
-    co AS (
-        SELECT l.i AS a, r.i AS b, CAST(count(*) AS BIGINT) AS co
-        FROM gi l JOIN gi r ON l.g = r.g AND l.i < r.i
-        GROUP BY 1, 2 HAVING count(*) >= 2
-    )
-    SELECT a, b, co,
-           CAST(floor(co / sqrt(CAST(ca.n AS DOUBLE) * cb.n)
-                      * 1000000000) AS BIGINT) AS cos_q
-    FROM co JOIN c ca ON ca.i = co.a JOIN c cb ON cb.i = co.b
-    ORDER BY cos_q DESC, a, b LIMIT 50
-    """,
-)
-def q_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Item-item collaborative-filtering similarity over the order
-    baskets: cosine on the binary co-occurrence matrix,
-    ``co(a,b) / sqrt(n(a)·n(b))``, support >= 2, top-50 — the
-    "customers who bought X also bought Y" primitive, and the
-    NORMALIZED sibling of the PMI collocations (PMI rewards surprise,
-    cosine rewards overlap).  Scale shape: the distinct (basket, item)
-    projection bounds the wedge join input; co-occurrence counts
-    aggregate with map-side combine; the vocabulary-sized count table
-    joins twice gram-keyed; top-50 is TakeOrdered.  The support filter
-    is the quadratic bound — exactly triangle_count's recipe on the
-    same graph."""
-    from .queries import t
-
-    li = t(spark, sf_dir, "lineitem")
-    gi = li.select(
-        F.col("l_orderkey").alias("g"), F.col("l_partkey").alias("i")
-    ).distinct()
-    c = gi.groupBy("i").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    left = gi.select("g", F.col("i").alias("a"))
-    right = gi.select("g", F.col("i").alias("b"))
-    co = (
-        left.join(right, "g")
-        .filter(F.col("a") < F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("co"))
-        .filter(F.col("co") >= 2)
-    )
-    return (
-        co.join(c.select(F.col("i").alias("a"), F.col("n").alias("na")), "a")
-        .join(c.select(F.col("i").alias("b"), F.col("n").alias("nb")), "b")
-        .select(
-            "a",
-            "b",
-            "co",
-            F.floor(
-                F.col("co")
-                / F.sqrt(F.col("na").cast("double") * F.col("nb"))
-                * F.lit(1_000_000_000.0)
-            )
-            .cast("bigint")
-            .alias("cos_q"),
-        )
-        .orderBy(F.desc("cos_q"), "a", "b")
-        .limit(50)
-    )

@@ -1,112 +1,11 @@
-"""Reshaping + sampling queries: pivot, cube, deterministic splits,
-per-group capped sampling."""
+"""Reshaping queries: z-order layout, unpivot, grouping sets."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.sampling import top_k_per_group
-from .queries import register, register_extra, t
-
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-@register_extra(
-    # rotated OUT late round 9 (subsumed: conditional-aggregation
-    # reshaping is driver-gated via rollup_revenue; cube_events keeps
-    # the grouping-set surface in the extra tier)
-    "pivot_events",
-    oracle="""
-    SELECT user_id % 10 AS user_bucket,
-           """
-    + ",\n           ".join(
-        f"CAST(sum(CASE WHEN event_type = '{et}' "
-        f"THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS {et}"
-        for et in _EVENT_TYPES
-    )
-    + """
-    FROM events GROUP BY 1
-    """,
-)
-def q_pivot_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot on a fixed value list (explicit list keeps the schema
-    deterministic and skips the extra distinct-values job)."""
-    ev = t(spark, sf_dir, "events")
-    return (
-        ev.groupBy((F.col("user_id") % 10).alias("user_bucket"))
-        .pivot("event_type", _EVENT_TYPES)
-        .agg(F.sum(F.col("value").cast("decimal(18,2)")).cast("double"))
-    )
-
-
-@register_extra(
-    # rotated OUT to the extra tier in round 7 (driver-green r1-r6):
-    # grouping-sets coverage is subsumed by the gated rollup_revenue
-    # and pivot_events; the identical differential check continues here
-    "cube_events",
-    oracle="""
-    SELECT event_type, CAST(user_id % 10 AS BIGINT) AS user_bucket,
-           CAST(count(*) AS BIGINT) AS n
-    FROM events
-    GROUP BY CUBE(event_type, user_id % 10)
-    """,
-)
-def q_cube_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = t(spark, sf_dir, "events")
-    return ev.cube(
-        "event_type", (F.col("user_id") % 10).cast("bigint").alias("user_bucket")
-    ).agg(F.count("*").cast("bigint").alias("n"))
-
-
-@register_extra(
-    "sample_per_source",
-    oracle="""
-    SELECT source, doc_id, lang, CAST(n_chars AS BIGINT) AS n_chars
-    FROM documents
-    QUALIFY row_number() OVER (PARTITION BY source ORDER BY doc_id) <= 10
-    """,
-)
-def q_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """"Keep N documents per domain" — deterministic per-group capped
-    sampling via the two-phase top-K (operators.sampling), the curation
-    primitive that balances a training mix across sources without
-    funneling any source's full row set through one task."""
-    docs = t(spark, sf_dir, "documents")
-    kept = top_k_per_group(docs, group_col="source", order_col="doc_id", k=10)
-    return kept.select(
-        "source", "doc_id", "lang", F.col("n_chars").cast("bigint").alias("n_chars")
-    )
-
-
-@register_extra(
-    # rotated OUT of the driver gate in round 10 for pca_top_direction:
-    # the multiplicative-hash split filter is coverage-subsumed by the
-    # gated mixture-sampling family (same map-side hash-mod mechanism)
-    "train_val_test_split",
-    oracle="""
-    SELECT CASE WHEN (doc_id * 2654435761) % 100 < 80 THEN 'train'
-                WHEN (doc_id * 2654435761) % 100 < 90 THEN 'val'
-                ELSE 'test' END AS split,
-           CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS n_chars
-    FROM documents GROUP BY 1
-    """,
-)
-def q_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic, engine-independent 80/10/10 split via modular
-    arithmetic on the stable document id — the reproducible-sampling
-    primitive a training pipeline needs (re-running or re-sharding the
-    corpus never moves a document between splits)."""
-    docs = t(spark, sf_dir, "documents")
-    bucket = (F.col("doc_id") * 2654435761) % 100
-    split = (
-        F.when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
-    )
-    return docs.groupBy(split.alias("split")).agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum("n_chars").cast("bigint").alias("n_chars"),
-    )
+from .queries import register_extra, t
 
 
 def _zorder_sql(bits: int = 8) -> str:
@@ -146,8 +45,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     EITHER dimension prunes most buckets."""
     from ..operators.layout import zorder_value
 
-    # hour bucket in integer MICROSECONDS (the epoch() trap
-    # range_window_user documents): a double ts/3600.0 division can
+    # hour bucket in integer MICROSECONDS (the epoch() trap): a double ts/3600.0 division can
     # round UP across an hour boundary for epochs just under a
     # multiple of 3600 (quotient ulp ~1e-10 at this magnitude) while
     # the oracle's integer floor(epoch)//3600 cannot — integer div on

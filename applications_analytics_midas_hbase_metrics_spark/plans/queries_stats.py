@@ -1,220 +1,17 @@
-"""Statistics + temporal-feature queries: exact percentiles, approximate
-distinct counts (rows-only — approximation algorithms differ by engine),
-and calendar-part extraction.
-"""
+"""Statistics queries: count-min heavy hitters and weighted sampling."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries import register, register_extra, t
-
-
-@register_extra(
-    "quantiles",
-    oracle="""
-    SELECT l_returnflag,
-           round(quantile_cont(l_quantity, 0.5), 6) AS p50,
-           round(quantile_cont(l_quantity, 0.9), 6) AS p90,
-           round(quantile_cont(l_quantity, 0.99), 6) AS p99
-    FROM lineitem GROUP BY 1
-    """,
-)
-def q_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles (Spark ``percentile`` == DuckDB
-    ``quantile_cont`` definition); rounded to absorb last-bit
-    interpolation differences."""
-    li = t(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.round(F.percentile("l_quantity", F.lit(0.5)), 6).alias("p50"),
-        F.round(F.percentile("l_quantity", F.lit(0.9)), 6).alias("p90"),
-        F.round(F.percentile("l_quantity", F.lit(0.99)), 6).alias("p99"),
-    )
-
-
-@register_extra(
-    "approx_quantiles",
-    # Like approx_distinct: a sketch estimate cannot hash-compare across
-    # engines, but its GUARANTEE can.  percentile_approx (GK sketch)
-    # promises rank error <= 1/accuracy; the gated output is the
-    # discrete-quantile sandwich verdict "frac_lt(v) <= p + eps and
-    # frac_le(v) >= p - eps" (tie-robust — the correct validity test
-    # for a quantile drawn from data with repeated values), computed
-    # from exact integer counts.  A broken sketch flips a verdict and
-    # the hash goes red.
-    oracle="""
-    SELECT l_returnflag, 'ok' AS p50_check, 'ok' AS p90_check
-    FROM lineitem GROUP BY 1
-    """,
-)
-def q_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketched percentiles (percentile_approx / Greenwald-Khanna) —
-    the quantile path that actually runs at 100 TB, where the exact
-    sort-based percentile is unaffordable; self-checked against the
-    rank-error guarantee the way approx_distinct checks HLL."""
-    li = t(spark, sf_dir, "lineitem")
-    ap = li.groupBy("l_returnflag").agg(
-        F.percentile_approx(
-            "l_quantity", F.array(F.lit(0.5), F.lit(0.9)), F.lit(10000)
-        ).alias("ap")
-    )
-    j = li.join(F.broadcast(ap), "l_returnflag")
-    eps = 1e-3  # 10x the 1/accuracy rank-error bound
-
-    def check(i: int, target: float, out: str):
-        v = F.element_at("ap", i)
-        lt = F.avg((F.col("l_quantity") < v).cast("double"))
-        le = F.avg((F.col("l_quantity") <= v).cast("double"))
-        return (
-            F.when((lt <= target + eps) & (le >= target - eps), F.lit("ok"))
-            .otherwise(F.lit("bad"))
-            .alias(out)
-        )
-
-    return j.groupBy("l_returnflag").agg(
-        check(1, 0.5, "p50_check"), check(2, 0.9, "p90_check")
-    )
-
-
-@register_extra(
-    "sketch_shard_quantiles",
-    # The MERGEABLE-sketch contract, the pattern that matters at
-    # 100 TB: per-shard KLL quantile sketches (kll_sketch_agg_double)
-    # are persistable partial aggregates — a deployment sketches each
-    # ingest shard once and answers corpus-wide quantiles by MERGING
-    # sketches, never re-scanning data.  Both the direct per-group
-    # sketch and the shard-merged sketch must satisfy the KLL rank
-    # guarantee; the gate emits the tie-robust rank-sandwich verdicts
-    # for both paths (exact integer-count fractions vs p +- eps).  All
-    # sketch ops are JVM SQL expressions; the merge is a HOF fold over
-    # the collected per-shard sketch list (bounded: shards per group).
-    oracle="""
-    SELECT l_returnflag, 'ok' AS p50_check, 'ok' AS p90_check,
-           'ok' AS p50_merged_check, 'ok' AS p90_merged_check
-    FROM lineitem GROUP BY 1
-    """,
-)
-def q_sketch_shard_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem")
-    qty = F.col("l_quantity").cast("double")
-    direct = li.groupBy("l_returnflag").agg(
-        F.kll_sketch_agg_double(qty).alias("sk")
-    )
-    shards = li.groupBy(
-        "l_returnflag", (F.col("l_orderkey") % 8).alias("shard")
-    ).agg(F.kll_sketch_agg_double(qty).alias("sk"))
-    merged = shards.groupBy("l_returnflag").agg(
-        F.collect_list("sk").alias("sks")
-    )
-    fold = F.aggregate(
-        F.slice(F.col("sks"), 2, F.greatest(F.size("sks") - 1, F.lit(0))),
-        F.element_at(F.col("sks"), 1),
-        lambda acc, x: F.kll_sketch_merge_double(acc, x),
-    )
-    ests = direct.select(
-        "l_returnflag",
-        F.kll_sketch_get_quantile_double("sk", F.lit(0.5)).alias("e50"),
-        F.kll_sketch_get_quantile_double("sk", F.lit(0.9)).alias("e90"),
-    ).join(
-        merged.select(
-            "l_returnflag",
-            F.kll_sketch_get_quantile_double(fold, F.lit(0.5)).alias("m50"),
-            F.kll_sketch_get_quantile_double(fold, F.lit(0.9)).alias("m90"),
-        ),
-        "l_returnflag",
-    )
-    j = li.join(F.broadcast(ests), "l_returnflag")
-    eps = 0.03  # KLL default-k normalized rank error is ~1.7%
-
-    def check(est: str, target: float, out: str):
-        v = F.col(est)
-        lt = F.avg((qty < v).cast("double"))
-        le = F.avg((qty <= v).cast("double"))
-        return (
-            F.when((lt <= target + eps) & (le >= target - eps), F.lit("ok"))
-            .otherwise(F.lit("bad"))
-            .alias(out)
-        )
-
-    return j.groupBy("l_returnflag").agg(
-        check("e50", 0.5, "p50_check"),
-        check("e90", 0.9, "p90_check"),
-        check("m50", 0.5, "p50_merged_check"),
-        check("m90", 0.9, "p90_merged_check"),
-    )
-
-
-@register_extra(
-    "approx_distinct",
-    # HLL sketches differ per engine, so the raw estimate cannot be
-    # hash-compared — but the estimate's ERROR BOUND can: the gated
-    # output is the exact count plus a within-tolerance verdict.  Spark
-    # computes the verdict from its own HLL estimate; the oracle asserts
-    # the verdict is 'ok' for every group (15x the 2% rsd ~ beyond-5-
-    # sigma, deterministic for any functioning HLL++).  A broken sketch
-    # flips the verdict and hash-mismatches.
-    oracle="""
-    SELECT l_returnflag,
-           CAST(count(DISTINCT l_partkey) AS BIGINT) AS exact_parts,
-           'ok' AS approx_check
-    FROM lineitem GROUP BY 1
-    """,
-)
-def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """approx_count_distinct (HyperLogLog++) self-checked against the
-    exact count, mirroring ann_ivf's self-checking-recall pattern."""
-    li = t(spark, sf_dir, "lineitem")
-    agg = li.groupBy("l_returnflag").agg(
-        F.approx_count_distinct("l_partkey", rsd=0.02).alias("approx_parts"),
-        F.count_distinct("l_partkey").cast("bigint").alias("exact_parts"),
-    )
-    within = (
-        F.abs(F.col("approx_parts") - F.col("exact_parts"))
-        <= 0.30 * F.col("exact_parts")
-    )
-    return agg.select(
-        "l_returnflag",
-        "exact_parts",
-        F.when(within, F.lit("ok")).otherwise(F.lit("out_of_bound")).alias(
-            "approx_check"
-        ),
-    )
-
-
-@register_extra(
-    # retired to the pytest tier: pure projection over ts (the windowed
-    # aggregations gate the time-bucketing math)
-    "time_features",
-    oracle="""
-    SELECT CAST(year(ts) AS INT) AS y, CAST(month(ts) AS INT) AS m,
-           CAST(dayofweek(ts) AS INT) AS dow, CAST(hour(ts) AS INT) AS h,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(min(date_trunc('day', ts)) AS TIMESTAMP) AS first_day
-    FROM events GROUP BY 1, 2, 3, 4
-    """,
-)
-def q_time_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calendar-part extraction + date_trunc (F14-family surface).
-    DuckDB dayofweek is 0=Sunday..6; Spark dayofweek is 1=Sunday..7 —
-    normalized here to the DuckDB convention."""
-    ev = t(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.year("ts").cast("int").alias("y"),
-        F.month("ts").cast("int").alias("m"),
-        (F.dayofweek("ts") - 1).cast("int").alias("dow"),
-        F.hour("ts").cast("int").alias("h"),
-    ).agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.min(F.date_trunc("day", F.col("ts"))).alias("first_day"),
-    )
+from .queries import register_extra, t
 
 
 @register_extra(
     "heavy_hitters_cms",
-    # Count-min sketch heavy hitters, the frequency twin of the KLL
-    # quantile gates: the sketch estimate cannot hash-compare across
-    # engines, but (a) the top-k truth can — (tok, true_count) comes
+    # Count-min sketch heavy hitters: the sketch estimate cannot
+    # hash-compare across engines, but (a) the top-k truth can — (tok, true_count) comes
     # from the exact distributed aggregate and must hash-match DuckDB's
     # — and (b) the CMS guarantee can: with a FIXED seed the sketch is
     # deterministic, so "true <= est <= true + eps*N" (one-sided
@@ -297,51 +94,6 @@ def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    "user_value_trend",
-    oracle="""
-    WITH e AS (
-        SELECT user_id, value,
-               epoch(ts) / 86400.0
-                   - min(epoch(ts) / 86400.0) OVER (PARTITION BY user_id)
-                   AS x
-        FROM events
-    )
-    SELECT user_id,
-           CAST(count(*) AS BIGINT) AS n,
-           round(regr_slope(value, x), 6) AS slope,
-           round(regr_intercept(value, x), 6) AS intercept
-    FROM e GROUP BY 1
-    """,
-)
-def q_user_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user linear trend of event value over days-since-first-
-    activity (regr_slope / regr_intercept — both engines implement the
-    numerically-stable co-moment form).  Centering x per user is the
-    numerical guard: absolute epoch-days (~19,700) against a ~30-day
-    activity span would put the variance 6 orders of magnitude below
-    the mean's square, exactly the cancellation regime the centered
-    regression avoids.  One window for the per-user minimum, one
-    grouped aggregate — both partition by user."""
-    from pyspark.sql import Window
-
-    ev = t(spark, sf_dir, "events")
-    # fractional epoch: cast-to-double keeps the microseconds, matching
-    # DuckDB's epoch(ts); unix_timestamp would truncate to seconds
-    days = F.col("ts").cast("double") / F.lit(86400.0)
-    wu = Window.partitionBy("user_id")
-    e = ev.select(
-        "user_id",
-        "value",
-        (days - F.min(days).over(wu)).alias("x"),
-    )
-    return e.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.round(F.expr("regr_slope(value, x)"), 6).alias("slope"),
-        F.round(F.expr("regr_intercept(value, x)"), 6).alias("intercept"),
-    )
-
-
-@register_extra(
     "weighted_sample",
     oracle=f"""
     WITH d AS (
@@ -389,121 +141,3 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return weighted_sample_topk(
         d, 25, weight_col="n_tokens", strat_col="source", key_col="doc_id"
     ).select("doc_id", "source", "n_tokens", "es_key")
-
-
-@register_extra(
-    "value_histogram",
-    oracle="""
-    SELECT CAST(least(greatest(floor(o_totalprice / 25000.0), 0), 23)
-                AS BIGINT) AS bucket,
-           CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-               AS total
-    FROM orders GROUP BY 1
-    """,
-)
-def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width histogram of order totals: 24 buckets of 25k with
-    both tails clamped into the edge buckets — FIXED bounds, so the
-    bucket id is a pure map-side expression (no data-dependent min/max
-    pass, no global scan before binning) and the whole query is one
-    scan + one keyed aggregate with map-side combine.  Totals sum as
-    exact DECIMAL before the double cast."""
-    o = t(spark, sf_dir, "orders")
-    bucket = F.least(
-        F.greatest(F.floor(F.col("o_totalprice") / 25000.0), F.lit(0)),
-        F.lit(23),
-    ).cast("bigint")
-    return (
-        o.groupBy(bucket.alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("total"),
-        )
-    )
-
-
-@register_extra(
-    "corr_metrics",
-    oracle="""
-    WITH s AS (
-        SELECT CAST(count(*) AS DOUBLE) AS n,
-               CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sq,
-               CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sp,
-               CAST(sum(CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS sd,
-               CAST(sum(CAST(l_quantity AS DECIMAL(18,2))
-                        * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sqq,
-               CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                        * CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS spp,
-               CAST(sum(CAST(l_discount AS DECIMAL(18,2))
-                        * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS sdd,
-               CAST(sum(CAST(l_quantity AS DECIMAL(18,2))
-                        * CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sqp,
-               CAST(sum(CAST(l_quantity AS DECIMAL(18,2))
-                        * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS sqd,
-               CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                        * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS spd
-        FROM lineitem
-    )
-    SELECT CAST(n AS BIGINT) AS n,
-           round((n * sqp - sq * sp)
-                 / sqrt((n * sqq - sq * sq) * (n * spp - sp * sp)), 6)
-               AS r_qty_price,
-           round((n * sqd - sq * sd)
-                 / sqrt((n * sqq - sq * sq) * (n * sdd - sd * sd)), 6)
-               AS r_qty_disc,
-           round((n * spd - sp * sd)
-                 / sqrt((n * spp - sp * sp) * (n * sdd - sd * sd)), 6)
-               AS r_price_disc
-    FROM s
-    """,
-)
-def q_corr_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise Pearson correlation of the three lineitem measures in
-    ONE scan: the nine sufficient statistics (sums, squares, cross
-    products) aggregate as exact DECIMAL — order-independent, so the
-    only floating-point arithmetic is the final closed form on ten
-    scalars, identical in any engine and any partitioning.  The
-    built-in ``corr()`` aggregates in doubles (partial-order-dependent
-    last bits) and could never hash against an oracle; this is also
-    the formulation that scales — one map-side-combined pass for ANY
-    number of column pairs, vs one shuffle per pair."""
-    li = t(spark, sf_dir, "lineitem")
-    dq = F.col("l_quantity").cast("decimal(18,2)")
-    dp = F.col("l_extendedprice").cast("decimal(18,2)")
-    dd = F.col("l_discount").cast("decimal(18,2)")
-    s = li.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum(dq).cast("double").alias("sq"),
-        F.sum(dp).cast("double").alias("sp"),
-        F.sum(dd).cast("double").alias("sd"),
-        F.sum(dq * dq).cast("double").alias("sqq"),
-        F.sum(dp * dp).cast("double").alias("spp"),
-        F.sum(dd * dd).cast("double").alias("sdd"),
-        F.sum(dq * dp).cast("double").alias("sqp"),
-        F.sum(dq * dd).cast("double").alias("sqd"),
-        F.sum(dp * dd).cast("double").alias("spd"),
-    )
-    n, sq, sp, sd = F.col("n"), F.col("sq"), F.col("sp"), F.col("sd")
-    sqq, spp, sdd = F.col("sqq"), F.col("spp"), F.col("sdd")
-    sqp, sqd, spd = F.col("sqp"), F.col("sqd"), F.col("spd")
-    return s.select(
-        n.cast("bigint").alias("n"),
-        F.round(
-            (n * sqp - sq * sp)
-            / F.sqrt((n * sqq - sq * sq) * (n * spp - sp * sp)),
-            6,
-        ).alias("r_qty_price"),
-        F.round(
-            (n * sqd - sq * sd)
-            / F.sqrt((n * sqq - sq * sq) * (n * sdd - sd * sd)),
-            6,
-        ).alias("r_qty_disc"),
-        F.round(
-            (n * spd - sp * sd)
-            / F.sqrt((n * spp - sp * sp) * (n * sdd - sd * sd)),
-            6,
-        ).alias("r_price_disc"),
-    )

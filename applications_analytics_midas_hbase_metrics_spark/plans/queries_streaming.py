@@ -151,9 +151,6 @@ def q_stream_cell_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    # rotated OUT of the driver gate in round 10 for bfs_reach: the
-    # simplest streaming aggregate is coverage-subsumed by the gated
-    # stream_cell_build / stream_sessionize / stream_stream_join trio
     "stream_running_totals",
     oracle="""
     SELECT user_id,
@@ -235,55 +232,6 @@ def q_stream_dedupe(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _await(q)
     return spark.table(sink).select("event_id")
-
-
-@register_extra(
-    "stream_enrich",
-    oracle="""
-    SELECT c_mktsegment,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS value_sum
-    FROM events JOIN customer ON user_id = c_custkey
-    GROUP BY 1
-    """,
-)
-def q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static join gate: the events stream enriched against the
-    static customer table with a BROADCAST hash join per micro-batch —
-    the dimension-enrichment shape of a production ingest (the static
-    side is re-broadcast per batch; no state store involved, so append
-    mode needs no watermark).  The sink rows regroup batch-side; sums
-    accumulate in DECIMAL so arrival order can't move the hash."""
-    ev = t(spark, sf_dir, "events")
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    cust = t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    joined = stream.join(
-        F.broadcast(cust), stream.user_id == cust.c_custkey
-    ).select("c_mktsegment", "value")
-    sink = f"se_{uuid.uuid4().hex[:12]}"
-    with _stream_shuffle_partitions(spark, 8):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await(q)
-    return (
-        spark.table(sink)
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count("*").cast("bigint").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("value_sum"),
-        )
-    )
 
 
 def _time_split_copy(df, name: str, sf_dir: str, t_col: str, mid: int) -> str:
@@ -427,10 +375,6 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly older than anything a future right row can match, so the
     streamed result equals the batch join row-for-row; the oracle IS
     that batch join)."""
-    return _ssj_run(spark, sf_dir, how="inner")
-
-
-def _ssj_run(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
     import datetime as dt
 
     mid = dt.datetime(2024, 1, 16)
@@ -467,7 +411,6 @@ def _ssj_run(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
         right_ts="c_ts",
         max_lag_seconds=_SSJ_LAG,
         watermark="1 hour",
-        how=how,
     ).select(
         "view_id",
         "click_id",
@@ -490,51 +433,6 @@ def _ssj_run(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
         )
         _await(q)
     return spark.table(sink).select("view_id", "click_id", "user_id", "lag_us")
-
-
-@register_extra(
-    "stream_stream_join_outer",
-    # LEFT OUTER adds the watermark-closure semantics to the inner
-    # gate: an unmatched view emits (click null) only once the global
-    # watermark — min over BOTH sources of (max event time) minus the
-    # 1 h delay — moves strictly past view_ts + 6 h, proving no future
-    # click can match.  Views near the stream tail stay withheld; the
-    # oracle encodes exactly that closure rule, so the differential
-    # hash pins the engine's outer-emission semantics, not just the
-    # match set.
-    oracle="""
-    WITH v AS (SELECT event_id AS view_id, user_id, ts AS v_ts
-               FROM events WHERE event_type = 'view'),
-    c AS (SELECT event_id AS click_id, user_id, ts AS c_ts
-          FROM events WHERE event_type = 'click'),
-    wm AS (SELECT least((SELECT max(v_ts) FROM v),
-                        (SELECT max(c_ts) FROM c))
-                  - INTERVAL 1 HOUR AS w),
-    m AS (
-        SELECT v.view_id, c.click_id, v.user_id,
-               CAST(epoch_us(c.c_ts) - epoch_us(v.v_ts) AS BIGINT) AS lag_us
-        FROM v JOIN c ON v.user_id = c.user_id
-         AND c.c_ts > v.v_ts AND c.c_ts <= v.v_ts + INTERVAL 6 HOUR
-    ),
-    um AS (
-        SELECT v.view_id, CAST(NULL AS BIGINT) AS click_id, v.user_id,
-               CAST(NULL AS BIGINT) AS lag_us
-        FROM v, wm
-        WHERE v.v_ts + INTERVAL 6 HOUR < wm.w
-          AND NOT EXISTS (
-              SELECT 1 FROM c WHERE c.user_id = v.user_id
-               AND c.c_ts > v.v_ts AND c.c_ts <= v.v_ts + INTERVAL 6 HOUR
-          )
-    )
-    SELECT * FROM m UNION ALL SELECT * FROM um
-    """,
-)
-def q_stream_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT OUTER variant of stream_stream_join: same streams, same
-    state machine, plus null-click emission for views whose match
-    window the watermark has provably closed (see the oracle note —
-    tail views stay withheld, which batch replay must model)."""
-    return _ssj_run(spark, sf_dir, how="left_outer")
 
 
 _STREAM_INCR_ORACLE: str

@@ -1,5 +1,5 @@
-"""Classic analytic queries (TPC-H Q1/Q3 shapes) + cell versioning +
-chunk dedup — oracle-checked."""
+"""Classic analytic queries (TPC-H shapes) + cell versioning + chunk
+dedup — oracle-checked."""
 
 from __future__ import annotations
 
@@ -9,97 +9,6 @@ from pyspark.sql import functions as F
 from ..operators import versions as VER
 from .queries import register, register_extra, t
 from .queries_ext import _DUP_DOCS_SQL, _dup_docs
-
-
-@register_extra(
-    # retired to the pytest tier: every op here (filter/agg/sort/decimal
-    # money math) is gated by cell_build/meta_enrich/rollup_revenue
-    "q1_pricing_summary",
-    oracle="""
-    SELECT l_returnflag, l_linestatus,
-           CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-               AS sum_base_price,
-           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-               AS sum_disc_price,
-           CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l_discount AS DECIMAL(18,2)))
-                    * (1 + CAST(l_tax AS DECIMAL(18,2)))) AS DOUBLE)
-               AS sum_charge,
-           round(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-                 / count(*), 6) AS avg_qty,
-           CAST(count(*) AS BIGINT) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '2001-09-02'
-    GROUP BY 1, 2
-    """,
-)
-def q_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem")
-    qty = F.col("l_quantity").cast("decimal(18,2)")
-    price = F.col("l_extendedprice").cast("decimal(18,2)")
-    disc = F.col("l_discount").cast("decimal(18,2)")
-    tax = F.col("l_tax").cast("decimal(18,2)")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("2001-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(qty).cast("double").alias("sum_qty"),
-            F.sum(price).cast("double").alias("sum_base_price"),
-            F.sum(price * (F.lit(1) - disc)).cast("double").alias("sum_disc_price"),
-            F.sum(price * (F.lit(1) - disc) * (F.lit(1) + tax))
-            .cast("double")
-            .alias("sum_charge"),
-            F.round(
-                F.sum(qty).cast("double") / F.count("*"), 6
-            ).alias("avg_qty"),
-            F.count("*").cast("bigint").alias("count_order"),
-        )
-    )
-
-
-@register_extra(
-    # retired to the pytest tier: the join+agg+TOP-n shape is gated by
-    # meta_enrich + topk_orders
-    "q3_shipping_priority",
-    oracle="""
-    SELECT l.l_orderkey,
-           CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                    * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-               AS revenue,
-           o.o_orderdate, o.o_orderpriority
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE c.c_mktsegment = 'BUILDING'
-      AND o.o_orderdate < TIMESTAMP '1998-01-01'
-      AND l.l_shipdate > TIMESTAMP '1998-01-01'
-    GROUP BY 1, 3, 4
-    ORDER BY revenue DESC, l_orderkey
-    LIMIT 10
-    """,
-)
-def q_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
-    )
-    li = t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp")
-    )
-    rev = F.col("l_extendedprice").cast("decimal(18,2)") * (
-        F.lit(1) - F.col("l_discount").cast("decimal(18,2)")
-    )
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.sum(rev).cast("double").alias("revenue"))
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-        .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
-        .limit(10)
-    )
 
 
 @register(
@@ -130,9 +39,6 @@ def q_cell_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    # rotated OUT of the driver gate in round 10 for q9_product_profit:
-    # fixed-boundary chunk dedup is coverage-subsumed by the gated
-    # substring_dedup (the exact, boundary-free superset)
     "chunk_dedup",
     oracle=f"""
     WITH corpus AS ({_DUP_DOCS_SQL}),
@@ -600,51 +506,6 @@ def q_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    "q12_priority_lateness",
-    oracle="""
-    SELECT l.l_returnflag,
-           CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                         THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-           CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                         THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    WHERE l.l_shipdate >= o.o_orderdate + INTERVAL 60 DAY
-      AND l.l_shipdate >= TIMESTAMP '1997-01-01'
-      AND l.l_shipdate <  TIMESTAMP '1998-01-01'
-    GROUP BY 1
-    ORDER BY 1
-    """,
-)
-def q_q12_priority_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape: two-way conditional counts over a fact-fact
-    join (the testdata has no l_shipmode/commitdate, so the buckets
-    are returnflag x lateness=ship>=order+60d).  The CASE sums fold
-    into ONE aggregate pass — never two scans union'd; the lateness
-    residual rides the l_orderkey equi join, which co-partitions with
-    the rest of the workload at scale."""
-    li = t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    orders = t(spark, sf_dir, "orders")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(
-            orders,
-            (li.l_orderkey == orders.o_orderkey)
-            & (li.l_shipdate >= orders.o_orderdate + F.expr("INTERVAL 60 DAYS")),
-        )
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).cast("bigint").alias("high_line_count"),
-            F.sum(F.when(high, 0).otherwise(1)).cast("bigint").alias("low_line_count"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-@register_extra(
     "q14_promo_effect",
     oracle="""
     SELECT round(100.0 * CAST(sum(CASE WHEN p.p_type = 'PROMO'
@@ -980,8 +841,7 @@ def q_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    # rotated INTO the driver gate in round 10 (never gated before): the
-    # heaviest TPC-H planner shape (6-table join + per-part reorder)
+    # the heaviest TPC-H planner shape (6-table join + per-part reorder)
     "q9_product_profit",
     oracle="""
     SELECT n.n_name AS nation, CAST(year(o.o_orderdate) AS INT) AS o_year,

@@ -113,7 +113,7 @@ def compact_signature_store(
     ``hashes/`` and ``sigs/``; after k batches the store is O(k x
     tasks) files and each classification pays the listing + small-file
     open cost.  Compaction folds replay duplicates (a recovered batch
-    re-appends identical rows — sanctioned by the exactly-once note on
+    re-appends identical rows — see the at-least-once note on
     stream_incremental_dedup) and rewrites each table sorted by id into
     a bounded file count.  MUST run between streaming runs (the store
     version a running job classifies against is the directory listing).
@@ -260,10 +260,10 @@ def stream_incremental_dedup(
       4. the batch's OWN hashes and signatures append to the store, so
          later batches — not this one — see them.
 
-    Exactly-once on the verdict log comes from the checkpoint +
-    Parquet's atomic task commits, same contract as stream_to_cells; a
-    replayed batch re-appends its signatures, which is harmless to
-    verdicts (duplicate store rows can only re-flag true duplicates).
+    Appends are at least once, as in stream_to_cells: a replayed batch
+    appends its verdict rows again (ROADMAP direction 1) and re-appends
+    its signatures, which is harmless to verdicts (duplicate store rows
+    can only re-flag true duplicates).
     The store frames are read fresh from disk each batch (no caching) —
     the listing IS the store version the batch classifies against."""
     hashes_dir = os.path.join(store_dir, "hashes")
@@ -328,10 +328,11 @@ def stream_ivf_ingest(
     identity the ann_ivf_streamed gate pins.  (Re-training the codebook
     is a separate, deliberate snapshot operation: a changed codebook
     invalidates every list assignment, exactly like re-sharding a
-    table.)  Exactly-once from the checkpoint + Parquet's atomic task
-    commits; a replayed batch re-appends rows whose (corpus_id, list)
-    pairs are identical, so dedup-on-read (max_by corpus_id) is the
-    idempotency escape hatch a deployment adds if it needs it."""
+    table.)  Appends are at least once, as in stream_to_cells: a
+    replayed batch appends its rows again (ROADMAP direction 1); their
+    (corpus_id, list) pairs are identical, so dedup-on-read (max_by
+    corpus_id) is the idempotency escape hatch a deployment adds if it
+    needs it."""
     from ..operators.similarity import ivf_index
 
     def process(batch: DataFrame, batch_id: int) -> None:
@@ -367,9 +368,9 @@ def stream_trigram_ingest(
     rebuild — and stays EXACT even if an at-least-once replay
     re-appends a batch (postings duplicates collapse in the
     distinct-count; doubled partial dfs can only re-rank the rarest-k
-    selection, which is pure pruning).  Exactly-once from the
-    checkpoint + Parquet's atomic task commits is the normal regime;
-    the gate pins streamed == batch-rebuilt == contains-truth."""
+    selection, which is pure pruning).  Appends are at least once, as
+    in stream_to_cells (ROADMAP direction 1); the gate pins streamed ==
+    batch-rebuilt == contains-truth."""
     from ..operators.retrieval import _char_trigrams, _norm_docs_text
 
     def process(batch: DataFrame, batch_id: int) -> None:

@@ -39,8 +39,10 @@ def stream_to_cells(
     salt, in the store's sorted, page-indexed layout.  The write-aligned
     build (to_cells_write_aligned) distributes by salt BEFORE
     aggregating, so the whole batch runs one exchange and lands one file
-    per salt per micro-batch with no layout reshuffle.  Exactly-once
-    comes from the checkpoint + Parquet's atomic task commits."""
+    per salt per micro-batch with no layout reshuffle.  Appends are at
+    least once, not exactly once: a batch that ran but whose commit-log
+    entry was not written runs again on restart and appends its cells a
+    second time under the same ``ingest_batch`` (ROADMAP direction 1)."""
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         cells = to_cells_write_aligned(batch, key_cols, F.col(col_name), value_cols)
@@ -125,12 +127,11 @@ def stream_domain_ingest(
     and mixture stages consume that rollup without ever re-scanning
     ingested text.
 
-    An at-least-once replay re-appends a batch's partials, which CAN
-    double-count volume — same contract as stream_trigram_ingest's
-    gram_df note: exactly-once from the checkpoint + parquet atomic
-    task commits is the normal regime, and the consumer that needs
-    replay-proof volume dedups on (ingest_batch, domain) first (the
-    columns are carried for exactly that)."""
+    Appends are at least once, as in stream_to_cells: a replayed batch
+    appends its partials again and double-counts volume (ROADMAP
+    direction 1).  A consumer that needs replay-proof volume dedups on
+    (ingest_batch, domain) first (the columns are carried for exactly
+    that)."""
     from pyspark.sql import functions as F
 
     from ..operators import web as W
@@ -188,10 +189,9 @@ def stream_quality_ingest(
     live keep-rate dashboard that never re-scans ingested text.
     ``rule_kwargs`` pass through to the battery (threshold overrides).
 
-    Same at-least-once caveat as stream_domain_ingest: a replayed batch
-    re-appends its partials; the checkpoint + parquet atomic commits
-    give exactly-once in the normal regime, and a replay-proof consumer
-    dedups on (ingest_batch, keep, n_stop_hits) first."""
+    Same at-least-once appends as stream_domain_ingest: a replayed batch
+    appends its partials again (ROADMAP direction 1), so a replay-proof
+    consumer dedups on (ingest_batch, keep, n_stop_hits) first."""
     from pyspark.sql import functions as F
 
     from ..operators import text as T

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -655,6 +657,12 @@ def test_topk_drops_degenerate_cosine_in_both_phases(spark):
     assert 99 not in ids
     assert ids == [1, 2]
     assert [r.rank for r in out] == [1, 2]
+    # the exact top-k is the truth the ANN recall checks compare against:
+    # pin its cosine values (6 places) to hand-computed ones
+    assert [r.cos for r in out] == [
+        round(0.9 / math.sqrt(0.82), 6),
+        round(0.8 / math.sqrt(0.68), 6),
+    ]
 
 
 def test_semantic_dedup_cover_chain_components(spark):

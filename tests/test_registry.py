@@ -9,15 +9,19 @@ from __future__ import annotations
 import hashlib
 import inspect
 import math
+import os
 import time
 
 from tests.conftest import SF_SMOKE
+
+# the checkout this test lives in, so a second checkout tests its own registry
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_registry_invariants():
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as E
 
     queries = E.queries()
@@ -37,8 +41,8 @@ def test_registry_invariants():
     # every gated query carries an oracle: even the approximate ann_ivf
     # is hash-checked via its self-checking recall formulation
     assert missing_oracles == set()
-    # every extra-tier query is oracle-checked too: even the HLL-based
-    # approx_distinct gates a deterministic error-bound verdict.  The
+    # every extra-tier query is oracle-checked too: even the count-min
+    # heavy_hitters_cms gates a deterministic error-bound verdict.  The
     # ONLY sanctioned rows-only entries are the iterative-argmax BPE
     # pair (differential verification in tests/test_bpe.py against an
     # independent reference implementation) and compression_ratio
@@ -116,11 +120,11 @@ def _frame_hash(cols, rows) -> str:
 def test_extra_tier_differential(spark, duck):
     """Retired-from-the-driver-gate queries stay CORRECT: identical
     row-count + schema + order-insensitive value-hash check against
-    their DuckDB oracles (rows-only for approx_distinct, whose HLL is
-    engine-specific by design)."""
+    their DuckDB oracles (rows-only for the three entries without one,
+    see test_registry_invariants)."""
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO)
     import __spark_entry__ as E
 
     extras, oracles = E.extra_queries(), E.extra_oracle_sql()

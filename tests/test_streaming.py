@@ -238,7 +238,8 @@ def test_bench_contract_importable():
     import os
 
     spec = importlib.util.spec_from_file_location(
-        "bench_contract_check", os.path.join("/root/repo", "bench.py")
+        "bench_contract_check",
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bench.py"),
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

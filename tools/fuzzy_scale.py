@@ -1,6 +1,6 @@
 """Deletion-neighborhood fuzzy join (operators/fuzzy.py) vs brute-force
 cross join: the O(N·L) vs O(N²) crossover measurement backing the
-fuzzy_vocab_pairs gate's scale claim.
+fuzzy pair join's scale claim (vocab_canonicalize).
 
 Synthetic vocabulary: N distinct pseudo-random 8-hex-char terms
 (sha2 of the id — deterministic, uncorrelated with id order), plus a

@@ -14,10 +14,13 @@ plan regression cannot silently land in PLANS.md.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, so a second checkout audits its own plans
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -230,20 +233,6 @@ def main() -> None:
 
     qs["semantic_dedup"] = _semantic_dedup_lazy
 
-    def _ngram_lm_lazy(s, d):
-        # lazy twin: the gated variant localCheckpoints its three
-        # reuse points (base/pairs/unigrams), which would truncate the
-        # audited plan at ExistingRDDs and hide the tokenize +
-        # pair-explode + count-aggregate exchanges
-        from applications_analytics_midas_hbase_metrics_spark.operators import (
-            text as T,
-        )
-
-        docs = s.read.parquet(f"{d}/documents.parquet")
-        return T.ngram_lm_score(docs, materialize=False)
-
-    qs["ngram_lm_score"] = _ngram_lm_lazy
-
     def _bm25_topk_lazy(s, d):
         # lazy twin: the gated variant localCheckpoints the tf frame
         # (it feeds the dft derivation AND the score join — round-15
@@ -283,17 +272,6 @@ def main() -> None:
         return T.winnow_overlap_pairs(docs, materialize=False)
 
     qs["winnow_overlap_pairs"] = _winnow_pairs_lazy
-
-    def _winnow_spans_lazy(s, d):
-        # lazy twin of the positional (span-extent) variant
-        from applications_analytics_midas_hbase_metrics_spark.operators import (
-            text as T,
-        )
-
-        docs = s.read.parquet(f"{d}/documents.parquet")
-        return T.winnow_overlap_spans(docs, materialize=False)
-
-    qs["winnow_overlap_spans"] = _winnow_spans_lazy
 
     def _dedup_incremental_lazy(s, d):
         # lazy twin: the gated variant's lsh_pairs_between eagerly
@@ -536,9 +514,7 @@ def main() -> None:
         "ann_ivf_pq_search",
         "interval_join_events",
         "text_hash_embed",
-        "ngram_lm_score",
         "winnow_overlap_pairs",
-        "winnow_overlap_spans",
         "cell_build",
         "cell_prefix_scan",
         "cell_lookup",
@@ -549,20 +525,15 @@ def main() -> None:
         "dedup_ngram_blocked",
         "mupr_scan",
         "simhash_pairs",
-        "ann_topk",
         "ann_ivf",
         "window_session",
         "asof_join",
         "skew_salted_agg",
-        "sample_per_source",
         "store_roundtrip",
         "sequence_packing",
-        "curation_pipeline",
-        "decontaminate",
         "semantic_dedup",
         "dedup_incremental",
         "line_dedup",
-        "fuzzy_vocab_pairs",
         "triangle_count",
         "gapfill_hourly",
         "event_debounce",
@@ -576,7 +547,6 @@ def main() -> None:
         "q22_dormant_balances",
         "q4_order_priority",
         "q6_forecast_revenue",
-        "q12_priority_lateness",
         "q14_promo_effect",
         "q2_min_cost_supplier",
         "q15_top_supplier",
@@ -588,28 +558,21 @@ def main() -> None:
         "q20_promo_suppliers",
         "q21_lone_returner",
         "unpivot_metrics",
-        "value_histogram",
         "pmi_collocations",
         "perplexity_buckets",
         "trigram_search",
         "trigram_indexed_search",
         "ewma_user_value",
-        "corr_metrics",
         "pca_top_direction",
         "abtt_corrected",
         "grouping_sets_events",
-        "top_session_paths",
-        "range_window_user",
         "substring_dedup",
         "substring_dedup_incremental",
-        "html_extract",
         "curation_pipeline_web",
         "curation_pipeline_full",
-        "domain_extract",
         "domain_cap",
         "domain_stats",
         "domain_mixture",
-        "domain_quality",
         "domain_blocklist",
         "url_canonicalize",
         "url_dedup",
@@ -643,8 +606,7 @@ def main() -> None:
         "count (shuffle boundaries).",
         "",
         "dedup_minhash / dedup_ngram_blocked / simhash_pairs / semantic_dedup",
-        "/ ngram_lm_score / winnow_overlap_pairs / winnow_overlap_spans /",
-        "dedup_incremental are audited via",
+        "/ winnow_overlap_pairs / dedup_incremental are audited via",
         "LAZY twins (materialize=False) so the full DAG is inspectable; the",
         "gated variants eagerly localCheckpoint mid-pipeline, which would",
         "truncate the audited plan to an ExistingRDD subtree. Queries built",
@@ -706,7 +668,7 @@ def main() -> None:
         if failures:
             sys.exit(f"PLAN CHECK FAILURES: {failures}")
         return
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write("\n".join(lines))
     print("wrote PLANS.md")
     if failures:
