@@ -68,7 +68,7 @@ def fuzzy_pairs(
     position 1..len+1.  The key count roughly doubles (2L+1 per term
     vs L+1), but a hot variant's quadratic bucket splits into
     per-position buckets whose candidates are mostly true pairs —
-    measured under injected short-term skew in tools/fuzzy_scale.py.
+    measured under injected short-term skew by tools/scalecheck.py fuzzy.
     (An earlier docstring suggested banding on length(term) div 2;
     that is a NO-OP for this blocking — every term sharing variant v
     already has length len(v) or len(v)+1, and those two groups must

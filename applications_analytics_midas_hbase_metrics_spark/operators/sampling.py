@@ -84,7 +84,7 @@ _MIX_DOMAIN = 2**31
 #: rank^2-sampled corpus keeps exactly the LOW-hash documents, and
 #: sharding by the same hash would pile them into the low shards (a
 #: measured 24x shard skew before this constant existed; see
-#: tools/qsnap_scale.py / SCALE.md round 9).
+#: tools/scalecheck.py qsnap / SCALE.md round 9).
 _SHARD_PRIME = 2654435761
 
 
@@ -359,7 +359,7 @@ def _two_phase_rank(
     bucket expression's weak monotonicity in the sort order makes
     offset + local rank equal the single-window global rank
     bit-for-bit — same oracle, flat wall under a 90%-hot group
-    (tools/shard_rank_scale.py).
+    (tools/scalecheck.py shard_rank).
 
     NULL GROUP VALUES are preserved as their own group, matching the
     window form this replaces: the offsets come back through a
@@ -587,7 +587,7 @@ def shuffle_shards(
     decision hash: a corpus that reached this operator through
     mixture/rank sampling consists exactly of low-``_MIX_PRIME``-hash
     ids, so sharding by that same hash measurably piles survivors into
-    the low shards (24x skew, tools/qsnap_scale.py).  ``pos``
+    the low shards (24x skew, tools/scalecheck.py qsnap).  ``pos``
     numbers rows WITHIN a shard by (hash, id).
 
     Scale shape (round 13): ``pos`` is a :func:`_two_phase_rank` over

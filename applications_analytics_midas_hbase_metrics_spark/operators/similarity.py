@@ -879,7 +879,7 @@ def replicate_embeddings(
     offsets ids by 1,000,000·i and nudges the first vector component by
     ``nudge``·i, so replicas are near- but not exact-duplicates (no
     degenerate cosine ties).  Dimension-agnostic (slices by the array's
-    own size).  Shared by tools/ivf_scale.py and the plan-audit C=256
+    own size).  Shared by tools/scalecheck.py ivf and the plan-audit C=256
     twin so the scaling evidence and the audited plan can never
     desynchronize."""
     corpus = emb

@@ -1357,7 +1357,7 @@ def exact_substring_spans(
     re-counts ONLY those candidates by exact shingle string and
     semi-joins again.  The verify kills every collision and the result
     is bit-identical to the one-phase exact path (pinned in tests,
-    measured in tools/substr_scale.py).
+    measured by tools/scalecheck.py substr).
 
     Round 15 — the shingle STRING never shuffles corpus-wide in this
     mode: phase 1's position rows carry only (id, start, end, _hh) —

@@ -234,7 +234,7 @@ def q_corpus_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def corpus_snapshot_frame(docs) -> DataFrame:
     """The corpus_snapshot chain over an arbitrary (doc_id, text)
-    corpus — split out so tools/snapshot_scale.py can time the SAME
+    corpus — split out so tools/scalecheck.py snapshot can time the SAME
     composed pipeline on replicated corpora."""
     qf = T.quality_features(docs)
     sel = qf.filter(
@@ -1277,7 +1277,7 @@ def q_quality_sharded_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 def quality_sharded_snapshot_frame(docs, model) -> DataFrame:
     """The composed chain over an arbitrary labeled (doc_id, text,
     source, label) corpus and a trained model — split out so
-    tools/qsnap_scale.py times the SAME pipeline on replicated
+    tools/scalecheck.py qsnap times the SAME pipeline on replicated
     corpora."""
     scored = CL.nb_quality_score(docs, model)
     enriched = scored.join(

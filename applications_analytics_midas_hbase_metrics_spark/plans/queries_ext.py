@@ -495,7 +495,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # returns exactly the inline-assignment result — same (query,
     # corpus, rank) triples and cosines to 6 decimals — so the
     # persisted-artifact path (the production shape measured in
-    # tools/ivf_scale.py) cannot silently diverge from the gated one.
+    # tools/scalecheck.py ivf) cannot silently diverge from the gated one.
     oracle="""
     SELECT vec_id AS query_id, TRUE AS identical_ok
     FROM embeddings WHERE vec_id < 10

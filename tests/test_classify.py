@@ -175,7 +175,7 @@ def test_two_phase_rank_windows_partition_bounded(spark):
     in one task — every full-row row_number window in their executed
     plans partitions by the deterministic range bucket (_tp_b), so
     sorts are bucket-local and a mega-group spans many buckets
-    (flat-wall harness: tools/shard_rank_scale.py).  Round 14 also
+    (flat-wall harness: tools/scalecheck.py shard_rank).  Round 14 also
     pins the fault-tolerance fix: no lineage-truncating checkpoint
     scan (ExistingRDD / Scan ExistingRDD) may appear in the plan —
     the determinism guard is the pure-expression bucket, not a

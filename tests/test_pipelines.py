@@ -196,12 +196,9 @@ def test_curation_pipeline_full_footprint_disk_mode(spark, monkeypatch):
 
 def test_curation_pipeline_full_manifest_anti_join_shape(spark):
     """The drop-accounting branches must stay LEFT ANTI joins of
-    consecutive pinned frames (never a full-materialize-and-subtract):
-    pinned on the FULL executed-plan string because tools/plan_audit.py
-    slices its audited plan at the first '== Initial Plan ==' marker,
-    and the round-15 FootprintPin's disk persist at the `mixed` site
-    nests an AQE render early enough to push every anti join beyond
-    the audited slice (the dsir_weights caveat there)."""
+    consecutive pinned frames (never a full-materialize-and-subtract),
+    on the full executed-plan string at smoke SF (tools/plan_audit.py
+    checks the same fragment at sf0.01)."""
     from applications_analytics_midas_hbase_metrics_spark.plans import (
         queries_curation as QC,
     )

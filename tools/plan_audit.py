@@ -120,19 +120,11 @@ CHECKS = {
     # the 10-stage manifest pipeline localCheckpoints each stage (each
     # is consumed by the next stage AND a manifest anti-join), so the
     # audited final plan is the manifest stitch over ExistingRDDs: its
-    # stage-attribution anti joins must ride broadcast, never
-    # sort-merge.  The dedup cores' SEMI-join shapes are pinned via
-    # their own gated sections (substring_dedup, domain_cap,
+    # stage-attribution branches must stay anti joins riding broadcast,
+    # never sort-merge.  The dedup cores' SEMI-join shapes are pinned
+    # via their own gated sections (substring_dedup, domain_cap,
     # curation_pipeline_web).
-    # round 15: the LeftAnti fragment moved to
-    # tests/test_pipelines.py::
-    # test_curation_pipeline_full_manifest_anti_join_shape (full
-    # executed-plan string) — a disk persist at the `mixed` site
-    # nests an AQE render whose
-    # '== Initial Plan ==' marker lands before the manifest's anti
-    # joins, so they sit beyond this audit's sliced plan (the
-    # dsir_weights caveat below).
-    "curation_pipeline_full": ["BroadcastHashJoin"],
+    "curation_pipeline_full": ["BroadcastHashJoin", "LeftAnti"],
     # the dataset-card report must be ONE Expand over one scan, never
     # a 4-way union of aggregations
     "corpus_card": ["Expand"],
@@ -145,14 +137,9 @@ CHECKS = {
     # tests/test_pipelines.py)
     "gopher_quality_pipeline": ["ArrowEvalPython"],
     # the <=buckets-row log-ratio model must ride BROADCAST onto the
-    # raw gram stream (the DSIR dot product's only join).  The
-    # selection's TakeOrderedAndProject shape is pinned in
-    # tests/test_importance.py instead: the registry variant pins its
-    # weight frame, and this audit's plan-string truncation at the
-    # FIRST '== Initial Plan ==' marker cuts the outer tree off at the
-    # cached subtree's nested AQE sections — the fragment is in the
-    # plan but beyond the audited slice.
-    "dsir_weights": ["BroadcastHashJoin"],
+    # raw gram stream (the DSIR dot product's only join), and the
+    # selection must stay a bounded TakeOrderedAndProject
+    "dsir_weights": ["BroadcastHashJoin", "TakeOrderedAndProject"],
     # keep-first must be the min-key aggregation + equi join shape —
     # never a per-unit window (the skew-safe keep-first rule)
     "dedup_paragraphs_corpus": ["HashAggregate"],
@@ -169,11 +156,10 @@ CHECKS = {
     # bucket (_tp_b) — bucket-local sorts, no per-shard/per-stratum
     # funnel task, and no lineage-truncating checkpoint scan since the
     # bucket is a pure expression of the row (round-14 fault-tolerance
-    # fix).  quality_importance_sample's _tp_b fragment sits beyond
-    # this audit's first-'== Initial Plan ==' truncation (the
-    # dsir_weights caveat above); its window-boundedness is pinned in
-    # tests/test_classify.py + tools/shard_rank_scale.py instead.
+    # fix); tests/test_classify.py and tools/scalecheck.py shard_rank
+    # pin the same shape.
     "shuffle_shards": ["_tp_b"],
+    "quality_importance_sample": ["_tp_b"],
     "token_budget_mixture": ["_tp_b"],
     "perplexity_buckets": ["_tp_b"],
     # keep-first argmax must be the max-struct aggregation + equi join,
@@ -182,6 +168,23 @@ CHECKS = {
     # are partition-local and spillable)
     "dedup_best_quality": ["partial_max(struct"],
 }
+
+
+def _final_plans(plan: str) -> str:
+    """The executed plan without its '== Initial Plan ==' subtrees: the
+    outer final plan plus the final plan of every cached subplan's
+    nested AQE render (each nested render carries its own marker)."""
+    kept, skip_col = [], None
+    for line in plan.splitlines():
+        col = len(line) - len(line.lstrip(" :|"))
+        if skip_col is not None and col > skip_col:
+            continue
+        skip_col = None
+        if "== Initial Plan ==" in line:
+            skip_col = col
+        else:
+            kept.append(line)
+    return "\n".join(kept)
 
 
 def _fragment_in(fragment: str, plan: str) -> bool:
@@ -290,7 +293,7 @@ def main() -> None:
     def _ivf_c256_search(s, d):
         # production-size codebook over a x16-replicated corpus: codebook
         # and inverted-list index build EAGERLY (they are the one-time
-        # persisted artifacts — tools/ivf_scale.py measures them), so the
+        # persisted artifacts — tools/scalecheck.py ivf measures them), so the
         # audited plan is the RECURRING per-query-batch search, whose
         # exchange count must not grow with C (codebook rides broadcast)
         from pyspark.sql import functions as F
@@ -642,7 +645,7 @@ def main() -> None:
         df = qs[name](spark, SF_DIR)
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
-        final = plan.split("== Initial Plan ==")[0]
+        final = _final_plans(plan)
         n_exch = len(re.findall(r"Exchange (hashpartitioning|rangepartitioning|SinglePartition|RoundRobin)", final))
         n_bcast = final.count("BroadcastHashJoin")
         n_smj = final.count("SortMergeJoin")
